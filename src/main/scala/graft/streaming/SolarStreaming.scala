@@ -349,26 +349,40 @@ object SolarStreaming {
         col("l_power"), col("r_power"))
   }
 
-  /** The ENTIRE reference topology as chained stateful streaming operators
-    * — no foreachBatch anywhere: module agg and panel agg (each watermarked)
-    * → stream-stream join #1 → windowed variance re-aggregation →
-    * stream-stream join #2 → z-filter. Every hop the reference built from
-    * repartition topics + RocksDB stores + suppression
-    * (`SolarConsumer.java:94-196`) is here a shuffle + state store with the
-    * watermark propagated through all five stateful operators (Spark's
-    * multiple-stateful-operator support); every window emits exactly once.
+  /** The ENTIRE reference topology inside the streaming engine — no
+    * foreachBatch anywhere — as two chained windowed aggregates:
     *
-    * State cost is ~3× [[startAnomalyQuery]]'s single-store design (the
-    * module aggregate is computed by two independent subplans and the join
-    * buffers both sides), which is why foreachBatch stays the recommended
-    * deployment — but this is the full in-engine twin for users porting
-    * the topology operator for operator.
+    *  1. the per-module aggregate (rows 5-8), computed once;
+    *  2. a window-on-window aggregate per (window, panel), the same
+    *     chaining [[panelAggStream]] uses, that computes the panel stats
+    *     and gathers the panel's module rows sorted by module.
+    *
+    * The reference's two windowed joins and variance re-aggregation
+    * (`SolarConsumer.java:142-173`) then become stateless columns: the
+    * squares sum folds over the gathered list (the sort fixes the
+    * summation order, so the result does not depend on shuffle order),
+    * and `inline` re-attaches the panel stats to every module row before
+    * the z-filter. The watermark propagates through both state stores
+    * (Spark's multiple-stateful-operator support) and every window emits
+    * exactly once.
+    *
+    * Aggregate 2 receives a window's module rows in the micro-batch that
+    * finalizes them and emits them in that same batch, so its state is
+    * empty between batches: the only long-lived state is the module
+    * aggregate, which is what the reference keeps too, and what
+    * [[startAnomalyQuery]]'s single-store design holds. [[streamStreamJoin]]
+    * and [[panelAggStream]] remain the join-for-join witnesses of the
+    * reference topology.
+    *
+    * A checkpoint written by the earlier 7-operator plan of this function
+    * (two stream-stream joins and five aggregates) cannot be resumed by
+    * this plan: the stateful operators and their state schemas differ.
     */
   def anomalyPipelineStream(normalized: DataFrame,
                             windowDuration: String = Solar.WindowDuration,
                             watermarkDelay: String = "30 seconds",
                             z: Double = Solar.Z): DataFrame = {
-    def moduleAggW = normalized
+    val moduleAggW = normalized
       .withWatermark("ts", watermarkDelay)
       .groupBy(window(col("ts"), windowDuration).as("w"),
         col("panel"), col("module"))
@@ -377,28 +391,22 @@ object SolarStreaming {
         sum(col("power")).as("m_sum_power"),
         graft.functions.AggFunctions.meanQ(col("power"), 1)
           .as("m_avg_power"))
-    val panelAggW = normalized
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDuration).as("w"),
-        col("panel"), col("module"))
-      .agg(sum(col("power")).as("ms"))
+    moduleAggW
       .groupBy(window(col("w"), windowDuration).as("w"), col("panel"))
       .agg(
         count(lit(1)).as("p_cnt"),
-        sum(col("ms")).as("p_sum_power"),
-        graft.functions.AggFunctions.meanQ(col("ms"), 1)
-          .as("p_avg_power"))
-    val j1 = moduleAggW.join(panelAggW, Seq("w", "panel"))
-    val panelFinalW = j1
-      .groupBy(window(col("w"), windowDuration).as("w"), col("panel"))
-      .agg(
-        count(lit(1)).as("p_cnt"),
-        max(col("p_sum_power")).as("p_sum_power"),
-        max(col("p_avg_power")).as("p_avg_power"),
-        sum(pow(col("m_sum_power") - col("p_avg_power"), 2)).as("squares_sum"))
+        sum(col("m_sum_power")).as("p_sum_power"),
+        graft.functions.AggFunctions.meanQ(col("m_sum_power"), 1)
+          .as("p_avg_power"),
+        array_sort(collect_list(struct(col("module"), col("m_cnt"),
+          col("m_sum_power"), col("m_avg_power")))).as("modules"))
+      .withColumn("squares_sum", aggregate(col("modules"), lit(0.0),
+        (acc, m) => acc + pow(m.getField("m_sum_power") - col("p_avg_power"), 2)))
       .withColumn("variance", col("squares_sum") / col("p_cnt"))
       .withColumn("deviance", round(sqrt(col("variance")), 1))
-    moduleAggW.join(panelFinalW, Seq("w", "panel"))
+      .select(col("w"), col("panel"), col("p_cnt"), col("p_sum_power"),
+        col("p_avg_power"), col("squares_sum"), col("variance"),
+        col("deviance"), inline(col("modules")))
       .filter(abs(col("m_sum_power") - col("p_avg_power")) > lit(z) * col("deviance"))
       .select(col("w").getField("start").cast("long").as("w_start"),
         col("panel"), col("module"),

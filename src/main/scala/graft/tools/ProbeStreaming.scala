@@ -9,8 +9,8 @@ import graft.streaming.SolarStreaming
 
 /** Streaming throughput probe (VERDICT r8 #3): every streaming operator
   * was spec-verified at toy scale but none had a measured rows/s or
-  * state-size figure. Drives the full 5-stateful-operator
-  * `anomalyPipelineStream` with 1M MemoryStream events on local[32]
+  * state-size figure. Drives `anomalyPipelineStream` with 1M
+  * MemoryStream events on local[32]
   * (RocksDB state store — the Engine default) and records:
   *  - end-to-end rows/s over the whole run,
   *  - per-micro-batch state rows (must PLATEAU, not grow, once the
@@ -23,7 +23,9 @@ import graft.streaming.SolarStreaming
   * batch behind.
   *
   * Micro-batch overhead measurements (VERDICT r11 #7; 1M events, state
-  * flat at 4,500 rows in every run, recorded 2026-08-14 on this VM):
+  * flat at 4,500 rows in every run, recorded 2026-08-14 on a 32-core
+  * host, when the pipeline still planned 5 aggregates and 2 stream-stream
+  * joins):
   * {{{
   * drive                 shuffle.partitions  rows/s   per-batch ms
   * 10 batches (feed+wait)       32            6,359    ~6,000
@@ -32,7 +34,7 @@ import graft.streaming.SolarStreaming
   * AvailableNow catch-up         8           29,435    1 micro-batch
   * }}}
   * Reading: the steady-state floor is dominated by per-batch fixed cost —
-  * 5 stateful operators x partitions x a RocksDB commit each — not
+  * stateful operators x partitions x a RocksDB commit each — not
   * per-row work. Dropping 32 -> 8 partitions cuts the floor 2.2x at this
   * key cardinality (1,000 keys never needed 32 state instances), and
   * backlog recovery under Trigger.AvailableNow, which drains the same
@@ -127,7 +129,7 @@ object ProbeStreaming {
       if (mode == "catchup") {
         // backlog recovery: all data is already waiting when the query
         // starts; AvailableNow drains it in as few micro-batches as the
-        // source offers, then terminates — per-batch overhead (5 stateful
+        // source offers, then terminates — per-batch overhead (stateful
         // ops x partitions x RocksDB commit) amortizes over the backlog
         for (b <- 0 until batches) input.addData(anomalyBatch(b): _*)
         val t0 = System.nanoTime()

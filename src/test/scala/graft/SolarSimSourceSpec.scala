@@ -285,7 +285,7 @@ class SolarSimSourceSpec extends SparkSpecBase {
 
   test("the anomaly pipeline runs end to end off the custom streaming source") {
     // no MemoryStream anywhere: custom DSv2 micro-batch source -> the
-    // full 5-stateful-operator pipeline -> memory sink, with enough
+    // full two-aggregate anomaly pipeline -> memory sink, with enough
     // event-time inventory (60 readings x 10s = 600s) for the watermark
     // to close windows and emit finalized anomalies
     val ckpt = java.nio.file.Files

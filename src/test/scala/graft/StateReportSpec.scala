@@ -14,8 +14,7 @@ import graft.streaming.{SolarStreaming, StateReport}
 class StateReportSpec extends SparkSpecBase {
   import spark.implicits._
 
-  test("stateReport surfaces all five stateful operators and pins flat " +
-    "state under the watermark") {
+  test("stateReport surfaces both stateful operators and pins flat state") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Timestamp, String, String, Double)]
     val df = input.toDF().toDF("ts", "panel", "module", "power")
@@ -38,13 +37,14 @@ class StateReportSpec extends SparkSpecBase {
       }
       val states = StateReport.operatorStates(query)
       assert(states.nonEmpty)
-      // the chain plans 7 stateful operator instances: the two
-      // stream-stream joins plus five stateStoreSave aggregates (each
-      // streaming aggregation's final save; SURVEY §2 rows 5-14)
+      // the pipeline plans 2 stateful operator instances: the module
+      // aggregate and the window-on-window panel aggregate chained onto
+      // it (each streaming aggregation's final save), and no
+      // stream-stream join
       val ops = states.map(s => (s.opIndex, s.operatorName)).distinct
-      assert(ops.size === 7, s"expected 7 stateful operators, got $ops")
-      assert(ops.count(_._2 == "symmetricHashJoin") === 2, s"$ops")
-      assert(ops.count(_._2 == "stateStoreSave") === 5, s"$ops")
+      assert(ops.size === 2, s"expected 2 stateful operators, got $ops")
+      assert(ops.count(_._2 == "symmetricHashJoin") === 0, s"$ops")
+      assert(ops.count(_._2 == "stateStoreSave") === 2, s"$ops")
       // every (batch, op) row is well-formed
       assert(states.forall(s => s.rowsTotal >= 0 && s.rowsUpdated >= 0))
       // FLAT STATE: for every operator the final batch's live rows are
@@ -52,7 +52,7 @@ class StateReportSpec extends SparkSpecBase {
       // tail plateaued (an unbounded-state bug shows here as last==max
       // strictly growing), and eviction actually happened somewhere
       val growth = StateReport.growthSummary(query)
-      assert(growth.size === 7)
+      assert(growth.size === 2)
       growth.foreach { g =>
         assert(g.lastRows <= g.maxRows, s"$g")
         assert(g.nBatches >= 6)

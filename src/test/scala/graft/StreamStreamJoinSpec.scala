@@ -37,6 +37,27 @@ class StreamStreamJoinSpec extends SparkSpecBase {
   private val cols = Seq("w_start", "panel", "module", "m_cnt", "m_sum_power",
     "m_avg_power", "p_cnt", "p_sum_power", "p_avg_power")
 
+  /** The 12 output columns of the anomaly pipeline, batch and stream. */
+  private val PipelineCols = cols ++ Seq("squares_sum", "variance", "deviance")
+
+  private def keyed(df: DataFrame): Map[(Long, String, String), Seq[Any]] =
+    df.select(PipelineCols.head, PipelineCols.tail: _*).collect().map { r =>
+      (r.getLong(0), r.getString(1), r.getString(2)) -> r.toSeq
+    }.toMap
+
+  /** Same keys, and every column equal; doubles within 1e-9 relative. */
+  private def assertSameRows(got: Map[(Long, String, String), Seq[Any]],
+                             want: Map[(Long, String, String), Seq[Any]]): Unit = {
+    assert(got.keySet === want.keySet)
+    for ((k, w) <- want; (name, (a, b)) <- PipelineCols.zip(got(k).zip(w)))
+      (a, b) match {
+        case (x: Double, y: Double) =>
+          assert(math.abs(x - y) <= 1e-9 * math.max(math.abs(x), math.abs(y)),
+            s"$k $name: $x vs $y")
+        case _ => assert(a === b, s"$k $name")
+      }
+  }
+
   test("stream-stream join matches the batch join on the same input") {
     // batch reference: moduleAgg ⋈ panelAgg through the batch stages
     val m = Solar.moduleAgg(data.toDF("ts", "event_type", "user_id", "value"))
@@ -63,33 +84,61 @@ class StreamStreamJoinSpec extends SparkSpecBase {
   }
 
   test("fully in-engine streaming pipeline matches the batch pipeline") {
-    // module-heavy fixture so the z-filter actually selects rows
-    val data = Seq(
+    // several readings per module per window; window [30 s, 60 s) is split
+    // across two micro-batches; the second batch carries rows out of
+    // event-time order, one of them for window [0 s, 30 s) that arrives
+    // after later rows but within the 30 s watermark delay; p3 has a
+    // single module (deviance 0, so never anomalous)
+    val first = Seq(
       (ts("2024-01-01 00:00:01"), "p1", "m1", 10.0),
+      (ts("2024-01-01 00:00:05"), "p1", "m1", 12.5),
       (ts("2024-01-01 00:00:02"), "p1", "m2", 10.0),
+      (ts("2024-01-01 00:00:20"), "p1", "m2", 11.0),
       (ts("2024-01-01 00:00:03"), "p1", "m3", 40.0),
+      (ts("2024-01-01 00:00:04"), "p1", "m3", 38.5),
       (ts("2024-01-01 00:00:04"), "p2", "m1", 5.0),
       (ts("2024-01-01 00:00:14"), "p2", "m2", 7.0),
+      (ts("2024-01-01 00:00:15"), "p2", "m2", 6.5),
+      (ts("2024-01-01 00:00:06"), "p3", "m1", 6.0),
+      (ts("2024-01-01 00:00:07"), "p3", "m1", 2.0),
       (ts("2024-01-01 00:00:35"), "p1", "m1", 3.0),
       (ts("2024-01-01 00:00:36"), "p1", "m2", 30.0))
-    val expected = Solar.pipeline(data.toDF("ts", "event_type", "user_id", "value"))
-      .select("w_start", "panel", "module", "m_sum_power", "deviance")
-      .as[(Long, String, String, Double, Double)].collect().toSet
-    assert(expected.nonEmpty)
+    val second = Seq(
+      (ts("2024-01-01 00:01:05"), "p1", "m1", 2.0),
+      (ts("2024-01-01 00:00:50"), "p2", "m1", 9.0),
+      (ts("2024-01-01 00:00:40"), "p1", "m1", 4.0),
+      (ts("2024-01-01 00:00:25"), "p1", "m2", 9.5), // late for [0 s, 30 s)
+      (ts("2024-01-01 00:00:45"), "p1", "m3", 1.0),
+      (ts("2024-01-01 00:01:06"), "p1", "m2", 8.0),
+      (ts("2024-01-01 00:00:52"), "p2", "m2", 2.0),
+      (ts("2024-01-01 00:00:31"), "p2", "m1", 0.5))
+    val events = (first ++ second).toDF("ts", "event_type", "user_id", "value")
+    val expected = keyed(Solar.pipeline(events))
+    assert(expected.keys.map(_._1).toSet === Set(1704067200L, 1704067230L),
+      s"fixture must anomalize both split and unsplit windows: ${expected.keys}")
+    // the single-module panel: deviance 0 and no anomaly
+    val p3 = Solar.stagesFrom(Solar.moduleAgg(events)).panelStats
+      .filter(org.apache.spark.sql.functions.col("panel") === "p3")
+      .select("p_cnt", "deviance").as[(Long, Double)].collect()
+    assert(p3.toSeq === Seq((1L, 0.0)))
+    assert(!expected.keys.exists(_._2 == "p3"))
 
     val (input, df) = newInput()
     val name = s"full_${System.nanoTime()}"
     val query = SolarStreaming.anomalyPipelineStream(df)
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
-      input.addData(data: _*)
+      input.addData(first: _*)
       query.processAllAvailable()
-      input.addData((ts("2024-01-01 00:10:00"), "p9", "m9", 1.0)) // close windows
+      input.addData(second: _*)
+      query.processAllAvailable()
+      // close windows [0 s, 30 s) through [60 s, 90 s)
+      input.addData((ts("2024-01-01 00:10:00"), "p9", "m9", 1.0))
       query.processAllAvailable()
       val got = spark.table(name)
-        .select("w_start", "panel", "module", "m_sum_power", "deviance")
-        .as[(Long, String, String, Double, Double)].collect().toSet
-      assert(got === expected)
+      assert(got.columns.toSeq === PipelineCols)
+      assert(got.count() === expected.size.toLong, "a row emitted twice")
+      assertSameRows(keyed(got), expected)
     } finally query.stop()
   }
 
