@@ -94,7 +94,8 @@ case class HistogramAgg(
   *  - `round(sum(round(x·1e6).cast(decimal(38,0))).cast(double)/…, d)`
   *    (r17): declarative, codegen'd, but pays per-row Decimal128
   *    construction + decimal adds — 14× a plain double avg on a
-  *    scan-bound 100 M-row aggregate (ProbeRound21).
+  *    scan-bound 100 M-row aggregate (SURVEY.md row "Exactness priced
+  *    at scale, then bought back").
   *  - `TypedImperativeAggregate` int128 sum + decimal(38,0)
   *    IntegralDivide final projection (r18): per-row cost gone, but a
   *    typed-imperative agg forces the WHOLE aggregation onto
@@ -108,9 +109,9 @@ case class HistogramAgg(
   *    (LEGACY-mode) long adds + bitwise ops; the per-row quantization
   *    ([[MicrosMath.micros]]: one multiply, the domain guard, one
   *    `Math.round`) and the per-group rounding are `StaticInvoke`s —
-  *    direct static calls under codegen. ProbeRound22: 1.28× the
-  *    inexact `round(avg(x),4)` at 100 M rows; q08 back to its r17
-  *    time.
+  *    direct static calls under codegen. Measured at 100 M rows:
+  *    1.28× the inexact `round(avg(x),4)`; q08 back to its r17 time
+  *    (SURVEY.md, the r19 q08 adjudication).
   *
   * Semantics match the r17 declarative spelling on its documented
   * domain (finite inputs, |x| < 9.2e12 so x·10⁶ fits a long): the
@@ -772,7 +773,7 @@ object AggFunctions {
     // count in one fixed-width buffer, the exact HALF_UP rounding once
     // per group in long arithmetic — identical value to the decimal
     // IntegralDivide spelling on the documented domain, codegen-friendly
-    // where it was not (the r19 q08 adjudication; ProbeRound22)
+    // where it was not (the r19 q08 adjudication in SURVEY.md)
     Bridge.column(
       MicrosMeanQAgg(Bridge.expression(c.cast("double")), decimals)
         .toAggregateExpression())

@@ -394,10 +394,11 @@ private[functions] trait VectorMatrixExpression { self: Expression =>
   * loop bodies in the stage's consume method; at 64 bits the method blows
   * past HotSpot's ~8 KB bytecode JIT ceiling and the whole corpus-side
   * stage runs at interpreter speed (~3.6 µs/row/dot vs 0.08 µs — measured
-  * by ProbeVecDot at 1M×64, a ~45× stage slowdown the sf0.1 bench never
-  * shows). One expression = one small nested loop over a primitive
-  * `double[][]` reference object = one JIT-compiled method, regardless of
-  * signature width.
+  * at 1M×64 in round 9, a ~45× stage slowdown the sf0.1 bench never
+  * shows; SURVEY.md "Round 9 probe numbers", the ANN scale-bugs row).
+  * One expression = one small nested loop over a primitive `double[][]`
+  * reference object = one JIT-compiled method, regardless of signature
+  * width.
   */
 case class SrpBandValues(child: Expression, planes: Seq[Seq[Double]], bands: Int)
     extends UnaryExpression with VectorMatrixExpression {

@@ -601,12 +601,12 @@ object Curation {
     * the naive stage composition scans it five times. The dropped-id
     * relation is eagerly checkpointed so the LSH index and CC label
     * state release BEFORE the budget/packing stages run — peak cached
-    * footprint is one stage's, not the whole DAG's (the ProbeRound11
-    * `dag` lifecycle, 1 M docs with zero cached RDDs left). The shared
-    * projection and packing base fall to the session cache clear
-    * Bench/Verify issue; `dropIds` outlives the call by design (the
-    * result plan reads it) — callers release it via the stage handle, as
-    * SparkEntry's q119 does for the previous invocation on re-run.
+    * footprint is one stage's, not the whole DAG's (SURVEY.md's
+    * "Round-11 composed-DAG probe": 1 M docs with zero cached RDDs
+    * left). The shared projection and packing base fall to the session
+    * cache clear Bench/Verify issue; `dropIds` outlives the call by
+    * design (the result plan reads it) — callers release it via the
+    * stage handle, as SparkEntry's q119 does for the previous invocation on re-run.
     */
   def curationDagStage(docs: DataFrame, ctxTokens: Int = 256): CurationDagStage = {
     // ONE kernel scan feeds the percentile histogram, the survivor

@@ -556,7 +556,8 @@ object Dedup {
     starClusters(pairs, StarPersistMinEdges)
 
   /** Edge-count gate for the per-round large-star persist (VERDICT r8 #4).
-    * ProbeRound9's A/B on the deep probe graph showed ReuseExchange
+    * The r9 A/B on the deep probe graph (SURVEY.md row "q52 persist A/B
+    * with shuffle-record totals") showed ReuseExchange
     * deduplicating the doubled large-star subtree (identical shuffle-write
     * record totals with and without the cache), so the persist is
     * insurance against plan divergence, not a recomputation fix — and at
@@ -639,11 +640,11 @@ object Dedup {
       // without a cache the large-star pipeline — including its distinct
       // shuffle — appears twice in the small-star plan and only
       // ReuseExchange keeps it from computing twice (ADVICE r7). The
-      // persist is GATED on input size (VERDICT r8 #4): ProbeRound9
-      // measured ReuseExchange actually deduping the doubled subtree at
-      // every scale (shuffle-write records identical with and without the
-      // cache), so the persist buys insurance against plan-divergence
-      // only; below the gate the cache churn costs more than it saves
+      // persist is GATED on input size (VERDICT r8 #4): the r9 A/B
+      // (SURVEY.md row "q52 persist A/B") measured ReuseExchange
+      // actually deduping the doubled subtree at every scale
+      // (shuffle-write records identical with and without the cache), so
+      // the persist buys insurance against plan-divergence only; below the gate the cache churn costs more than it saves
       // (the r8 q52 bench regression, 2.70→3.41 s at sf0.1). The cache,
       // when taken, is released as soon as the round's checkpoint
       // materializes.

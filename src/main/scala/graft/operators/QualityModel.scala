@@ -76,8 +76,10 @@ object QualityModel {
 
   /** The shipped model artifact: `train(documents @ sf0.01 restricted to
     * the TRAIN SPLIT — hashBucket(doc_id) >= 20`, labelHeuristic(),
-    * TrainIters, TrainLr)` rounded to 6 decimals (`tools/ProbeRound11
-    * weights` reproduces it). The split exclusion is the ADVICE r12 fix:
+    * TrainIters, TrainLr)` rounded to 6 decimals (QualityModelSpec
+    * "DefaultWeights re-derive from the sf0.01 train split" re-derives it
+    * and the split accuracies below). The split exclusion is the
+    * ADVICE r12 fix:
     * the r11 artifact trained on the FULL corpus, which made
     * [[evaluateSplits]]' `test` row a resubstitution metric at the
     * training SF; this artifact never saw the test/val buckets, so the

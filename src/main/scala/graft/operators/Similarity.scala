@@ -285,8 +285,8 @@ object Similarity {
     * k-big scale path the r13 semdedup probe called for: √k·(1+p) dots
     * per vector instead of k. Exact wherever the true cell's group is
     * probed; agreement vs the flat argmin is the measured quantity
-    * (probe: see `ProbeRound13 semdedup`). Same output shape as
-    * `model.cells`.
+    * (1 M vectors / k = 10,000: SURVEY.md's SemDeDup and two-level
+    * assignment rows). Same output shape as `model.cells`.
     */
   def assignCellsTwoLevel(embeddings: DataFrame, model: KmeansModel,
                           index: HierIndex, nProbeGroups: Int): DataFrame =
@@ -369,8 +369,9 @@ object Similarity {
     * granularity, so a viral cluster stored CONTIGUOUSLY (sorted or
     * clustered ingest — exactly how a near-dup burst lands when files
     * are written in crawl order) is unsplittable and the straggler
-    * survives (ProbeSkewIvf, measured: split fired, +1 task, straggler
-    * unchanged). `scatter` (default ON) closes that hole in-engine: the
+    * survives (measured at 10 M vectors: split fired, +1 task,
+    * straggler unchanged — SURVEY.md row "IVF viral-cell skew").
+    * `scatter` (default ON) closes that hole in-engine: the
     * corpus side takes one uniform hash(vec_id) exchange before the
     * cell-keyed join exchange, spreading every cell across all map
     * blocks so the skew split always has cut points. Cost is one extra
@@ -438,8 +439,9 @@ object Similarity {
     * so that every IVF cell's rows span ALL map blocks of the downstream
     * cell-keyed join exchange — the precondition for AQE's skew-join
     * split, which cuts a skewed reduce partition only at map-output
-    * boundaries (ProbeSkewIvf's contiguous-layout caveat, made engine
-    * behavior — VERDICT r16 #2). No-op when `on` is false, and skipped
+    * boundaries (the contiguous-layout caveat of SURVEY.md row "IVF
+    * viral-cell skew", made engine behavior — VERDICT r16 #2). No-op
+    * when `on` is false, and skipped
     * when [[alreadyScattered]] shows the input's lineage already ends in
     * a uniform shuffle — the caller's own exchange scatters for free, so
     * re-scattering would only add a redundant embedding-wide shuffle
@@ -1526,8 +1528,8 @@ object Similarity {
     * Expected candidates/query ≈ bands × n / 2^(bits/bands) for random
     * pairs, so bits/bands is a corpus-size parameter (the [[SrpBits]]
     * note); recall against brute-force truth is measured by
-    * [[recallAtK]] — ProbeRound9 records the shipped configs at 1M
-    * vectors.
+    * [[recallAtK]] — SURVEY.md's "Round 9 probe numbers" record the
+    * shipped configs at 1M vectors.
     */
   def srpTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
               bits: Int = SrpBits, bands: Int = SrpBands,

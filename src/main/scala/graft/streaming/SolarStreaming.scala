@@ -24,15 +24,17 @@ import graft.operators.Solar
   *    stream duplication at `SolarConsumer.java:136-138` is unnecessary —
   *    a DataFrame feeds any number of consumers.
   *
-  * Topology shape: the per-module windowed aggregate is the only stateful
-  * streaming operator; everything downstream (panel re-agg, variance,
-  * joins, z-filter) runs per micro-batch on *finalized* windows inside
-  * `foreachBatch`, reusing the batch [[Solar]] stages verbatim. This is
-  * correct because append mode emits all module aggregates of a window in
-  * the same micro-batch (finalization is watermark-driven), so each batch
-  * is self-contained per window — the same barrier the reference encodes
-  * with suppression. It also keeps checkpoint state minimal at scale: one
-  * state store keyed by (window, panel, module) instead of five.
+  * Topology shape: [[anomalyPipelineStream]] runs the whole topology in
+  * the streaming engine as two chained windowed aggregates. The
+  * per-module aggregate is the only long-lived state, keyed by (window,
+  * panel, module). The window-on-window panel aggregate after it sees a
+  * window's module rows in the micro-batch that finalizes them (append
+  * mode emits them all at once, as the watermark passes the window end)
+  * and emits in that batch, so its state is empty between batches — the
+  * same barrier the reference encodes with suppression. Variance, the
+  * joins back onto module rows and the z-filter are stateless columns
+  * after it. [[streamStreamJoin]] and [[panelAggStream]] are the
+  * join-for-join witnesses of the reference topology.
   */
 object SolarStreaming {
 
@@ -99,13 +101,14 @@ object SolarStreaming {
       .withColumn("is_corrupt",
         col("panel").isNull || col("module").isNull || col("power").isNull)
 
-  /** Stateful stage: watermarked per-module tumbling-window aggregate
-    * (rows 5-8). In append mode this emits each (window, panel, module)
-    * exactly once, after the watermark passes the window end.
+  /** The watermarked per-module tumbling-window aggregate (rows 5-8),
+    * keyed by the `w` window struct: `m_cnt`, `m_sum_power` and the exact
+    * quantized mean `m_avg_power`. [[moduleAggStream]], the module side
+    * of [[streamStreamJoin]] and [[anomalyPipelineStream]] all start from
+    * it.
     */
-  def moduleAggStream(normalized: DataFrame,
-                      windowDuration: String = Solar.WindowDuration,
-                      watermarkDelay: String = "30 seconds"): DataFrame =
+  private def moduleWindowAgg(normalized: DataFrame, windowDuration: String,
+                              watermarkDelay: String): DataFrame =
     normalized
       .withWatermark("ts", watermarkDelay)
       .groupBy(window(col("ts"), windowDuration).as("w"),
@@ -115,6 +118,15 @@ object SolarStreaming {
         sum(col("power")).as("m_sum_power"),
         graft.functions.AggFunctions.meanQ(col("power"), 1)
           .as("m_avg_power"))
+
+  /** Stateful stage: watermarked per-module tumbling-window aggregate
+    * (rows 5-8). In append mode this emits each (window, panel, module)
+    * exactly once, after the watermark passes the window end.
+    */
+  def moduleAggStream(normalized: DataFrame,
+                      windowDuration: String = Solar.WindowDuration,
+                      watermarkDelay: String = "30 seconds"): DataFrame =
+    moduleWindowAgg(normalized, windowDuration, watermarkDelay)
       .select(col("w.start").cast("long").as("w_start"),
         col("panel"), col("module"),
         col("m_cnt"), col("m_sum_power"), col("m_avg_power"))
@@ -195,23 +207,15 @@ object SolarStreaming {
     * aggregations feed a stream-stream join in append mode; joining on the
     * `window` struct column lets the engine propagate the watermark through
     * both state stores and evict join state as windows finalize — so state
-    * is bounded by the watermark delay, not the stream length. The
-    * foreachBatch path ([[startAnomalyQuery]]) remains the recommended
-    * deployment (one state store instead of three); this operator is the
-    * parity witness for users porting the reference topology join-for-join.
+    * is bounded by the watermark delay, not the stream length.
+    * [[anomalyPipelineStream]] is the deployed topology (no join state at
+    * all); this operator is the parity witness for users porting the
+    * reference topology join-for-join.
     */
   def streamStreamJoin(normalized: DataFrame,
                        windowDuration: String = Solar.WindowDuration,
                        watermarkDelay: String = "30 seconds"): DataFrame = {
-    val m = normalized
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDuration).as("w"),
-        col("panel"), col("module"))
-      .agg(
-        count(lit(1)).as("m_cnt"),
-        sum(col("power")).as("m_sum_power"),
-        graft.functions.AggFunctions.meanQ(col("power"), 1)
-          .as("m_avg_power"))
+    val m = moduleWindowAgg(normalized, windowDuration, watermarkDelay)
     val p = normalized
       .withWatermark("ts", watermarkDelay)
       .groupBy(window(col("ts"), windowDuration).as("w"),
@@ -369,8 +373,7 @@ object SolarStreaming {
     * Aggregate 2 receives a window's module rows in the micro-batch that
     * finalizes them and emits them in that same batch, so its state is
     * empty between batches: the only long-lived state is the module
-    * aggregate, which is what the reference keeps too, and what
-    * [[startAnomalyQuery]]'s single-store design holds. [[streamStreamJoin]]
+    * aggregate, which is what the reference keeps too. [[streamStreamJoin]]
     * and [[panelAggStream]] remain the join-for-join witnesses of the
     * reference topology.
     *
@@ -382,16 +385,7 @@ object SolarStreaming {
                             windowDuration: String = Solar.WindowDuration,
                             watermarkDelay: String = "30 seconds",
                             z: Double = Solar.Z): DataFrame = {
-    val moduleAggW = normalized
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDuration).as("w"),
-        col("panel"), col("module"))
-      .agg(
-        count(lit(1)).as("m_cnt"),
-        sum(col("power")).as("m_sum_power"),
-        graft.functions.AggFunctions.meanQ(col("power"), 1)
-          .as("m_avg_power"))
-    moduleAggW
+    moduleWindowAgg(normalized, windowDuration, watermarkDelay)
       .groupBy(window(col("w"), windowDuration).as("w"), col("panel"))
       .agg(
         count(lit(1)).as("p_cnt"),
@@ -441,30 +435,6 @@ object SolarStreaming {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(sink)
-      .start()
-
-  /** Finalized module aggregates → anomalies, batch stages reused verbatim
-    * (rows 10-16). Runs inside foreachBatch on append-mode output.
-    */
-  def batchAnomalies(moduleAgg: DataFrame): DataFrame = {
-    val p = Solar.panelAgg(moduleAgg)
-    val pf = Solar.panelFinal(Solar.joinPanelModule(moduleAgg, p))
-    Solar.anomalies(Solar.joinModulePanel(moduleAgg, pf))
-  }
-
-  /** Full streaming pipeline: normalized stream → anomaly micro-batches
-    * delivered to `sink`. The sink receives the flat anomaly rows; use
-    * [[encodeAnomalies]] + a Kafka writer inside it for wire parity.
-    */
-  def startAnomalyQuery(normalized: DataFrame, checkpointDir: String)
-                       (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    moduleAggStream(normalized)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(batchAnomalies(batch), id)
-      }
       .start()
 
   /** JSON encode (row 17): nested `SolarModuleAggregatorJoiner` wire shape

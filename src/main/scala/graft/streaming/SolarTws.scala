@@ -4,27 +4,33 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
-import graft.streaming.SolarStateful.{ModuleKey, ModuleWindowAgg, Reading,
+import graft.functions.MicrosMath
+import graft.streaming.SolarTws.{ModuleKey, ModuleWindowAgg, Reading,
   WindowBuf, WindowSeconds}
 
 /** The per-module windowed aggregate on `transformWithState` — Spark 4's
-  * current arbitrary-state API (SPARK-46815), kept semantically identical
-  * to the legacy [[SolarStateful]] `flatMapGroupsWithState` build and to
-  * the built-in windowed aggregation ([[SolarStreaming.moduleAggStream]]),
-  * which remains the right tool for this topology. This twin exists
-  * because new stateful operators should be written against TWS, not the
-  * legacy API: typed state handles (here a [[ListState]] of open-window
-  * buffers — element-wise appendable in RocksDB, though this processor's
-  * flush rewrites the short list with `put`; the win over the legacy
-  * GroupState blob is the typed handle, not the write granularity),
-  * explicit per-key timers instead of one implicit timeout, and
-  * state-variable eviction via TTL when semantics allow it.
+  * arbitrary-state API (SPARK-46815), kept semantically identical to the
+  * built-in windowed aggregation ([[SolarStreaming.moduleAggStream]]),
+  * which remains the right tool for this topology. This processor is the
+  * template new stateful operators are written against: typed state
+  * handles (here a [[ListState]] of open-window buffers — element-wise
+  * appendable in RocksDB, though this processor's flush rewrites the
+  * short list with `put`), explicit per-key timers instead of one
+  * implicit timeout, and state-variable eviction via TTL when semantics
+  * allow it.
   *
-  * Flush discipline matches [[SolarStateful.updateGroup]]: windows close
-  * when the event-time watermark passes their end, either inline (the key
-  * saw new rows this batch) or via the timer registered for the earliest
-  * open window end. State is bounded: one (cnt, sum) buffer per open
-  * window per key, evicted on flush.
+  * Windows close when the event-time watermark passes their end, either
+  * inline (the key saw new rows this batch) or via the timer registered
+  * for the earliest open window end. State is bounded: one buffer per
+  * open window per key, evicted on flush.
+  *
+  * The buffer carries the exact micros sum next to the double sum, so
+  * `m_avg_power` is [[graft.functions.AggFunctions.meanQ]]'s exact-integer
+  * HALF_UP mean, not a rounding of the double mean (readings 0.01 and
+  * 0.09 average to 0.1 here as in the built-in and batch aggregates; the
+  * double mean 0.049999… would round to 0.0). This changed the state
+  * schema of [[WindowBuf]]: a checkpoint written with the earlier
+  * three-field buffer cannot be resumed.
   */
 class ModuleAggProcessor
     extends StatefulProcessor[ModuleKey, Reading, ModuleWindowAgg] {
@@ -35,13 +41,10 @@ class ModuleAggProcessor
     open = getHandle.getListState[WindowBuf]("open",
       Encoders.product[WindowBuf], TTLConfig.NONE)
 
-  private def round1(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(1, java.math.RoundingMode.HALF_UP).doubleValue()
-
+  // meanQ(power, 1): micros sum sign-extended to int128, p = 10^(6-1)
   private def toAgg(key: ModuleKey)(b: WindowBuf): ModuleWindowAgg =
     ModuleWindowAgg(b.w, key.panel, key.module, b.cnt, b.sum,
-      round1(b.sum / b.cnt))
+      MicrosMath.meanQ128(b.sumMicros >> 63, b.sumMicros, b.cnt, 100000L, 10.0))
 
   /** Emit the windows the watermark finalized, persist the rest, and arm
     * the timer for the earliest still-open window end — exactly ONE
@@ -75,8 +78,9 @@ class ModuleAggProcessor
     val prev = open.get().map(b => b.w -> b).toMap
     val next = rows.foldLeft(prev) { (acc, r) =>
       val w = Math.floorDiv(r.ts.getTime, 1000L * WindowSeconds) * WindowSeconds
-      val b = acc.getOrElse(w, WindowBuf(w, 0L, 0.0))
-      acc.updated(w, WindowBuf(w, b.cnt + 1, b.sum + r.power))
+      val b = acc.getOrElse(w, WindowBuf(w, 0L, 0.0, 0L))
+      acc.updated(w, WindowBuf(w, b.cnt + 1, b.sum + r.power,
+        Math.addExact(b.sumMicros, MicrosMath.micros(r.power))))
     }
     flush(key, next.values, timerValues.getCurrentWatermarkInMs())
   }
@@ -168,6 +172,18 @@ class CatCrossProcessor(threshold: Long,
 }
 
 object SolarTws {
+
+  case class Reading(ts: java.sql.Timestamp, panel: String, module: String,
+                     power: Double)
+  case class ModuleKey(panel: String, module: String)
+  /** One open window buffer: count, double sum, and the exact sum of
+    * round_half_away(power·10⁶) the mean is rounded from.
+    */
+  case class WindowBuf(w: Long, cnt: Long, sum: Double, sumMicros: Long)
+  case class ModuleWindowAgg(w_start: Long, panel: String, module: String,
+                             m_cnt: Long, m_sum_power: Double, m_avg_power: Double)
+
+  val WindowSeconds = 30L
 
   case class AlertState(cnt: Long, fired: Boolean)
   case class Alert(tok: String, cnt: Long)

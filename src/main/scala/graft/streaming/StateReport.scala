@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** First-class state-store observability (VERDICT r12 #8): the
-  * per-operator state rows/bytes that `tools/ProbeStreaming` read ad hoc,
+  * per-operator state rows/bytes that the round-12 streaming probe read
+  * ad hoc (SURVEY.md "Round-12 streaming micro-batch economics"),
   * surfaced as a report relation any ops job can sink — the view a
   * 100 TB stream is actually operated on. A stateful pipeline's failure
   * mode at scale is UNBOUNDED STATE (a watermark that stopped advancing,

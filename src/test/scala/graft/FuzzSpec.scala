@@ -3,7 +3,7 @@ package graft
 import graft.tools.QueryFuzz
 
 /** Differential-fuzz harness spec. The DuckDB leg runs out-of-process
-  * (`runMain graft.tools.Fuzz` + `tools/check_oracle.py` — recorded
+  * (`Test/runMain graft.tools.Fuzz` + `tools/check_oracle.py` — recorded
   * batteries: 200 seeds at base 0; 300 at base 1000; 300 at base 2000
   * after the 13-kind extension; then the generator widened to 15 kinds
   * (kind 13 setOp: UNION/INTERSECT/EXCEPT [ALL]; kind 14 condAgg:

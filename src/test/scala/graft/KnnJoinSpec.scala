@@ -71,10 +71,10 @@ class KnnJoinSpec extends SparkSpecBase {
 
   test("scatter guard: hash(vec_id) exchange present by default, gone " +
        "when disabled, results identical either way") {
-    // the sorted-ingest guard (ProbeSkewIvf's contiguous-layout caveat
-    // made engine behavior): AQE's skew split cuts a viral cell's reduce
-    // partition only at map-block boundaries, so the corpus must be
-    // hash-scattered BEFORE the cell-keyed exchange
+    // the sorted-ingest guard (the contiguous-layout caveat of SURVEY.md
+    // row "IVF viral-cell skew", made engine behavior): AQE's skew split
+    // cuts a viral cell's reduce partition only at map-block boundaries,
+    // so the corpus must be hash-scattered BEFORE the cell-keyed exchange
     val on = Similarity.knnJoin(embs, embs, model, k = 5, nProbe = 2)
       .queryExecution.executedPlan.toString
     assert("hashpartitioning\\(vec_id".r.findFirstIn(on).isDefined,

@@ -66,6 +66,22 @@ class QualityModelSpec extends SparkSpecBase {
     assert(acc > 0.85, s"train accuracy $acc")
   }
 
+  test("DefaultWeights re-derive from the sf0.01 train split (provenance)") {
+    // the shipped artifact's recipe: train on the sf0.01 documents of the
+    // TRAIN split only (hashBucket >= 20), round to 6 decimals HALF_UP
+    val sf001 = new java.io.File(sfDir).getParent + "/sf0.01"
+    val docs = Tables.documents(spark, sf001)
+    val w = QualityModel.train(
+      docs.filter(graft.operators.Curation.hashBucket(col("doc_id")) >= 20))
+    val rounded = w.map(x =>
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    assert(rounded.toSeq === QualityModel.DefaultWeights.toSeq)
+    val acc = QualityModel.evaluateSplits(docs, rounded.toSeq)
+      .select("split", "accuracy").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(acc === Map("train" -> 0.9375, "val" -> 0.9423, "test" -> 0.9167))
+  }
+
   test("scoring under hand weights matches hand-computed fixed-order math") {
     import spark.implicits._
     // 10 words, exactly 1 en-stopword ("the"), no punctuation

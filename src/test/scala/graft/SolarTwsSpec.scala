@@ -2,13 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.streaming.{SolarStateful, SolarTws}
-import graft.streaming.SolarStateful._
+import graft.streaming.{SolarStreaming, SolarTws}
+import graft.streaming.SolarTws._
 
 /** End-to-end tests of the transformWithState build (Spark 4's current
   * arbitrary-state API): suppressed emit-once semantics under the
   * watermark, timer-driven flush of quiet keys, and equivalence with the
-  * legacy flatMapGroupsWithState twin on the same input.
+  * built-in windowed aggregate on the same input. Per-case folds, partial
+  * flushes and state eviction are in [[SolarStatefulSpec]].
   */
 object SolarTwsSpec {
   /** Highest armed-timer count any key ever showed (local[32]: processor
@@ -79,7 +80,7 @@ class SolarTwsSpec extends SparkSpecBase {
     val name = s"timers_${System.nanoTime()}"
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val q = input.toDF().toDF("ts", "panel", "module", "power").as[Reading]
-      .withWatermark("ts", s"${SolarStateful.WindowSeconds} seconds")
+      .withWatermark("ts", s"$WindowSeconds seconds")
       .groupByKey(r => ModuleKey(r.panel, r.module))
       .transformWithState(new TimerProbingProcessor,
         TimeMode.EventTime(), OutputMode.Append())
@@ -120,11 +121,15 @@ class SolarTwsSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("TWS and legacy flatMapGroupsWithState emit identical finalized windows") {
+  test("TWS and the built-in module aggregate emit identical finalized windows") {
     val data = Seq(
       (ts("2024-01-01 00:00:05"), "p1", "m1", 10.0),
       (ts("2024-01-01 00:00:29"), "p1", "m1", 2.0),
       (ts("2024-01-01 00:00:31"), "p1", "m2", 7.0),
+      // the double sum is 0.09999999999999999: a rounded double mean
+      // gives 0.0, the exact micros mean 0.1
+      (ts("2024-01-01 00:00:12"), "p1", "m4", 0.01),
+      (ts("2024-01-01 00:00:13"), "p1", "m4", 0.09),
       (ts("2024-01-01 00:01:04"), "p2", "m3", 5.0),
       (ts("2024-01-01 00:05:00"), "p9", "m9", 0.0)) // watermark driver
     def run(build: org.apache.spark.sql.Dataset[Reading] =>
@@ -139,8 +144,8 @@ class SolarTwsSpec extends SparkSpecBase {
       } finally q.stop()
     }
     val tws = run(SolarTws.moduleAggTws(spark, _))
-    val legacy = run(SolarStateful.moduleAggCustomState(spark, _))
-    assert(tws === legacy)
-    assert(tws.nonEmpty)
+    val builtIn = run(r => SolarStreaming.moduleAggStream(r.toDF()).as[ModuleWindowAgg])
+    assert(tws === builtIn)
+    assert(tws.filter(_.module == "m4").map(_.m_avg_power) === Set(0.1))
   }
 }

@@ -81,7 +81,7 @@ class StreamingRecoverySpec extends SparkSpecBase {
 
     def runUntilIdle(): Unit = {
       val stream = spark.readStream.schema(schema).parquet(srcDir)
-        .as[graft.streaming.SolarStateful.Reading]
+        .as[graft.streaming.SolarTws.Reading]
       val q = graft.streaming.SolarTws.moduleAggTws(spark, stream).toDF()
         .writeStream.outputMode("append")
         .option("checkpointLocation", ckptDir)

@@ -968,7 +968,7 @@ object QueryFuzz {
   }
 }
 
-/** `runMain graft.tools.Fuzz <sfDir> <outDir> <nSeeds> [seedBase]` —
+/** `Test/runMain graft.tools.Fuzz <sfDir> <outDir> <nSeeds> [seedBase]` —
   * executes the generated Spark plans to parquet + dumps the DuckDB SQL
   * in the Verify layout; `tools/check_oracle.py <sfDir> <outDir>` then
   * performs the rows+schema+hash differential compare.

@@ -84,7 +84,7 @@ import org.apache.spark.sql.functions._
   * kind-6 RAW stream-stream time-range join: the buffered rows carry
   * decimal(12,2) measures, so the JOIN state store serializes and
   * restores decimals (kind 11 covers only aggregation state), plus an
-  * exact decimal sum across the two sides. Run standalone: `sbt "runMain
+  * exact decimal sum across the two sides. Run standalone: `sbt "Test/runMain
   * graft.tools.StreamFuzz <fromSeed> <toSeed>"` (STREAM_FUZZ_VERBOSE=1
   * prints every seed's kind/rows); StreamFuzzSpec runs the recorded
   * battery in-suite.
@@ -492,7 +492,7 @@ object StreamFuzz {
     val readings = input.toDF().toDF("ts", "key", "cat", "value")
       .select(col("ts"), col("cat").as("panel"),
         col("key").cast("string").as("module"), col("value").as("power"))
-      .as[graft.streaming.SolarStateful.Reading]
+      .as[graft.streaming.SolarTws.Reading]
     val out = graft.streaming.SolarTws.moduleAggTws(spark, readings).toDF()
       .filter(col("panel") =!= "zz_flush")
       .select(col("w_start"), col("panel"), col("module"), col("m_cnt"),
@@ -581,7 +581,7 @@ object StreamFuzz {
       val readings = spark.readStream.schema(schema).parquet(srcDir)
         .select(col("ts"), col("cat").as("panel"),
           col("key").cast("string").as("module"), col("value").as("power"))
-        .as[graft.streaming.SolarStateful.Reading]
+        .as[graft.streaming.SolarTws.Reading]
       val sq = graft.streaming.SolarTws.moduleAggTws(spark, readings).toDF()
         .filter(col("panel") =!= "zz_flush")
         .select(col("w_start"), col("panel"), col("module"), col("m_cnt"),
