@@ -143,7 +143,11 @@ object Bench {
     // profiled cold-JVM runs spent 10-40× the steady-state time in JIT +
     // whole-stage-codegen compilation (q11: 26 s cold vs 0.6 s warm), which
     // would be charged to whichever query ran first. Data at the measured
-    // SF stays cold; only code warms.
+    // SF stays cold; only code warms. Generated code stays warm only
+    // because Engine.builder sizes the code generator's cache to the
+    // 200-query working set (about 2.2k classes): at Spark's default of
+    // 100 classes the later queries of this pass evicted the earlier
+    // ones', and every timed run compiled its code again.
     val warmDir = {
       val d = new java.io.File("/root/testdata/sf0.001")
       if (d.isDirectory) d.getPath else sfDir

@@ -23,6 +23,25 @@ import graft.functions.{CmsQuery, CountMinAgg, HistogramAgg, LangPredict, MinHas
   *    to local disk and checkpoints incrementally.
   *  - UTC session timezone pinned: window boundaries must not depend on
   *    cluster locale.
+  *  - Generated code compiled once per JVM. Spark keeps 100 compiled
+  *    classes by default; one pass of the 21 benchmark headline queries
+  *    generates about 300, so LRU evicted every class before its next use
+  *    and each run of a query recompiled its whole-stage code (traced
+  *    timed passes on a 4-CPU host compiled 268–309 classes in
+  *    3.0–4.4 s). The cache holds
+  *    [[Engine.CodegenCacheEntries]] = 4096 classes: a full `graft.Verify`
+  *    run at sf0.01 with an unbounded cache compiles 2,232 distinct classes
+  *    (2,758 with stage ids in the class names, see below; a class counts
+  *    once per class loader, driver and executor). A cached class costs
+  *    about 40 KB of heap and metaspace (source text, bytecode, loaded
+  *    class): about 12 MB for the benchmark's 300, 90 MB for the Verify
+  *    run, at most about 160 MB when full.
+  *  - Whole-stage class names without the codegen stage id
+  *    (`spark.sql.codegen.useIdInClassName`). The id is part of the
+  *    source, and AQE numbers a query's stages in the order it plans
+  *    them, which can change from run to run: the same stage came back
+  *    under another id and missed the cache (q83 and q84 did in timed
+  *    benchmark passes).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -145,6 +164,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object Engine {
 
+  /** `spark.sql.codegen.cache.maxEntries`: distinct generated classes
+    * Spark keeps compiled (see class doc for the measurement). A static
+    * conf, so it can only be set when the session is built.
+    */
+  val CodegenCacheEntries: Int = 4096
+
   /** Cluster-posture session builder (see class doc). `master` defaults to
     * whatever the environment provides (spark-submit / tests set it).
     */
@@ -173,4 +198,6 @@ object Engine {
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
 }

@@ -1469,10 +1469,15 @@ object Dedup {
       .join(needSets.select(col("doc_id").as("id_a"), col("fps").as("fa"),
         col("n").as("na")), "id_a")
       .join(corpSets.select(col("doc_id").as("id_b"), col("fb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        graft.functions.SetFunctions.set_intersect_count(
-          col("fa"), col("fb")).cast("long").as("i"),
-        col("na"))
+      // the count leaves through a one-element explode, a Generate node:
+      // the optimizer neither merges it into the projection above nor
+      // pushes the threshold filter below it, so the kernel runs once per
+      // candidate pair. A plain projected `i` would be substituted into
+      // the pushed-down filter, which becomes a join condition: two
+      // kernel calls per pair.
+      .select(col("id_a"), col("id_b"), col("na"),
+        explode(array(graft.functions.SetFunctions.set_intersect_count(
+          col("fa"), col("fb")).cast("long"))).as("i"))
       .select(col("id_a"), col("id_b"), (col("i") / col("na")).as("c"),
         graft.functions.AggFunctions.ratioQ(
           col("i"), col("na"), 4).as("cq"))

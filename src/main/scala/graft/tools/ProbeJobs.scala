@@ -2,8 +2,10 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.{Engine, SparkEntry}
 
@@ -14,7 +16,10 @@ import graft.{Engine, SparkEntry}
   * tasks, and summed executor task time. A query whose wall >> task-time /
   * cores and whose job count is high is paying driver/scheduling fixed
   * costs (guide §5 — the driver should do almost no data work), not
-  * compute; one with task-time ≈ wall × cores is compute-bound.
+  * compute; one with task-time ≈ wall × cores is compute-bound. The
+  * codegen columns are the classes the measured run compiled (the
+  * `CodegenMetrics` compilation count: code-cache misses) and their
+  * compile time; after the warm run both should be near 0.
   *
   * Usage: runMain graft.tools.ProbeJobs <sfDir> <query>[,<query>...]
   * Env: SPARK_GRAFT_CPUS (default 32).
@@ -81,13 +86,18 @@ object ProbeJobs {
       Thread.sleep(500)
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
       stageName.clear(); stageMs.clear(); stageTasks.clear()
+      val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(name)(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500)
+      val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       println(f"PROBEJOBS $name rows=$n wall=$wall%.3f jobs=${jobs.get}" +
         f" stages=${stages.get} tasks=${tasks.get}" +
-        f" taskSec=${taskMs.get / 1e3}%.2f")
+        f" taskSec=${taskMs.get / 1e3}%.2f" +
+        f" codegen=$classes codegenMs=$compileMs%.1f")
       import scala.jdk.CollectionConverters._
       stageMs.asScala.toSeq.sortBy(-_._2.get()).take(8).foreach {
         case (sid, ms) =>
