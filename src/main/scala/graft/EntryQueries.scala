@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{AsOf, Bpe, Curation, Dedup, EventAnalytics, Multimodal, RangeJoin, Relational, Similarity, Skew, Solar, TextAnalysis, Windows}
+import graft.operators.{AsOf, Bpe, Curation, Dedup, EventAnalytics, Multimodal, RangeJoin, Relational, Similarity, Skew, Solar, Stages, TextAnalysis, Windows}
 import graft.sources.Tables
 
 /** The query registry — one entry per gated operator (SURVEY.md §2 +
@@ -32,7 +32,7 @@ private[graft] trait EntryQueries { self: EntryShared =>
           r4("p_sum_power"), col("p_avg_power"))),
 
     // row 12: windowed inner join #1 (panel-agg broadcast onto module-agg)
-    // q04–q08 consume the shared module-aggregate memo (solarStagesShared):
+    // q04–q08 consume the shared module aggregate (solarStagesShared):
     // the chain's upstream scan + shuffle runs once per (session, dir).
     "q04_join_panel_module" -> ((s, dir) => {
       val st = solarStagesShared(s, dir)
@@ -1465,22 +1465,17 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // (the BpeSpec pin), so the oracle replays the merges as literals —
     // nMerges nested left-to-right `replace` calls over a
     // boundary-wrapped string — and hash-matches the full piece stream.
-    "q118_bpe_encode" -> ((s, dir) => {
-      // trains FRESH every run (the q11 producer discipline: q118's bench
-      // timing keeps pricing the BPE training) and republishes the memo
-      // q123 consumes; training is deterministic, so the value only ever
-      // changes when the corpus does
-      assertBpeOracleSafe(s, dir)
-      val merges = Bpe.trainMergePairs(Tables.documents(s, dir), Q118Merges)
-      learnedBpeMerges = Some(merges)
-      bpeMergesMemo.put(ccKey(s, dir), (s, merges))
-      Bpe.encodeDocs(Tables.documents(s, dir), merges)
-    }),
+    // Trains FRESH every run (the q11 producer discipline: q118's bench
+    // timing keeps pricing the BPE training) and publishes the merge
+    // table q123 consumes; training is deterministic, so the value only
+    // ever changes when the corpus does.
+    "q118_bpe_encode" -> ((s, dir) =>
+      Bpe.encodeDocs(Tables.documents(s, dir), bpeMergesPublish(s, dir))),
 
     // tokenizer fertility per source under the q118-trained merges
     // (pieces/word, chars/piece — the vocabulary-fit table a token-
     // budgeted run reads before committing to a tokenizer); consumes the
-    // q118 memo, training only when it runs standalone
+    // q118 merge table, training only when it runs standalone
     "q123_bpe_fertility" -> ((s, dir) =>
       Bpe.fertilityReport(Tables.documents(s, dir), bpeMergesShared(s, dir))),
 
@@ -1488,18 +1483,13 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // survivors → token budget → packing) gated as ONE query — the
     // integration, not just each stage, is hash-verified (VERDICT r11
     // #4). The stage's checkpointed dropped-id relation outlives the
-    // call (the result plan reads it); a re-run releases the PREVIOUS
-    // invocation's, the ccLabelsFresh discipline, so lingering raw-RDD
-    // state is bounded at one tiny id relation per (session, corpus).
-    "q119_curation_dag" -> ((s, dir) => {
-      val it = dagStageMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val stage = Curation.curationDagStage(Tables.documents(s, dir))
-      Option(dagStageMemo.put(ccKey(s, dir), (s, stage)))
-        .foreach(_._2.release())
-      stage.result
-    }),
+    // call (the result plan reads it), so each run publishes its stage
+    // and lingering raw-RDD state is bounded at two tiny id relations per
+    // (session, corpus).
+    "q119_curation_dag" -> ((s, dir) =>
+      SessionArtifacts.publish(s, dir, "curationDag",
+        (st: Curation.CurationDagStage) => st.release())(
+        Curation.curationDagStage(Tables.documents(s, dir))).result),
 
     // ANN recall-vs-cost frontier (VERDICT r11 #5): per (nProbe, golden
     // query), the IVF top-5's recall against brute truth AND the number
@@ -1607,11 +1597,9 @@ private[graft] trait EntryQueries { self: EntryShared =>
           when(col("doc_id") % 10 === 0,
             concat(col("text"), lit(" updated")))
             .otherwise(col("text")))
-      val it = corpusFpsMemo.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val fps = corpusFpsMemo.computeIfAbsent(ccKey(s, dir), _ =>
-        (s, Curation.corpusFingerprints(existing).localCheckpoint(true)))._2
+      val fps = SessionArtifacts.get(s, dir, "corpusFps",
+        Stages.releaseCheckpoint)(
+        Curation.corpusFingerprints(existing).localCheckpoint(true))
       Curation.mergeCorpusIncremental(incoming, fps)
     }),
 

@@ -63,16 +63,13 @@ object Bpe {
     * was actually persisted (unpersisting the derived `vocab` plan would
     * be a no-op — `Dataset.unpersist` only matches its own plan), and
     * `vocab` may additionally be checkpoint-backed, so the handle also
-    * releases its raw-RDD blocks (the [[Dedup.releaseClusters]] rule:
+    * releases its raw-RDD blocks ([[Stages.releaseCheckpoint]]:
     * neither `clearCache` nor `unpersist` covers checkpoint RDDs).
     */
   case class BpeModel(merges: DataFrame, vocab: DataFrame, base: DataFrame) {
     def unpersist(): Unit = {
       base.unpersist()
-      vocab.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.foreach(_.unpersist(false))
-      ()
+      Stages.releaseCheckpoint(vocab)
     }
   }
 
@@ -327,10 +324,6 @@ object Bpe {
   private def trainDistributed(spark: org.apache.spark.sql.SparkSession,
                                base: DataFrame, nMerges: Int,
                                batchK: Int): BpeModel = {
-    def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
     var tab = base
     var lastCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
     var sinceCkpt = 0
@@ -371,7 +364,7 @@ object Bpe {
           // checkpoint's blocks through the raw-RDD handle
           tab = tab.localCheckpoint(true)
           lastCkpt.foreach(_.unpersist(false))
-          lastCkpt = ckptRdd(tab)
+          lastCkpt = Stages.checkpointRdd(tab)
           sinceCkpt = 0
         }
       }

@@ -568,10 +568,10 @@ object Curation {
   /** [[curationDag]]'s handle: `dropIds` is the checkpointed dropped-id
     * relation the result plan reads (release via [[release]] once the
     * result is consumed — it is a raw-RDD checkpoint, outside
-    * `clearCache`'s reach, the [[Dedup.releaseClusters]] discipline).
+    * `clearCache`'s reach, the [[Stages.releaseCheckpoint]] discipline).
     */
   case class CurationDagStage(dropIds: DataFrame, result: DataFrame) {
-    def release(): Unit = Dedup.releaseClusters(dropIds)
+    def release(): Unit = Stages.releaseCheckpoint(dropIds)
   }
 
   /** The COMPOSED end-to-end curation DAG — the four-stage pipeline a
@@ -646,7 +646,7 @@ object Curation {
     val drop = labels.join(
         surv.select(col("survivor_id").as("doc_id")), Seq("doc_id"), "left_anti")
       .select("doc_id").localCheckpoint(true)
-    st.unpersist(); Dedup.releaseClusters(labels)
+    st.unpersist(); Stages.releaseCheckpoint(labels)
     // persisted (review r12): the budget body reads its input three
     // times and the total/packing branches twice more — without the
     // cache, the percentile subtree under keptIds would re-execute per

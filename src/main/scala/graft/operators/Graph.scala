@@ -155,10 +155,6 @@ object Graph {
     */
   def kCorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, s"need k >= 1, rounds >= 0; got $k, $rounds")
-    def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
     val und = pairs.select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
@@ -178,7 +174,7 @@ object Graph {
         .localCheckpoint(true) // eager: materializes and truncates lineage
       val nextCount = next.count()
       converged = nextCount == edgeCount // no node dropped → fixpoint
-      ckptRdd(edges).foreach(_.unpersist(false))
+      Stages.releaseCheckpoint(edges)
       edges = next
       edgeCount = nextCount
       round += 1

@@ -30,4 +30,22 @@ private[graft] object Stages {
     p.count()
     p
   }
+
+  /** The raw RDD behind a `localCheckpoint`ed relation (its LogicalRDD
+    * leaf), if it has one.
+    */
+  def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+
+  /** Free the checkpoint blocks behind every LogicalRDD leaf of `df`.
+    * Neither `spark.catalog.clearCache()` nor `Dataset.unpersist` covers
+    * them (they are raw-RDD persists, not CacheManager entries). The
+    * relation is unusable afterwards: the checkpoint IS its lineage.
+    */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(false))
 }

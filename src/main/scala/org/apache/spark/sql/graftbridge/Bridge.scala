@@ -29,4 +29,23 @@ object Bridge {
     */
   def waitForListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** A new directory under `java.io.tmpdir`, deleted at JVM exit
+    * (`Utils.createTempDir` registers it with Spark's shutdown hook).
+    */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getPath
+
+  def deleteRecursively(path: String): Unit =
+    org.apache.spark.util.Utils.deleteRecursively(new java.io.File(path))
+
+  /** Delete a catalog table's directory at JVM exit, as [[tempDir]]. */
+  def deleteTableAtExit(s: org.apache.spark.sql.SparkSession,
+                        table: String): Unit = s match {
+    case c: org.apache.spark.sql.classic.SparkSession =>
+      org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(
+        new java.io.File(c.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(table)).location))
+    case _ => ()
+  }
 }

@@ -12,7 +12,7 @@ class CacheHygieneSpec extends SparkSpecBase {
 
   // Relative to a per-test baseline: suites share one SparkContext, and a
   // prior suite may legitimately hold a nearDupClusters checkpoint (those
-  // are released via Dedup.releaseClusters, not clearCache).
+  // are released via Stages.releaseCheckpoint, not clearCache).
   // Baseline is the SET of pre-existing persistent-RDD ids, and
   // cachedCount counts only ids created after it: a plain size delta
   // goes negative when the async ContextCleaner collects another
@@ -33,7 +33,7 @@ class CacheHygieneSpec extends SparkSpecBase {
 
   test("q04-q08 share one checkpointed module aggregate via the memo") {
     val dir = "/root/testdata/sf0.001"
-    SparkEntry.releaseSolarShared(spark, dir) // a prior suite may have published
+    SessionArtifacts.release(spark, dir, "solarModule") // a prior suite may have published
     spark.catalog.clearCache()
     baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // first chain query computes and publishes the checkpoint-backed module
@@ -56,17 +56,17 @@ class CacheHygieneSpec extends SparkSpecBase {
       }.nonEmpty
     assert(hasCkptLeaf)
     // explicit release frees the blocks; the next chain query republishes
-    SparkEntry.releaseSolarShared(spark, dir)
+    SessionArtifacts.release(spark, dir, "solarModule")
     assert(cachedCount === 0)
     SparkEntry.queries("q05_variance_deviance")(spark, dir).count()
     assert(cachedCount > 0)
-    SparkEntry.releaseSolarShared(spark, dir)
+    SessionArtifacts.release(spark, dir, "solarModule")
     assert(cachedCount === 0)
   }
 
   test("q11 publishes the shared LSH stage; q105/q106 consume the checkpoint") {
     val dir = "/root/testdata/sf0.001"
-    SparkEntry.releaseLshShared(spark, dir) // a prior suite may have published
+    SessionArtifacts.release(spark, dir, "lshCalib") // a prior suite may have published
     spark.catalog.clearCache()
     baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
     // the producer computes fresh, publishes, and releases the stage's own
@@ -92,7 +92,7 @@ class CacheHygieneSpec extends SparkSpecBase {
     // the release must free BOTH live generations
     SparkEntry.queries("q11_dedup_minhash_lsh")(spark, dir).count()
     assert(cachedCount >= afterProducer)
-    SparkEntry.releaseLshShared(spark, dir)
+    SessionArtifacts.release(spark, dir, "lshCalib")
     assert(cachedCount === 0)
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Stages}
 
 /** Pins the r19 driver-side union-find path of [[Dedup.starClusters]]
   * against the distributed large-star/small-star loop: identical label
@@ -13,7 +13,7 @@ class CcEquivalenceSpec extends SparkSpecBase {
 
   private def labelsOf(res: Dedup.CcResult): Map[Long, Long] = {
     val m = res.labels.as[(Long, Long)].collect().toMap
-    Dedup.releaseClusters(res.labels)
+    Stages.releaseCheckpoint(res.labels)
     m
   }
 
@@ -52,12 +52,12 @@ class CcEquivalenceSpec extends SparkSpecBase {
     val df = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val d = Dedup.starClusters(df)
     assert(d.rounds === 0, "small graph must take the driver path")
-    Dedup.releaseClusters(d.labels)
+    Stages.releaseCheckpoint(d.labels)
     spark.conf.set("graft.cc.driverMaxEdges", "0")
     try {
       val s = Dedup.starClusters(df)
       assert(s.rounds > 0, "conf 0 must force the distributed path")
-      Dedup.releaseClusters(s.labels)
+      Stages.releaseCheckpoint(s.labels)
     } finally spark.conf.unset("graft.cc.driverMaxEdges")
   }
 }

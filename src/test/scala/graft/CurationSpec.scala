@@ -6,6 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.{Curation, TextAnalysis}
+// Tests that bootstrap a checkpointed artifact release it explicitly: the
+// async ContextCleaner would otherwise release it at an arbitrary later
+// point, corrupting other tests' persistent-RDD baselines.
+import graft.operators.Stages.releaseCheckpoint
 import graft.streaming.StreamingCuration
 
 class CurationSpec extends SparkSpecBase {
@@ -558,18 +562,6 @@ class CurationSpec extends SparkSpecBase {
     assert(acct("ghost").getAs[Long]("unspent") === 40L)
     assert(acct("thin").getAs[Long]("spent") === 6L)
     spark.catalog.clearCache()
-  }
-
-  /** Release a localCheckpoint-backed relation's raw-RDD blocks — tests
-    * that bootstrap a checkpointed artifact must drop it explicitly (the
-    * async ContextCleaner would otherwise release it at an arbitrary
-    * later point, corrupting other tests' persistent-RDD baselines).
-    */
-  private def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit = {
-    df.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(false))
-    ()
   }
 
   test("mergeCorpusIncremental ≡ the text-scan path, and its plan never " +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, Stages}
 
 class DedupSpec extends SparkSpecBase {
   import spark.implicits._
@@ -112,7 +112,7 @@ class DedupSpec extends SparkSpecBase {
     val clusters = Dedup.nearDupClusters(pairs)
     val out = clusters.as[(Long, Long)].collect().toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 7L -> 7L, 8L -> 7L))
-    Dedup.releaseClusters(clusters)
+    Stages.releaseCheckpoint(clusters)
     spark.catalog.clearCache()
   }
 
@@ -142,7 +142,7 @@ class DedupSpec extends SparkSpecBase {
     // what previous tests left in the session
     assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,
       "per-round checkpoints leaked")
-    Dedup.releaseClusters(res.labels)
+    Stages.releaseCheckpoint(res.labels)
     spark.catalog.clearCache()
   }
 
@@ -152,7 +152,7 @@ class DedupSpec extends SparkSpecBase {
     val clusters = Dedup.nearDupClusters(pairs)
     assert(clusters.as[(Long, Long)].collect().toMap ===
       (10L to 14L).map(_ -> 10L).toMap)
-    Dedup.releaseClusters(clusters)
+    Stages.releaseCheckpoint(clusters)
     spark.catalog.clearCache()
   }
 
@@ -168,8 +168,8 @@ class DedupSpec extends SparkSpecBase {
     val minLabel = Dedup.nearDupClustersMinLabel(pairs)
     assert(star.labels.as[(Long, Long)].collect().toMap ===
       minLabel.as[(Long, Long)].collect().toMap)
-    Dedup.releaseClusters(star.labels)
-    Dedup.releaseClusters(minLabel)
+    Stages.releaseCheckpoint(star.labels)
+    Stages.releaseCheckpoint(minLabel)
     spark.catalog.clearCache()
   }
 
@@ -185,7 +185,7 @@ class DedupSpec extends SparkSpecBase {
     val out = res.labels.as[(Long, Long)].collect().toMap
     assert(out === Map(50L -> 50L, 51L -> 50L, 52L -> 50L, 53L -> 50L,
       60L -> 60L, 61L -> 60L, 62L -> 60L, 63L -> 60L, 64L -> 60L))
-    Dedup.releaseClusters(res.labels)
+    Stages.releaseCheckpoint(res.labels)
     spark.catalog.clearCache()
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Curation
+import graft.operators.{Curation, Stages}
 import graft.sources.SnapshotStore
 
 /** Versioned snapshot store: commit/time-travel round-trip, rollback to
@@ -15,16 +15,6 @@ class SnapshotSpec extends SparkSpecBase {
 
   private def docsDf(rows: (Long, String)*): DataFrame =
     rows.toDF("doc_id", "text")
-
-  /** Release an eager localCheckpoint's persisted RDD (the EntryShared
-    * helper's shape): checkpoints left behind by a suite destabilize
-    * CacheHygieneSpec's persistent-RDD baseline when the async
-    * ContextCleaner collects them mid-test (observed flake, r15).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(false))
 
   /** Build a 3-version chain in a fresh store root; returns the root. */
   private def buildChain(): String = {
@@ -43,8 +33,10 @@ class SnapshotSpec extends SparkSpecBase {
       fps = merged.select("doc_id", "fp")
     }
     // everything downstream reads the store from DISK; the checkpoints
-    // are spent once the last commit lands
-    ckpts.foreach(releaseCheckpoint)
+    // are spent once the last commit lands. Left behind, they destabilize
+    // CacheHygieneSpec's persistent-RDD baseline when the async
+    // ContextCleaner collects them mid-test (observed flake, r15)
+    ckpts.foreach(Stages.releaseCheckpoint)
     root
   }
 
