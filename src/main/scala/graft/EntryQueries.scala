@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{AsOf, Bpe, Curation, Dedup, EventAnalytics, Multimodal, RangeJoin, Relational, Similarity, Skew, Solar, Stages, TextAnalysis, Windows}
+import graft.operators.{AsOf, Bpe, Curation, Dedup, EventAnalytics, Multimodal, RangeJoin, Relational, Similarity, Skew, Solar, Stage, Stages, TextAnalysis, Windows}
 import graft.sources.Tables
 
 /** The query registry — one entry per gated operator (SURVEY.md §2 +
@@ -1485,10 +1485,13 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // #4). The stage's checkpointed dropped-id relation outlives the
     // call (the result plan reads it), so each run publishes its stage
     // and lingering raw-RDD state is bounded at two tiny id relations per
-    // (session, corpus).
+    // (session, corpus). Freeing an older generation frees only its
+    // checkpoint: its cached relations have the live generation's plans,
+    // and `unpersist` matches cache entries by plan, so it would drop
+    // the caches the live result is about to read.
     "q119_curation_dag" -> ((s, dir) =>
       SessionArtifacts.publish(s, dir, "curationDag",
-        (st: Curation.CurationDagStage) => st.release())(
+        (st: Stage) => st.checkpoints.foreach(Stages.releaseCheckpoint))(
         Curation.curationDagStage(Tables.documents(s, dir))).result),
 
     // ANN recall-vs-cost frontier (VERDICT r11 #5): per (nProbe, golden

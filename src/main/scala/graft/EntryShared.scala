@@ -50,8 +50,8 @@ private[graft] trait EntryShared {
 
   // MinHash-LSH calibration relation (VERDICT r10 #1): the unfiltered
   // superset of the verified pairs (same banding and cap, exact Jaccard on
-  // every candidate; Dedup.CalibrationStage). q11 produces it; q105 reads
-  // it whole and the pair consumers (q11, q52/q93, q106, q108) filter
+  // every candidate; Dedup.minhashCalibrationStage). q11 produces it; q105
+  // reads it whole and the pair consumers (q11, q52/q93, q106, q108) filter
   // `jaccard >= 0.5` (Dedup.pairsFromCalibration, bit-identical to
   // minhashNearDups; DedupSpec pins it).
   private def lshCalib(s: SparkSession, dir: String): DataFrame = {

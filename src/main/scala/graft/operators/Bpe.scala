@@ -159,12 +159,11 @@ object Bpe {
 
   def train(docs: DataFrame, nMerges: Int,
             batchK: Int = DefaultBatchK): BpeModel = {
-    val base = docs
+    val base = Stages.persisted(docs
       .select(explode(TextAnalysis.tokens(lower(col("text")))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("wcount"))
-      .withColumn("sym", split(col("word"), ""))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("sym", split(col("word"), "")))
     // Training cost scales with the VOCABULARY, not the corpus — and a
     // sub-threshold vocabulary is driver-sized, where the whole fixpoint
     // is a hash-map loop instead of ~2 Spark jobs per batch round, each
@@ -399,7 +398,7 @@ object Bpe {
       .select(col("doc_id"), col("word"),
         graft.functions.TextFunctions.bpe_encode(col("word"), merges).as("pieces"))
 
-  /** The word-memoized encode with its cache handle: segmentations are
+  /** The word-memoized encode: segmentations are
     * computed once per DISTINCT word (the trainer's own trick — BPE cost
     * should scale with the vocabulary, not the corpus) and joined back to
     * word instances on the word key. The distinct-word relation is
@@ -409,25 +408,20 @@ object Bpe {
     * the build side is distinct (one row per word), so a hot word is one
     * hash-table hit, not a hot partition.
     */
-  case class EncodeStage(words: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { words.unpersist(); () }
-  }
-
-  def encodeStage(docs: DataFrame, merges: Seq[(String, String)]): EncodeStage = {
-    val words = docs
+  def encodeStage(docs: DataFrame, merges: Seq[(String, String)]): Stage = {
+    val words = Stages.persisted(docs
       .select(explode(TextAnalysis.tokens(lower(col("text")))).as("word"))
       .filter(length(col("word")) > 0)
       .distinct()
       .select(col("word"),
-        graft.functions.TextFunctions.bpe_encode(col("word"), merges).as("pieces"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        graft.functions.TextFunctions.bpe_encode(col("word"), merges).as("pieces")))
     val result = docs
       .select(col("doc_id"),
         explode(TextAnalysis.tokens(lower(col("text")))).as("word"))
       .filter(length(col("word")) > 0)
       .join(words, "word")
       .select(col("doc_id"), col("word"), col("pieces"))
-    EncodeStage(words, result)
+    Stage(result, Seq(words))
   }
 
   /** The learned merge table alone (q98's gate output). */

@@ -177,14 +177,6 @@ object Curation {
         when(col("contam_frac") >= flagThreshold, 1).otherwise(0))
   }
 
-  /** The sequence-packing stage with its cache handle: `result` is the
-    * packed table, `unpersist()` releases the shared token-count
-    * projection after the consuming action (like [[Dedup.LshStage]]).
-    */
-  case class PackStage(base: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { base.unpersist(); () }
-  }
-
   /** Default per-language block fan-out for [[packSequences]], mirrored in
     * the q77 oracle SQL.
     */
@@ -213,7 +205,7 @@ object Curation {
     * block still streams through one task, so size blocks to executors.
     */
   def packStage(docs: DataFrame, ctxTokens: Int = 256,
-                nBlocks: Int = DefaultPackBlocks): PackStage = {
+                nBlocks: Int = DefaultPackBlocks): Stage = {
     // materialized (r20, was lazily persisted): the window branch and the
     // block-total branch both consume it in ONE action, and a lazy cache
     // is raced by the two concurrent stages — each re-tokenizing the
@@ -222,7 +214,7 @@ object Curation {
       docs.select(col("doc_id"), col("lang"),
         size(TextAnalysis.tokens(col("text"))).as("n_tokens"),
         packBlock(nBlocks)))
-    PackStage(base, packFromBase(base, ctxTokens))
+    Stage(packFromBase(base, ctxTokens), Seq(base))
   }
 
   /** The deterministic md5 block bucket of `doc_id` — the per-language
@@ -264,10 +256,6 @@ object Curation {
           .cast("int").as("spans_boundary"))
   }
 
-  /** [[packStage]]'s result; the shared token-count cache stays for the
-    * session unless the caller releases it through the stage handle or
-    * clears the session cache between queries, as Bench/Verify do.
-    */
   def packSequences(docs: DataFrame, ctxTokens: Int = 256,
                     nBlocks: Int = DefaultPackBlocks): DataFrame =
     packStage(docs, ctxTokens, nBlocks).result
@@ -296,28 +284,22 @@ object Curation {
     * Documents with NULL quality (empty text) are never selected. All
     * cumulative arithmetic is integer token counts — bit-stable under any
     * execution order, hash-gateable cross-engine.
+    *
+    * The scored projection feeds the bucket histogram, the whole-bucket
+    * branch and the boundary-bucket branch, so it persists once instead
+    * of scanning (and re-scoring) the corpus three times.
     */
-  /** The budget-selection stage with its cache handle ([[PackStage]]
-    * pattern): the scored projection feeds the bucket histogram, the
-    * whole-bucket branch, and the boundary-bucket branch, so it persists
-    * once instead of scanning (and re-scoring) the corpus three times.
-    */
-  case class BudgetStage(enriched: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { enriched.unpersist(); () }
-  }
-
-  def budgetStage(docs: DataFrame, budgetTokens: Long): BudgetStage = {
+  def budgetStage(docs: DataFrame, budgetTokens: Long): Stage = {
     // lazily persisted: budgetFromEnriched's whole-bucket and boundary
     // branches both wait on the BROADCAST bucket histogram, whose own
     // aggregate is the single leaf exchange over this relation — the
     // first action populates the cache with no racing consumer
-    val enriched = docs.select(col("doc_id"),
+    val enriched = Stages.persisted(docs.select(col("doc_id"),
         size(TextAnalysis.tokens(col("text"))).as("n_tokens"),
         TextAnalysis.qualityScore(col("text")).as("q"))
       .filter(col("q").isNotNull)
-      .withColumn("qb", floor(col("q") * 100).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    BudgetStage(enriched, budgetFromEnriched(enriched, budgetTokens))
+      .withColumn("qb", floor(col("q") * 100).cast("int")))
+    Stage(budgetFromEnriched(enriched, budgetTokens), Seq(enriched))
   }
 
   /** Budget selection over a PRE-COMPUTED `(doc_id, n_tokens, q, qb)`
@@ -510,10 +492,7 @@ object Curation {
   def qualityPercentile(docs: DataFrame): DataFrame =
     qualityPercentileStage(docs).result
 
-  /** [[qualityPercentile]] with its cache handle (ADVICE r10: the
-    * persisted scored projection is released via `unpersist()`).
-    */
-  def qualityPercentileStage(docs: DataFrame): TextAnalysis.CachedStage = {
+  def qualityPercentileStage(docs: DataFrame): Stage = {
     // kernel counts materialize as attributes BEFORE the quality
     // formula so each text kernel runs exactly once per row —
     // CollapseProject will not re-inline non-cheap expressions the
@@ -531,12 +510,11 @@ object Curation {
     // the histogram's exchange is the single leaf over this relation —
     // the first action populates the cache with no racing consumer and
     // no extra count job is needed
-    val scored = counts.select(col("doc_id"), col("source"),
+    val scored = Stages.persisted(counts.select(col("doc_id"), col("source"),
         TextAnalysis.qualityExpr(col("c"), col("w"), col("p"), col("s"))
           .as("quality"))
-      .filter(col("quality").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    TextAnalysis.CachedStage(scored, percentileFromScored(scored))
+      .filter(col("quality").isNotNull))
+    Stage(percentileFromScored(scored), Seq(scored))
   }
 
   /** Percentiles over a PRE-COMPUTED non-null `(doc_id, source, quality)`
@@ -563,15 +541,6 @@ object Curation {
         // rounding (ratioQ), same rational
         graft.functions.AggFunctions.ratioQ(
           col("cum") * 2 - col("cnt"), col("n") * 2, 4).as("pctl"))
-  }
-
-  /** [[curationDag]]'s handle: `dropIds` is the checkpointed dropped-id
-    * relation the result plan reads (release via [[release]] once the
-    * result is consumed — it is a raw-RDD checkpoint, outside
-    * `clearCache`'s reach, the [[Stages.releaseCheckpoint]] discipline).
-    */
-  case class CurationDagStage(dropIds: DataFrame, result: DataFrame) {
-    def release(): Unit = Stages.releaseCheckpoint(dropIds)
   }
 
   /** The COMPOSED end-to-end curation DAG — the four-stage pipeline a
@@ -603,12 +572,10 @@ object Curation {
     * state release BEFORE the budget/packing stages run — peak cached
     * footprint is one stage's, not the whole DAG's (SURVEY.md's
     * "Round-11 composed-DAG probe": 1 M docs with zero cached RDDs
-    * left). The shared projection and packing base fall to the session
-    * cache clear Bench/Verify issue; `dropIds` outlives the call by
-    * design (the result plan reads it) — callers release it via the
-    * stage handle, as SparkEntry's q119 does for the previous invocation on re-run.
+    * left). The handle owns the four cached relations and the dropped-id
+    * checkpoint, which the result plan reads.
     */
-  def curationDagStage(docs: DataFrame, ctxTokens: Int = 256): CurationDagStage = {
+  def curationDagStage(docs: DataFrame, ctxTokens: Int = 256): Stage = {
     // ONE kernel scan feeds the percentile histogram, the survivor
     // argmax, the budget selection, AND the packing base (the q53 fusion
     // discipline applied DAG-wide: composing the standalone stages would
@@ -621,10 +588,10 @@ object Curation {
     // count fills both caches with zero racing — where the first action
     // used to race the histogram leaf against the survivor argmax leaf,
     // re-running the kernel scan (r20, see [[Stages.materialized]])
-    val scored = docs.select(col("doc_id"), col("source"), col("lang"),
+    val scored = Stages.persisted(docs.select(col("doc_id"),
+        col("source"), col("lang"),
         TextAnalysis.qualityScore(col("text")).as("quality"),
-        size(TextAnalysis.tokens(col("text"))).as("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        size(TextAnalysis.tokens(col("text"))).as("n_tokens")))
     // keptIds is consumed by the LSH input join (first action) AND the
     // deduped-corpus build (every later action) — uncached, the whole
     // percentile subtree (histogram aggregate + cumulative window + join
@@ -651,9 +618,8 @@ object Curation {
     // times and the total/packing branches twice more — without the
     // cache, the percentile subtree under keptIds would re-execute per
     // consumer (budgetFromEnriched's contract: cached or cheap)
-    val dd = scored.join(keptIds, "doc_id")
-      .join(drop, Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dd = Stages.persisted(scored.join(keptIds, "doc_id")
+      .join(drop, Seq("doc_id"), "left_anti"))
     // sum over an EMPTY deduped relation is SQL NULL — an empty corpus
     // (or one that percentile-filters to nothing) must yield an empty
     // packing, not a driver NPE (DegenerateInputSpec)
@@ -672,12 +638,10 @@ object Curation {
       dd.join(selected, "doc_id")
         .select(col("doc_id"), col("lang"), col("n_tokens"),
           packBlock(DefaultPackBlocks)))
-    CurationDagStage(drop, packFromBase(base, ctxTokens))
+    Stage(packFromBase(base, ctxTokens), Seq(scored, keptIds, dd, base),
+      Seq(drop))
   }
 
-  /** [[curationDagStage]]'s result (handle discipline as the other staged
-    * operators).
-    */
   def curationDag(docs: DataFrame, ctxTokens: Int = 256): DataFrame =
     curationDagStage(docs, ctxTokens).result
 
@@ -719,8 +683,7 @@ object Curation {
     // side — persisted so the window-cascade selection runs ONCE
     // (review r13; released by the session's clearCache like the other
     // one-shot stages)
-    val sel = mixSelected(docs, targets, budgetTokens)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sel = Stages.persisted(mixSelected(docs, targets, budgetTokens))
     val spent = sel.groupBy(col("source"))
       .agg(sum(col("n_tokens")).as("spent"))
     sel.join(broadcast(spent), "source")
@@ -764,11 +727,10 @@ object Curation {
     val budgets = targets.toSeq.sorted
       .map { case (s, share) => (s, math.floor(budgetTokens * share).toLong) }
       .toDF("source", "budget")
-    val e = docs.select(col("doc_id"), col("source"),
+    val e = Stages.persisted(docs.select(col("doc_id"), col("source"),
         size(TextAnalysis.tokens(col("text"))).as("n_tokens"),
         hashBucket(col("doc_id")).as("hb"))
-      .join(broadcast(budgets), "source")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(broadcast(budgets), "source"))
     val wB = Window.partitionBy(col("source")).orderBy(col("hb"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val b = e.groupBy(col("source"), col("hb"))
@@ -909,25 +871,23 @@ object Curation {
     * not). Majority language resolves argmax by (count desc, lang asc)
     * via the q102 join-back pattern — never a window over the corpus.
     *
-    * Scale shape: one kernel scan into a persisted projection (the
-    * CachedStage discipline); the dup flag is an 8-byte-fp self-
-    * aggregate + left join; everything else folds map-side to ≤ #sources
-    * (× #langs) rows.
+    * Scale shape: one kernel scan into a persisted projection; the dup
+    * flag is an 8-byte-fp self-aggregate + left join; everything else
+    * folds map-side to ≤ #sources (× #langs) rows.
     */
   def sourceDatacard(docs: DataFrame): DataFrame =
     sourceDatacardStage(docs).result
 
-  /** [[sourceDatacard]] with its cache handle. The stats projection is
-    * MATERIALIZED, not just persisted (r20): it fans out into the dup-fp
-    * aggregate, the base-counts join leg, and the language census — three
-    * exchange subtrees of one action that AQE submits concurrently, so a
-    * lazy cache was raced and the whole upstream chain (text kernels —
-    * and in q130's composition the WARC read + curate + merge) recomputed
-    * per consumer (see [[Stages.materialized]]).
+  /** The stats projection is MATERIALIZED, not just persisted (r20): it
+    * fans out into the dup-fp aggregate, the base-counts join leg, and
+    * the language census — three exchange subtrees of one action that
+    * AQE submits concurrently, so a lazy cache was raced and the whole
+    * upstream chain (text kernels — and in q130's composition the WARC
+    * read + curate + merge) recomputed per consumer.
     */
-  def sourceDatacardStage(docs: DataFrame): TextAnalysis.CachedStage = {
+  def sourceDatacardStage(docs: DataFrame): Stage = {
     val enr = Stages.materialized(docCardStats(docs))
-    TextAnalysis.CachedStage(enr, datacardFromStats(enr))
+    Stage(datacardFromStats(enr), Seq(enr))
   }
 
   /** The per-document card-stats artifact [[sourceDatacardIncremental]]
@@ -989,18 +949,17 @@ object Curation {
                                 priorStats: DataFrame): DataFrame =
     sourceDatacardIncrementalStage(incoming, priorStats).result
 
-  /** [[sourceDatacardIncremental]] with its cache handle — the refreshed
-    * stats relation feeds three aggregation branches (dup-fp, base
-    * counts, language argmax), so it persists exactly like the bootstrap
-    * path's projection; without it the BATCH would pay its text kernels
-    * three times and the artifact three reads.
+  /** The refreshed stats relation feeds three aggregation branches
+    * (dup-fp, base counts, language argmax), so it persists exactly like
+    * the bootstrap path's projection; without it the BATCH would pay its
+    * text kernels three times and the artifact three reads.
     */
   def sourceDatacardIncrementalStage(incoming: DataFrame,
-                                     priorStats: DataFrame): TextAnalysis.CachedStage = {
+                                     priorStats: DataFrame): Stage = {
     // materialized like the bootstrap path (r20): same three-branch
     // fan-out, raced identically when lazily persisted
     val enr = Stages.materialized(docCardStatsIncremental(incoming, priorStats))
-    TextAnalysis.CachedStage(enr, datacardFromStats(enr))
+    Stage(datacardFromStats(enr), Seq(enr))
   }
 
   /** The card aggregation body over a stats relation — corpus text never
@@ -1089,29 +1048,20 @@ object Curation {
     * fixed quantization) instead.
     */
   def importanceResample(docs: DataFrame, targetSource: String,
-                         n: Int = DefaultImportanceN): DataFrame = {
-    val stage = importanceStage(docs, targetSource, n)
-    stage.result
-  }
+                         n: Int = DefaultImportanceN): DataFrame =
+    importanceStage(docs, targetSource, n).result
 
-  /** [[importanceResample]] with its cache handle (the persisted tf
-    * relation feeds both the model fold and the scoring join).
-    * Library callers composing operators should prefer THIS entry point
-    * and `unpersist()` the handle once the selection is materialized —
-    * the convenience wrapper leaves the tf relation cached (the
-    * vocabCoverage/sourceDivergence precedent), which Bench/Verify clear
-    * per query but a long-lived session must release itself.
-    */
   def importanceStage(docs: DataFrame, targetSource: String,
-                      n: Int = DefaultImportanceN): TextAnalysis.CachedStage = {
-    val tf = docs
+                      n: Int = DefaultImportanceN): Stage = {
+    // persisted: the tf relation feeds both the model fold and the
+    // scoring join
+    val tf = Stages.persisted(docs
       .select(col("doc_id"), col("source"),
         explode(TextAnalysis.tokens(lower(col("text")))).as("tok"))
       .select(col("doc_id"), col("source"),
         TextAnalysis.fp60(col("tok")).as("fp"))
       .groupBy(col("doc_id"), col("source"), col("fp"))
-      .agg(count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("k")))
     val tgt = col("source") === targetSource
     val voc = tf.groupBy(col("fp"))
       .agg(sum(when(tgt, col("k")).otherwise(lit(0L))).as("tcnt"),
@@ -1133,6 +1083,6 @@ object Curation {
         round(col("w") / col("n_tokens"), 4).as("avg_lr"))
       .orderBy(col("avg_lr").desc, col("doc_id").asc)
       .limit(n)
-    TextAnalysis.CachedStage(tf, result)
+    Stage(result, Seq(tf))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.{min_hash_sig, sim_hash64, word_shingles}
-import graft.operators.Stages.materialized
+import graft.operators.Stages.{materialized, persisted}
 
 /** Deduplication operators over the `documents` table: exact, MinHash+LSH,
   * SimHash, and windowed n-gram Jaccard. Embedding-space near-dup lives in
@@ -103,22 +103,6 @@ object Dedup {
     when(u === 0, lit(null).cast("double")).otherwise(q)
   }
 
-  /** MinHash LSH near-dup detection with exact-Jaccard verification of the
-    * candidates (the classic two-phase LSH dedup): candidates from band
-    * collisions, then keep pairs with true Jaccard >= threshold.
-    *
-    * One-scan shape: the distinct-shingle index persists and EVERYTHING
-    * derives from it — band hashes (minhash over the shingle SET equals
-    * minhash over the raw multiset), the capped band relation (also
-    * persisted: both sides of the candidate self-join consume it), and
-    * the two verification joins. The corpus text is scanned and shingled
-    * exactly once.
-    */
-  case class NearDupStage(index: DataFrame, capped: DataFrame,
-                          result: DataFrame) {
-    def unpersist(): Unit = { index.unpersist(); capped.unpersist(); () }
-  }
-
   /** Drop every row whose bucket (the `keys` tuple) holds more than
     * `maxBucket` rows — without ever buffering a bucket. The hot-bucket
     * list is a map-side-combining `groupBy(keys).agg(count)` (a viral
@@ -143,17 +127,26 @@ object Dedup {
     rel.join(hot, keys, "left_anti")
   }
 
+  /** MinHash LSH near-dup detection with exact-Jaccard verification of the
+    * candidates (the classic two-phase LSH dedup): candidates from band
+    * collisions, then keep pairs with true Jaccard >= threshold.
+    *
+    * One-scan shape: the distinct-shingle index persists and EVERYTHING
+    * derives from it — band hashes (minhash over the shingle SET equals
+    * minhash over the raw multiset), the capped band relation (also
+    * persisted: both sides of the candidate self-join consume it), and
+    * the two verification joins. The corpus text is scanned and shingled
+    * exactly once.
+    */
   def minhashNearDupsStage(docs: DataFrame, threshold: Double,
-                           maxBucket: Int = DefaultMaxBucket): NearDupStage = {
-    val idx = docs.select(col("doc_id"),
-        array_distinct(shingles(col("text"))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                           maxBucket: Int = DefaultMaxBucket): Stage = {
+    val idx = persisted(docs.select(col("doc_id"),
+        array_distinct(shingles(col("text"))).as("sh")))
     // both references of the band relation inside capHotBuckets (hot-list
     // aggregate + anti-join left) derive from the persisted index, so the
     // text is still shingled exactly once
-    val capped = capHotBuckets(bandsFromIndex(idx),
-        Seq("band_idx", "band_hash"), maxBucket)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val capped = persisted(capHotBuckets(bandsFromIndex(idx),
+        Seq("band_idx", "band_hash"), maxBucket))
     val a = capped.select(col("band_idx"), col("band_hash"), col("doc_id").as("id_a"))
     val b = capped.select(col("band_idx"), col("band_hash"), col("doc_id").as("id_b"))
     val cands = a.join(b, Seq("band_idx", "band_hash"))
@@ -166,12 +159,9 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         jaccardQ(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    NearDupStage(idx, capped, result)
+    Stage(result, Seq(idx, capped))
   }
 
-  /** [[minhashNearDupsStage]]'s result (handle discipline as the other
-    * staged operators — Bench/Verify clear the session cache per query).
-    */
   def minhashNearDups(docs: DataFrame, threshold: Double): DataFrame =
     minhashNearDupsStage(docs, threshold).result
 
@@ -264,14 +254,9 @@ object Dedup {
                          maxBucket: Int = DefaultMaxBucket): DataFrame =
     minhashCalibrationStage(docs, maxBucket).result
 
-  /** The calibration relation with its cache handle (ADVICE r10: the
-    * one-shot operators leaned on session-level cache clearing; the
-    * handle matches the [[NearDupStage]]/LmFusedStage convention so
-    * library callers composing operators can release the shingle index
-    * explicitly).
-    *
-    * This relation is also the SHARED LSH pair stage: because calibration
-    * is unfiltered, `result.filter(jaccard >= t)` is bit-identical to
+  /** The calibration relation is also the SHARED LSH pair stage: because
+    * calibration is unfiltered, `result.filter(jaccard >= t)` is
+    * bit-identical to
     * [[minhashNearDupsStage]]'s verified pairs at threshold t (same
     * shingles, same banding via [[bandsFromSig]], same hot-bucket cap,
     * same rounded exact-Jaccard verification — DedupSpec pins the
@@ -280,18 +265,13 @@ object Dedup {
     * it instead of re-deriving the shingle→sig→band→cap→self-join
     * pipeline per query (VERDICT r10 #1).
     */
-  case class CalibrationStage(index: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { index.unpersist(); () }
-  }
-
   def minhashCalibrationStage(docs: DataFrame,
-                              maxBucket: Int = DefaultMaxBucket): CalibrationStage = {
-    val idx = docs.select(col("doc_id"),
+                              maxBucket: Int = DefaultMaxBucket): Stage = {
+    val idx = persisted(docs.select(col("doc_id"),
         array_distinct(shingles(col("text"))).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"),
-        minhashSignature(col("sh"), MinhashK).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        minhashSignature(col("sh"), MinhashK).as("sig")))
     val bands = bandsFromSig(idx)
     val capped = capHotBuckets(bands, Seq("band_idx", "band_hash"), maxBucket)
     val a = capped.select(col("band_idx"), col("band_hash"), col("doc_id").as("id_a"))
@@ -315,12 +295,12 @@ object Dedup {
         jaccardQ(col("sh_a"), col("sh_b")).as("jaccard"))
       .withColumn("abs_err",
         round(abs(col("est_jaccard") - col("jaccard")), 4))
-    CalibrationStage(idx, result)
+    Stage(result, Seq(idx))
   }
 
   /** [[minhashCalibrationStage]]'s result restricted to verified pairs:
-    * bit-identical to [[minhashNearDups]] at the same threshold (see the
-    * [[CalibrationStage]] scaladoc; DedupSpec pins it). This is what the
+    * bit-identical to [[minhashNearDups]] at the same threshold (see
+    * [[minhashCalibrationStage]]; DedupSpec pins it). This is what the
     * SparkEntry memo hands every pair consumer.
     */
   def pairsFromCalibration(calib: DataFrame, threshold: Double): DataFrame =
@@ -450,34 +430,25 @@ object Dedup {
     * is the better near-dup measure as well as the scalable one. This is
     * the 100 TB shape: distribute by posting list, bound the largest list.
     */
-  /** [[windowedJaccardPairsStage]]'s capped posting-list index with its
-    * cache handle: `sizes`, BOTH self-join sides, and the Jaccard math
-    * all consume the persisted index, so the corpus is shingled during
-    * cache fill (the hot-list aggregate + the anti-join left) and never
-    * again — without the cache the three references re-planned the whole
-    * scan+explode+cap pipeline each (eight corpus scans in the plan).
-    */
-  case class JaccardStage(inv: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { inv.unpersist(); () }
-  }
-
   def windowedJaccardPairs(docs: DataFrame, idWindow: Int, threshold: Double,
                            maxDf: Int = DefaultMaxShingleDf): DataFrame =
     windowedJaccardPairsStage(docs, idWindow, threshold, maxDf).result
 
   def windowedJaccardPairsStage(docs: DataFrame, idWindow: Int,
                                 threshold: Double,
-                                maxDf: Int = DefaultMaxShingleDf): JaccardStage = {
+                                maxDf: Int = DefaultMaxShingleDf): Stage = {
     val sh = docs
       .select(col("doc_id"), array_distinct(shingles(col("text"))).as("sh"))
       .filter(size(col("sh")) > 0)
     // document frequency via a map-side-combining groupBy on the posting
     // list + anti-join against the (tiny) hot-shingle list — NOT a window
     // over `s`: the hot shingles ("all rights reserved") are exactly the
-    // partitions a window would buffer whole in one task (VERDICT r7 #1)
-    val inv = capHotBuckets(
-        sh.select(col("doc_id"), explode(col("sh")).as("s")), Seq("s"), maxDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // partitions a window would buffer whole in one task (VERDICT r7 #1).
+    // Persisted: `sizes`, BOTH self-join sides and the Jaccard math all
+    // consume it, so the corpus is shingled once (without the cache the
+    // three references re-planned the scan+explode+cap pipeline each)
+    val inv = persisted(capHotBuckets(
+        sh.select(col("doc_id"), explode(col("sh")).as("s")), Seq("s"), maxDf))
     val sizes = inv.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = inv.as("a")
       .join(inv.as("b"), col("a.s") === col("b.s") &&
@@ -498,7 +469,7 @@ object Dedup {
         graft.functions.AggFunctions.ratioQ(col("inter"),
           col("n_a") + col("n_b") - col("inter"), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    JaccardStage(inv, result)
+    Stage(result, Seq(inv))
   }
 
   /** Connected components over near-dup pairs: every document that appears
@@ -653,7 +624,7 @@ object Dedup {
       val doPersist = edgeCount >= persistMinEdges
       val large =
         if (doPersist)
-          largePlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          persisted(largePlan)
         else largePlan
       // small-star on the larger→smaller edges: the center and its
       // non-min smaller neighbors re-link to the smallest of them
@@ -695,14 +666,12 @@ object Dedup {
     * DedupSpec equivalence tests run against.
     */
   def nearDupClustersMinLabel(pairs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     // each round frees the previous round's checkpoint through its RDD
     // handle (Stages.releaseCheckpoint)
-    val edges = pairs
+    val edges = persisted(pairs
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(MEMORY_AND_DISK)
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
       .localCheckpoint(true)
@@ -730,14 +699,6 @@ object Dedup {
     labels.select(col("id").as("doc_id"), col("lbl").as("cluster"))
   }
 
-  /** The boilerplate-removal stage with its cache handle (the
-    * [[graft.operators.TextAnalysis.HeavyHittersStage]] pattern — both
-    * persist a corpus-wide explode that two aggregates consume).
-    */
-  case class BoilerplateStage(chunks: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { chunks.unpersist(); () }
-  }
-
   /** Boilerplate removal at chunk granularity — the CCNet/C4-style
     * paragraph-dedup pass (Wenzek et al. 2020; Raffel et al. 2020 §2.2):
     * fixed `chunkTokens`-token chunks of the lowered text whose content
@@ -761,13 +722,12 @@ object Dedup {
     * shuffle keys throughout.
     */
   def boilerplateStage(docs: DataFrame, chunkTokens: Int = 16,
-                       maxDf: Int = 1): BoilerplateStage = {
-    val chunks = docs.select(col("doc_id"),
+                       maxDf: Int = 1): Stage = {
+    val chunks = persisted(docs.select(col("doc_id"),
         posexplode(graft.functions.TextFunctions
           .word_chunks(lower(col("text")), chunkTokens)))
       .select(col("doc_id"), col("pos"), col("col").as("chunk"),
-        conv(substring(md5(col("col")), 1, 15), 16, 10).cast("long").as("ch"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        conv(substring(md5(col("col")), 1, 15), 16, 10).cast("long").as("ch")))
     val df = chunks.groupBy(col("ch")).agg(count(lit(1)).as("df"))
     val result = chunks.join(df, "ch")
       .groupBy(col("doc_id"))
@@ -779,12 +739,9 @@ object Dedup {
         array_join(transform(array_sort(collect_list(
           when(col("df") <= maxDf, struct(col("pos"), col("chunk"))))),
           x => x.getField("chunk")), " ").as("clean_text"))
-    BoilerplateStage(chunks, result)
+    Stage(result, Seq(chunks))
   }
 
-  /** [[boilerplateStage]]'s result; release the shared chunk explode via
-    * the handle or the session cache, as Bench/Verify do.
-    */
   def removeBoilerplate(docs: DataFrame, chunkTokens: Int = 16,
                         maxDf: Int = 1): DataFrame =
     boilerplateStage(docs, chunkTokens, maxDf).result
@@ -861,14 +818,6 @@ object Dedup {
       .distinct() // a pair may collide in several blocks
   }
 
-  /** The span-dedup stage with its cache handle (the [[BoilerplateStage]]
-    * pattern — the per-doc span set is consumed by both the df aggregate
-    * and the join back).
-    */
-  case class SpanDedupStage(spans: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { spans.unpersist(); () }
-  }
-
   /** Substring-level exact dedup (Lee et al., ACL'22 "Deduplicating
     * Training Data Makes Language Models Better"): instead of whole-doc
     * fingerprints, fixed `spanTokens`-token spans starting every `stride`
@@ -899,14 +848,13 @@ object Dedup {
     * exchange.
     */
   def spanDedupStage(docs: DataFrame, spanTokens: Int = 16, stride: Int = 8,
-                     maxDupFrac: Double = 0.5): SpanDedupStage = {
-    val spans = docs.select(col("doc_id"),
+                     maxDupFrac: Double = 0.5): Stage = {
+    val spans = persisted(docs.select(col("doc_id"),
         explode(graft.functions.TextFunctions
           .word_chunks(lower(col("text")), spanTokens, stride)).as("span"))
       .select(col("doc_id"),
         conv(substring(md5(col("span")), 1, 15), 16, 10).cast("long").as("span_fp"))
-      .groupBy(col("doc_id"), col("span_fp")).agg(count(lit(1)).as("occ"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("doc_id"), col("span_fp")).agg(count(lit(1)).as("occ")))
     // document frequency per span: pairs are distinct by construction, so
     // count(*) IS the doc count — no countDistinct shuffle
     val df = spans.groupBy(col("span_fp")).agg(count(lit(1)).as("span_df"))
@@ -919,12 +867,9 @@ object Dedup {
           col("dup_spans"), col("n_spans"), 4).as("dup_frac"),
         (col("dup_spans") / col("n_spans") <= maxDupFrac)
           .cast("int").as("keep"))
-    SpanDedupStage(spans, result)
+    Stage(result, Seq(spans))
   }
 
-  /** [[spanDedupStage]]'s result; release the shared span pairs via the
-    * handle or the session cache, as Bench/Verify do.
-    */
   def spanDedup(docs: DataFrame, spanTokens: Int = 16, stride: Int = 8,
                 maxDupFrac: Double = 0.5): DataFrame =
     spanDedupStage(docs, spanTokens, stride, maxDupFrac).result
@@ -1033,23 +978,15 @@ object Dedup {
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_hash")
 
-  /** The incremental-dedup stage with its cache handles: both sides'
-    * [[dedupIndex]] projections persist, so each corpus scans its text
-    * ONCE (fingerprint + shingles + bands all derive from the cache).
+  /** Incremental dedup: both sides' [[dedupIndex]] projections persist,
+    * so each corpus scans its text ONCE (fingerprint + shingles + bands
+    * all derive from the cache).
     */
-  case class IncrementalDedupStage(corpusIndex: DataFrame,
-                                   incomingIndex: DataFrame,
-                                   result: DataFrame) {
-    def unpersist(): Unit = { corpusIndex.unpersist(); incomingIndex.unpersist(); () }
-  }
-
   def dedupAgainstCorpusStage(corpus: DataFrame, incoming: DataFrame,
                               threshold: Double = 0.5,
-                              maxBucket: Int = DefaultMaxBucket): IncrementalDedupStage = {
-    val corp = dedupIndex(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inc = dedupIndex(incoming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                              maxBucket: Int = DefaultMaxBucket): Stage = {
+    val corp = persisted(dedupIndex(corpus))
+    val inc = persisted(dedupIndex(incoming))
     val corpFp = corp.select(col("fp64")).distinct()
       .withColumn("in_corpus", lit(1))
     // the corpus band index carries the same hot-bucket cap as
@@ -1079,12 +1016,9 @@ object Dedup {
         coalesce(col("n_near"), lit(0L)).as("n_near"),
         (coalesce(col("in_corpus"), lit(0)) === 0 &&
           coalesce(col("n_near"), lit(0L)) === 0).cast("int").as("keep"))
-    IncrementalDedupStage(corp, inc, result)
+    Stage(result, Seq(corp, inc))
   }
 
-  /** [[dedupAgainstCorpusStage]]'s result (handle discipline as the other
-    * staged operators — Bench/Verify clear the session cache per query).
-    */
   def dedupAgainstCorpus(corpus: DataFrame, incoming: DataFrame,
                          threshold: Double = 0.5,
                          maxBucket: Int = DefaultMaxBucket): DataFrame =
@@ -1139,25 +1073,6 @@ object Dedup {
         (col("n_hits") > 0).cast("int").as("contaminated"))
   }
 
-  /** [[prefixSimilarityJoinStage]]'s shared per-doc fingerprint relation
-    * with its cache handle: the document-frequency aggregate and the
-    * per-doc ordered-set fold both consume the persisted (doc_id, fp)
-    * relation, so the corpus is shingled exactly once.
-    */
-  case class PrefixJoinStage(fps: DataFrame, result: DataFrame,
-                             cached: Seq[DataFrame] = Nil) {
-    def unpersist(): Unit = {
-      fps.unpersist(); cached.foreach(_.unpersist()); ()
-    }
-  }
-
-  /** Result-only convenience over [[prefixSimilarityJoinStage]]. NOTE
-    * (ADVICE r19): the stage's internal relations stay persisted after
-    * the caller's action — one-shot sessions that clear the catalog cache
-    * afterwards (Bench/Verify) may use this form; long-lived callers must
-    * use the Stage form and release the handle. Same contract for
-    * [[prefixJoinAgainstCorpus]] and [[containmentJoinAgainstCorpus]].
-    */
   def prefixSimilarityJoin(docs: DataFrame, threshold: Double): DataFrame =
     prefixSimilarityJoinStage(docs, threshold).result
 
@@ -1209,7 +1124,7 @@ object Dedup {
     * posting lists and lose exactness) at web scale.
     */
   def prefixSimilarityJoinStage(docs: DataFrame,
-                                threshold: Double): PrefixJoinStage = {
+                                threshold: Double): Stage = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val t = lit(threshold)
@@ -1238,7 +1153,7 @@ object Dedup {
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("n_shared_prefix"))
       .select(col("id_a"), col("id_b"))
-    PrefixJoinStage(inv, verifyPairs(cand, sets, sets, t), Seq(sets))
+    Stage(verifyPairs(cand, sets, sets, t), Seq(inv, sets))
   }
 
   /** Distinct 60-bit shingle fps per doc; fp-level distinct so a same-doc
@@ -1303,18 +1218,6 @@ object Dedup {
       .filter(col("j") >= t) // selection on the raw ratio, like the oracle
       .select(col("id_a"), col("id_b"), col("jq").as("jaccard"))
 
-  /** [[prefixJoinAgainstCorpusStage]]'s handles: both sides' fingerprint
-    * relations persist (each corpus is shingled once).
-    */
-  case class PrefixIncStage(corpusFps: DataFrame, incomingFps: DataFrame,
-                            result: DataFrame,
-                            cached: Seq[DataFrame] = Nil) {
-    def unpersist(): Unit = {
-      corpusFps.unpersist(); incomingFps.unpersist()
-      cached.foreach(_.unpersist()); ()
-    }
-  }
-
   def prefixJoinAgainstCorpus(corpus: DataFrame, incoming: DataFrame,
                               threshold: Double): DataFrame =
     prefixJoinAgainstCorpusStage(corpus, incoming, threshold).result
@@ -1334,7 +1237,7 @@ object Dedup {
     * doc, jaccard).
     */
   def prefixJoinAgainstCorpusStage(corpus: DataFrame, incoming: DataFrame,
-                                   threshold: Double): PrefixIncStage = {
+                                   threshold: Double): Stage = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val t = lit(threshold)
@@ -1357,8 +1260,8 @@ object Dedup {
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("n_shared_prefix"))
       .select(col("id_a"), col("id_b"))
-    PrefixIncStage(corpInv, incInv, verifyPairs(cand, incSets, corpSets, t),
-      Seq(corpSets, incSets))
+    Stage(verifyPairs(cand, incSets, corpSets, t),
+      Seq(corpInv, incInv, corpSets, incSets))
   }
 
   def containmentJoinAgainstCorpus(corpus: DataFrame, needles: DataFrame,
@@ -1398,15 +1301,14 @@ object Dedup {
     * so no corpus-wide sort_array runs just to check a few pairs.
     */
   def containmentJoinAgainstCorpusStage(corpus: DataFrame, needles: DataFrame,
-                                        threshold: Double): PrefixIncStage = {
+                                        threshold: Double): Stage = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val t = lit(threshold)
     // lazily persisted: the broadcast needle-fp build inside corpInv's
     // count below is the first (single) consumer and populates the
     // cache; the later needle-side subtrees read it
-    val needInv = shingleFps(needles)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val needInv = persisted(shingleFps(needles))
     // needle-fp semi filter (r20, guide §3.1/§6): EVERY consumer of the
     // corpus fp relation joins on fps that occur in some needle — the df
     // aggregate orders only needle shingles (orderedSets looks up needle
@@ -1463,6 +1365,6 @@ object Dedup {
           col("i"), col("na"), 4).as("cq"))
       .filter(col("c") >= t) // selection on the raw ratio, like the oracle
       .select(col("id_a"), col("id_b"), col("cq").as("containment"))
-    PrefixIncStage(corpInv, needInv, verified, Seq(needSets))
+    Stage(verified, Seq(corpInv, needInv, needSets))
   }
 }

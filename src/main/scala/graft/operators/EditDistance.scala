@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** EXACT edit-distance similarity join (every pair with Levenshtein
   * distance ≤ k) — the typo-tolerant entity-matching operator
@@ -48,16 +47,6 @@ import org.apache.spark.storage.StorageLevel
   * short-string branch (everything involved has core length ≤ 2k).
   */
 object EditDistance {
-
-  /** Handles for the shared distinct-string relation; release via
-    * [[EdJoinStage.unpersist]] or the session cache, as Bench/Verify do.
-    */
-  case class EdJoinStage(strings: DataFrame, result: DataFrame,
-                         cached: Seq[DataFrame] = Nil) {
-    def unpersist(): Unit = {
-      strings.unpersist(); cached.foreach(_.unpersist()); ()
-    }
-  }
 
   def editDistanceJoin(rows: DataFrame, idCol: String, strCol: String,
                        k: Int): DataFrame =
@@ -171,11 +160,11 @@ object EditDistance {
       .select(col("ps"), col("lt"), col("i"), col("seg"))
 
   def editDistanceJoinStage(rows: DataFrame, idCol: String, strCol: String,
-                            k: Int): EdJoinStage = {
+                            k: Int): Stage = {
     require(k >= 0 && k <= 8, s"edit-distance threshold must be in [0, 8], got $k")
-    val ids = rows.select(col(idCol).as("id"), col(strCol).as("s"))
-      .filter(col("s").isNotNull)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ids = Stages.persisted(
+      rows.select(col(idCol).as("id"), col(strCol).as("s"))
+        .filter(col("s").isNotNull))
     // cached (r20): the distinct-string relation is read by the two
     // stripAffix driver actions and again by the stripped projection —
     // unpersisted, each recomputed the distinct shuffle. stripAffix's
@@ -183,9 +172,8 @@ object EditDistance {
     // a lazy persist suffices; the stripped form fans out into the
     // probe/index/short/id-join subtrees of ONE action and must
     // materialize eagerly (see [[Stages.materialized]]). Both relations
-    // are distinct-string-sized and released via the stage handle.
-    val strsD0 = ids.select(col("s")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // are distinct-string-sized.
+    val strsD0 = Stages.persisted(ids.select(col("s")).distinct())
     val strsD = Stages.materialized(stripAffix(strsD0))
 
     // candidates: equi-join on (segment text, index, target length);
@@ -221,16 +209,7 @@ object EditDistance {
       .filter(col("id") < col("id2"))
       .select(col("id").as("id_a"), col("id2").as("id_b"),
         lit(0).as("dist"))
-    EdJoinStage(ids, cross.unionByName(within), Seq(strsD0, strsD))
-  }
-
-  /** Handles for the incremental form's two persisted id relations. */
-  case class EdIncStage(corpusIds: DataFrame, incomingIds: DataFrame,
-                        result: DataFrame, cached: Seq[DataFrame] = Nil) {
-    def unpersist(): Unit = {
-      corpusIds.unpersist(); incomingIds.unpersist()
-      cached.foreach(_.unpersist()); ()
-    }
+    Stage(cross.unionByName(within), Seq(ids, strsD0, strsD))
   }
 
   def editDistanceAgainstCorpus(corpus: DataFrame, incoming: DataFrame,
@@ -252,12 +231,11 @@ object EditDistance {
     */
   def editDistanceAgainstCorpusStage(corpus: DataFrame, incoming: DataFrame,
                                      idCol: String, strCol: String,
-                                     k: Int): EdIncStage = {
+                                     k: Int): Stage = {
     require(k >= 0 && k <= 8, s"edit-distance threshold must be in [0, 8], got $k")
     def side(df: DataFrame) =
-      df.select(col(idCol).as("id"), col(strCol).as("s"))
-        .filter(col("s").isNotNull)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      Stages.persisted(df.select(col(idCol).as("id"), col(strCol).as("s"))
+        .filter(col("s").isNotNull))
     val corpIds = side(corpus)
     val incIds = side(incoming)
     // cached (r20): the union-distinct feeds stripAffix's two driver
@@ -265,9 +243,8 @@ object EditDistance {
     // so a lazy persist suffices); the stripped form feeds both per-side
     // core relations plus both verify id-joins in one action and must
     // materialize eagerly (see [[Stages.materialized]])
-    val strsD0 = corpIds.select(col("s")).unionByName(incIds.select(col("s")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val strsD0 = Stages.persisted(
+      corpIds.select(col("s")).unionByName(incIds.select(col("s"))).distinct())
     val withCore = Stages.materialized(stripAffix(strsD0))
     // per-side distinct strings with cores: withCore is already distinct
     // on s, so a semi-join against the side's (persisted) strings keeps
@@ -295,6 +272,6 @@ object EditDistance {
       .join(incC.select(col("c").as("ca"), col("id").as("id_in")), "ca")
       .join(corpC.select(col("c").as("cb"), col("id").as("id_corp")), "cb")
       .select(col("id_in"), col("id_corp"), col("dist"))
-    EdIncStage(corpIds, incIds, result, Seq(strsD0, withCore))
+    Stage(result, Seq(corpIds, incIds, strsD0, withCore))
   }
 }

@@ -234,8 +234,7 @@ object QualityModel {
     */
   def train(docs: DataFrame, label: Column = labelHeuristic(),
             iters: Int = TrainIters, lr: Double = TrainLr): Array[Double] = {
-    val f = featureFrame(docs, label)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = Stages.persisted(featureFrame(docs, label))
     try {
       val n = f.count().toDouble
       var w = Array.fill(Dim)(0.0)

@@ -128,14 +128,12 @@ object Relational {
   def profileKeys(df: DataFrame, keyCol: String, topK: Int = 10): DataFrame =
     profileKeysStage(df, keyCol, topK).result
 
-  /** [[profileKeys]] with its cache handle: the distinct-key count
-    * relation feeds both the moment aggregate and the top-k heap —
-    * persisted so the input scans ONCE.
-    */
   def profileKeysStage(df: DataFrame, keyCol: String,
-                      topK: Int = 10): TextAnalysis.CachedStage = {
-    val counts = df.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                      topK: Int = 10): Stage = {
+    // persisted: the distinct-key counts feed both the moment aggregate
+    // and the top-k heap, so the input scans ONCE
+    val counts = Stages.persisted(
+      df.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("c")))
     val totals = counts.agg(sum(col("c")).as("n"),
       count(lit(1)).as("n_distinct"),
       sum(col("c") * log(col("c").cast("double"))).as("clogc"))
@@ -149,7 +147,7 @@ object Relational {
           col("topk"), col("n"), 4).as("topk_frac"),
         round(log(col("n").cast("double")) - col("clogc") / col("n"), 4)
           .as("entropy_nats"))
-    TextAnalysis.CachedStage(counts, result)
+    Stage(result, Seq(counts))
   }
 
   /** EXACT quantiles with bounded memory — the distributed-exact path that
@@ -183,22 +181,20 @@ object Relational {
                             ps: Seq[Double], nBuckets: Int = 1000): DataFrame =
     exactQuantilesTwoPassStage(df, groupCol, valCol, ps, nBuckets).result
 
-  /** [[exactQuantilesTwoPass]] with its cache handle. The #groups stats
-    * relation and the #groups×nBuckets histogram are each consumed by
-    * several branches (bucketing, target positions, the final join) —
-    * persisted, the input is scanned exactly three times (stats,
-    * histogram build, boundary ranking); unpersisted, every branch would
-    * re-scan to rebuild them. The cached relations are metadata-sized,
-    * never input-sized.
+  /** The #groups stats relation and the #groups×nBuckets histogram are
+    * each consumed by several branches (bucketing, target positions, the
+    * final join) — persisted, the input is scanned exactly three times
+    * (stats, histogram build, boundary ranking); unpersisted, every
+    * branch would re-scan to rebuild them. The cached relations are
+    * metadata-sized, never input-sized.
     */
   def exactQuantilesTwoPassStage(df: DataFrame, groupCol: String,
                                  valCol: String, ps: Seq[Double],
-                                 nBuckets: Int = 1000): QuantileStage = {
+                                 nBuckets: Int = 1000): Stage = {
     val g = col(groupCol)
-    val stats = df.groupBy(g).agg(count(lit(1)).as("n"),
+    val stats = Stages.persisted(df.groupBy(g).agg(count(lit(1)).as("n"),
       min(col(valCol).cast("double")).as("mn"),
-      max(col(valCol).cast("double")).as("mx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      max(col(valCol).cast("double")).as("mx")))
     // pass 1: equal-width bucket per row; degenerate all-equal groups
     // collapse to bucket 0
     val width = (col("mx") - col("mn")) / lit(nBuckets)
@@ -211,8 +207,8 @@ object Relational {
     val hist = bucketed.groupBy(g, col("bucket")).agg(count(lit(1)).as("c"))
     val wcum = Window.partitionBy(g).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val hc = hist.withColumn("cum_before", coalesce(sum(col("c")).over(wcum), lit(0L)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hc = Stages.persisted(hist.withColumn("cum_before",
+      coalesce(sum(col("c")).over(wcum), lit(0L))))
     // target positions: ⌊p(n−1)⌋ and ⌈p(n−1)⌉ per (group, p)
     val targets = stats
       .select(g, col("n"), explode(typedlit(ps)).as("p"))
@@ -233,13 +229,12 @@ object Relational {
     val wrank = Window.partitionBy(g, col("bucket")).orderBy(col("v"))
     // picked is ≤ 2·|ps|·#groups rows but derives from the boundary-bucket
     // scan — persisted so the lo and hi branches don't each re-run it
-    val picked = bucketed
+    val picked = Stages.persisted(bucketed
       .join(broadcast(tbuckets), Seq(groupCol, "bucket"))
       .withColumn("rn", row_number().over(wrank))
       .join(broadcast(tb), Seq(groupCol, "bucket"))
       .filter(col("rn") - 1 === col("tpos") - col("cum_before"))
-      .select(g, col("p"), col("side"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(g, col("p"), col("side"), col("v")))
     val lo = picked.filter(col("side") === 0)
       .select(g, col("p"), col("v").as("vlo"))
     val hi = picked.filter(col("side") === 1)
@@ -250,19 +245,7 @@ object Relational {
       .select(g, col("p"),
         round(col("vlo") + (rank - floor(rank)) * (col("vhi") - col("vlo")), 4)
           .as("q"))
-    QuantileStage(stats, hc, picked, result)
-  }
-
-  /** [[exactQuantilesTwoPassStage]]'s cache handle: the metadata-sized
-    * stats/histogram/picked relations persist so the INPUT is scanned
-    * exactly three times (stats, histogram build, boundary ranking) — all
-    * pure aggregates, never a buffered group.
-    */
-  case class QuantileStage(stats: DataFrame, hist: DataFrame,
-                           picked: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = {
-      stats.unpersist(); hist.unpersist(); picked.unpersist(); ()
-    }
+    Stage(result, Seq(stats, hc, picked))
   }
 
   /** Approximate quantiles — the 100 TB path for [[quantiles]], whose exact

@@ -726,14 +726,16 @@ object Similarity {
                     threshold: Double): DataFrame =
     semanticDedupStage(embeddings, model, threshold).result
 
-  /** [[semanticDedup]] with its cache handle: the scored member relation
-    * feeds both the argmin aggregate and the join-back, so it persists
-    * (it is group-members-sized — pairs-participating vectors only);
-    * unpersisted, the label⋈cells⋈centroid⋈embedding chain would scan
-    * the corpus twice.
+  /** The scored member relation feeds both the argmin aggregate and the
+    * join-back, so it persists (it is group-members-sized —
+    * pairs-participating vectors only); unpersisted, the
+    * label⋈cells⋈centroid⋈embedding chain would scan the corpus twice.
+    * On the distributed CC path the labels sit on a checkpoint this
+    * stage created; the handle owns it (never `scored`'s leaves, which
+    * include the model's cell checkpoint).
     */
   def semanticDedupStage(embeddings: DataFrame, model: KmeansModel,
-                         threshold: Double): graft.operators.TextAnalysis.CachedStage = {
+                         threshold: Double): Stage = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val pairs = cellNearDupPairs(embeddings, model.cells, threshold,
@@ -742,20 +744,19 @@ object Similarity {
       .withColumnRenamed("doc_id", "vec_id")
     val cents = model.centroids.toSeq.zipWithIndex
       .map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-    val scored = labels
+    val scored = Stages.persisted(labels
       .join(model.cells, "vec_id")
       .join(broadcast(cents), "cell")
       .join(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("cluster"), col("vec_id"),
-        round(vec_cosine(col("embedding"), col("centroid")), 6).as("c2c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        round(vec_cosine(col("embedding"), col("centroid")), 6).as("c2c")))
     val best = scored.groupBy(col("cluster"))
       .agg(min(struct(col("c2c"), col("vec_id"))).as("b"))
     val result = scored.join(best, "cluster")
       .select(col("cluster"), col("vec_id"),
         round(col("c2c"), 4).as("cos_centroid"),
         when(col("vec_id") === col("b.vec_id"), 1).otherwise(0).as("keep"))
-    graft.operators.TextAnalysis.CachedStage(scored, result)
+    Stage(result, Seq(scored), Seq(labels))
   }
 
   /** Symmetric int8 quantization of the embedding column — the storage
@@ -912,9 +913,9 @@ object Similarity {
                        queryFilter: DataFrame => DataFrame,
                        k: Int, probes: Seq[Int]): DataFrame = {
     require(probes.nonEmpty, "annFrontier needs at least one probe level")
-    val c = embeddings.select(col("vec_id"), col("embedding").as("emb"))
-      .join(model.cells, "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c = Stages.persisted(
+      embeddings.select(col("vec_id"), col("embedding").as("emb"))
+        .join(model.cells, "vec_id"))
     val queries = queryFilter(embeddings)
     val q = queries
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -922,8 +923,7 @@ object Similarity {
         posexplode(graft.functions.VectorFunctions.nearest_cells(
           col("embedding"), model.centroids.toIndexedSeq, probes.max)))
       .select(col("q_id"), (col("pos") + 1).as("rn"), col("col").as("cell"))
-    val truth = bruteTopK(embeddings, queries, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val truth = Stages.persisted(bruteTopK(embeddings, queries, k))
     probes.map { p =>
       val qp = qpAll.filter(col("rn") <= p).select(col("q_id"), col("cell"))
       val cand = c.join(broadcast(qp.join(q, "q_id")), Seq("cell"))
@@ -1119,13 +1119,12 @@ object Similarity {
     val m = model.m
     val kk = model.k
     val nAll = embeddings.count()
-    val c = embeddings
+    val c = Stages.persisted(embeddings
       .join(coarse.cells, "vec_id")
       .select(Seq(col("vec_id"), col("cell"),
         pqCodes(col("embedding"), model).as("codes")) ++
         resModel.map(rm => pqCodesResidual(col("embedding"), col("cell"),
-          coarse, rm).as("rcodes")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          coarse, rm).as("rcodes")): _*))
     val queries = queryFilter(embeddings)
     // golden queries driver-side (bounded — the recall-gate sample set):
     // T tables, |q|, residual-codebook tables, and per-cell q·c_coarse
@@ -1163,8 +1162,7 @@ object Similarity {
       when(cn > 0.0 && qnorm > 0.0, adc / (qnorm * sqrt(cn)))
         .otherwise(lit(-2.0)) // degenerate all-zero reconstruction sinks
     }
-    val truth = bruteTopK(embeddings, queries, kTop)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val truth = Stages.persisted(bruteTopK(embeddings, queries, kTop))
     val floatVariant = recallAtK(truth, truth)
       .select(lit("float").as("variant"), col("q_id"), col("n_truth"),
         col("n_hit"), col("recall"), lit(nAll - 1).as("n_scored"))
@@ -1457,17 +1455,6 @@ object Similarity {
                           maxBucket: Int = SrpMaxBucket): DataFrame =
     srpStage(embeddings, threshold, bits, bands, maxBucket).result
 
-  /** The SRP candidate stage with its cache handle (the [[Dedup.lshStage]]
-    * pattern): the PRE-cap keyed signature relation persists, so the
-    * `bits` dot products run once no matter how many downstream
-    * references consume it — the hot-bucket cap's aggregate, its
-    * anti-join left, and both sides of the band self-join all read the
-    * cached ~20-byte rows.
-    */
-  case class SrpStage(keyed: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { keyed.unpersist(); () }
-  }
-
   /** The SLIM (vec_id, band_idx, band_val) band relation for SRP-LSH —
     * ~20 bytes/row; the 256-byte vectors never enter a band exchange.
     */
@@ -1491,12 +1478,14 @@ object Similarity {
   def srpStage(embeddings: DataFrame,
                threshold: Double = 0.35,
                bits: Int = SrpBits, bands: Int = SrpBands,
-               maxBucket: Int = SrpMaxBucket): SrpStage = {
+               maxBucket: Int = SrpMaxBucket): Stage = {
     // Candidates dedup across bands BEFORE verification, then only
     // candidate rows fetch their vectors back by vec_id (the
     // minhashNearDups shape, and exactly the oracle's own CTE structure).
-    val keyed = srpBandRelation(embeddings, bits, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // The PRE-cap keyed signature relation persists, so the `bits` dot
+    // products run once for the cap's aggregate, its anti-join left and
+    // both sides of the band self-join.
+    val keyed = Stages.persisted(srpBandRelation(embeddings, bits, bands))
     // hot-bucket cap as groupBy hot-list + anti-join, never a window
     // (VERDICT r7 #1) — a viral band bucket must not buffer in one task
     val capped = Dedup.capHotBuckets(keyed, Seq("band_idx", "band_val"), maxBucket)
@@ -1512,7 +1501,7 @@ object Similarity {
       .select(col("id_a"), col("id_b"),
         round(vec_cosine(col("emb_a"), col("emb_b")), 4).as("cos"))
       .filter(col("cos") >= threshold)
-    SrpStage(keyed, result)
+    Stage(result, Seq(keyed))
   }
 
   /** SRP-LSH approximate top-k — the query-driven form of the same index:

@@ -162,8 +162,8 @@ object Solar {
   }
 
   def stages(events: DataFrame, windowDuration: String = WindowDuration): Stages =
-    stagesFrom(moduleAgg(events, windowDuration)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    stagesFrom(graft.operators.Stages.persisted(
+      moduleAgg(events, windowDuration)))
 
   /** The downstream stage DAG over an ALREADY-materialized module
     * relation (persisted by [[stages]], or checkpoint-backed when a

@@ -263,14 +263,6 @@ object TextAnalysis {
       .withColumnRenamed("pos", "bucket")
       .withColumnRenamed("col", "cnt")
 
-  /** The heavy-hitters stage with its cache handle: `result` is the
-    * verified top-k, `unpersist()` releases the shared token explode after
-    * the consuming action (like [[Dedup.LshStage]]).
-    */
-  case class HeavyHittersStage(toks: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { toks.unpersist(); () }
-  }
-
   /** Heavy hitters with Count-Min verification: the k most frequent
     * tokens by exact count (global TakeOrdered — per-partition heaps, no
     * full sort), each probed against a [[graft.functions.CountMinAgg]]
@@ -284,14 +276,13 @@ object TextAnalysis {
     *
     * The exact top-k and the sketch consume ONE shared token explode: the
     * explode is persisted and both aggregates read the cache, so the
-    * corpus is scanned and exploded once, not twice (VERDICT r4 #3). The
-    * handle on [[HeavyHittersStage]] releases it after the action.
+    * corpus is scanned and exploded once, not twice (VERDICT r4 #3).
     */
   def heavyHittersStage(docs: DataFrame, k: Int = 10,
-                        depth: Int = 4, width: Int = 1024): HeavyHittersStage = {
+                        depth: Int = 4, width: Int = 1024): Stage = {
     import graft.functions.AggFunctions.{cms_query, count_min_agg}
-    val toks = docs.select(explode(tokens(lower(col("text")))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = Stages.persisted(
+      docs.select(explode(tokens(lower(col("text")))).as("tok")))
     val top = toks.groupBy(col("tok")).agg(count(lit(1)).as("exact_cnt"))
       .orderBy(col("exact_cnt").desc, col("tok").asc).limit(k)
     val sketch = toks.agg(count_min_agg(col("tok"), depth, width).as("sk"),
@@ -299,18 +290,14 @@ object TextAnalysis {
     val est = cms_query(col("sk"), col("tok"), depth, width)
     // broadcast is safe by construction here: `sketch` is a global
     // aggregate — exactly ONE row regardless of corpus size
-    HeavyHittersStage(toks,
-      top.crossJoin(broadcast(sketch))
+    Stage(top.crossJoin(broadcast(sketch))
         .select(col("tok"), col("exact_cnt"),
           (est >= col("exact_cnt")).cast("int").as("lower_ok"),
           (est <= col("exact_cnt") + lit(3.0) * col("n_total") / lit(width))
-            .cast("int").as("upper_ok")))
+            .cast("int").as("upper_ok")),
+      Seq(toks))
   }
 
-  /** [[heavyHittersStage]]'s result; the shared token cache stays for the
-    * session unless the caller releases it through the stage handle or
-    * clears the session cache between queries, as Bench/Verify do.
-    */
   def heavyHitters(docs: DataFrame, k: Int = 10,
                    depth: Int = 4, width: Int = 1024): DataFrame =
     heavyHittersStage(docs, k, depth, width).result
@@ -492,21 +479,6 @@ object TextAnalysis {
       md5(normalized(col("text"))).as("fp"),
       fp64Expr(col("text")).as("fp64"))
 
-  /** The LM-scoring stage with its cache handle (the [[HeavyHittersStage]]
-    * pattern — the per-doc term-frequency pairs are consumed by both the
-    * vocabulary-count aggregate and the scoring join).
-    */
-  case class LmScoreStage(tf: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { tf.unpersist(); () }
-  }
-
-  /** Generic (persisted intermediate, result) handle for the one-cached-
-    * relation stages ([[vocabCoverageStage]], [[sourceDivergenceStage]]).
-    */
-  case class CachedStage(cached: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { cached.unpersist(); () }
-  }
-
   /** Perplexity scoring under a corpus-trained unigram LM — the
     * statistical-LM quality filter of the CCNet pipeline (Wenzek et al.,
     * LREC 2020 filter with KenLM; here the LM is a self-trained unigram
@@ -566,15 +538,14 @@ object TextAnalysis {
     // re-evaluates it per ELEMENT interpreted — HOFs are CodegenFallback
     // — the exact O(tokens²) pitfall the single-pass kernels exist to
     // avoid; it cost q84 a 5× bench regression before this shape.)
-    val pairs = docs
+    val pairs = Stages.persisted(docs
       .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
       .select(col("doc_id"), col("toks"), posexplode(col("toks")))
       .select(col("doc_id"), fp(col("col")).as("tok_fp"),
         when(col("pos") === 0, lit(null).cast("long"))
           .otherwise(fp(element_at(col("toks"), col("pos")))).as("prev_fp"))
       .groupBy(col("doc_id"), col("tok_fp"), col("prev_fp"))
-      .agg(count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("k")))
 
     // ---- unigram view: (doc, tok) term frequencies re-folded ----
     val unigram = unigramScore(
@@ -613,14 +584,13 @@ object TextAnalysis {
     * fingerprint per token, first fold directly to (doc, tok_fp)); use
     * [[lmFusedStage]] when the corpus is scored under BOTH models.
     */
-  def lmScoreStage(docs: DataFrame): LmScoreStage = {
-    val tf = docs.select(col("doc_id"),
+  def lmScoreStage(docs: DataFrame): Stage = {
+    val tf = Stages.persisted(docs.select(col("doc_id"),
         explode(tokens(lower(col("text")))).as("tok"))
       .select(col("doc_id"),
         fp60(col("tok")).as("tok_fp"))
-      .groupBy(col("doc_id"), col("tok_fp")).agg(count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    LmScoreStage(tf, unigramScore(tf))
+      .groupBy(col("doc_id"), col("tok_fp")).agg(count(lit(1)).as("k")))
+    Stage(unigramScore(tf), Seq(tf))
   }
 
   /** Laplace-smoothed unigram scoring over a (doc_id, tok_fp, k) term-
@@ -642,9 +612,6 @@ object TextAnalysis {
         round(exp(col("nll_sum") / col("n_tokens")), 4).as("ppl"))
   }
 
-  /** [[lmScoreStage]]'s result; release the shared term-frequency pairs
-    * via the handle or the session cache, as Bench/Verify do.
-    */
   def lmScore(docs: DataFrame): DataFrame = lmScoreStage(docs).result
 
   /** Bigram-LM perplexity — [[lmScoreStage]]'s conditional upgrade:
@@ -656,12 +623,11 @@ object TextAnalysis {
     * total. Documents under 2 tokens carry NULL scores (q70's
     * discipline).
     */
-  def lmScoreBigramStage(docs: DataFrame): LmScoreStage = {
+  def lmScoreBigramStage(docs: DataFrame): Stage = {
     val f = lmFusedStage(docs)
-    LmScoreStage(f.pairs, f.bigram)
+    Stage(f.bigram, Seq(f.pairs))
   }
 
-  /** [[lmScoreBigramStage]]'s result (handle discipline as [[lmScore]]). */
   def lmScoreBigram(docs: DataFrame): DataFrame = lmScoreBigramStage(docs).result
 
   /** Demo blocklist for [[blocklistFilter]]'s gate — neutral terms chosen
@@ -701,15 +667,12 @@ object TextAnalysis {
   def vocabCoverage(docs: DataFrame, topV: Int = 50): DataFrame =
     vocabCoverageStage(docs, topV).result
 
-  /** [[vocabCoverage]] with its cache handle: the vocab-sized count
-    * relation feeds BOTH the totals aggregate and the top-V selection —
-    * persisting it (it is vocabulary-sized, not corpus-sized) keeps the
-    * corpus explode to ONE pass instead of two.
-    */
-  def vocabCoverageStage(docs: DataFrame, topV: Int = 50): CachedStage = {
-    val counts = docs.select(explode(tokens(lower(col("text")))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def vocabCoverageStage(docs: DataFrame, topV: Int = 50): Stage = {
+    // persisted: the vocab-sized count relation feeds BOTH the totals
+    // aggregate and the top-V selection, so the corpus explodes once
+    val counts = Stages.persisted(
+      docs.select(explode(tokens(lower(col("text")))).as("tok"))
+        .groupBy(col("tok")).agg(count(lit(1)).as("cnt")))
     val totals = counts.agg(sum(col("cnt")).as("n_total"),
       count(lit(1)).as("vocab"))
     val ord = org.apache.spark.sql.expressions.Window
@@ -723,7 +686,7 @@ object TextAnalysis {
         graft.functions.AggFunctions.ratioQNN(
           sum(col("cnt")).over(cum), col("n_total"), 4).as("cum_cov"),
         col("vocab"))
-    CachedStage(counts, result)
+    Stage(result, Seq(counts))
   }
 
   /** Per-source distribution shift: EXACT smoothed KL divergence of each
@@ -747,18 +710,14 @@ object TextAnalysis {
   def sourceDivergence(docs: DataFrame): DataFrame =
     sourceDivergenceStage(docs).result
 
-  /** [[sourceDivergence]] with its cache handle: the (source, tok_fp)
-    * pair relation feeds the corpus re-fold, the constants aggregate, and
-    * the scoring join — unpersisted, the corpus would explode THREE
-    * times.
-    */
-  def sourceDivergenceStage(docs: DataFrame): CachedStage = {
-    val pairs = docs.select(col("source"),
+  def sourceDivergenceStage(docs: DataFrame): Stage = {
+    // persisted: the (source, tok_fp) pairs feed the corpus re-fold, the
+    // constants aggregate and the scoring join (else three explodes)
+    val pairs = Stages.persisted(docs.select(col("source"),
         explode(tokens(lower(col("text")))).as("tok"))
       .select(col("source"),
         fp60(col("tok")).as("tok_fp"))
-      .groupBy(col("source"), col("tok_fp")).agg(count(lit(1)).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("source"), col("tok_fp")).agg(count(lit(1)).as("k")))
     val corpus = pairs.groupBy(col("tok_fp")).agg(sum(col("k")).as("c"))
     val consts = corpus.agg(sum(col("c")).as("n"), count(lit(1)).as("v"),
       sum(log((col("c") + lit(1)).cast("double"))).as("sum_ln_cp1"))
@@ -790,7 +749,7 @@ object TextAnalysis {
           (sumLnQ - col("sum_ln_q_present"))) / nsV
         round(a + absent, 4).as("kl")
       })
-    CachedStage(pairs, result)
+    Stage(result, Seq(pairs))
   }
 
   // --- BM25 retrieval scoring -------------------------------------------
@@ -829,13 +788,9 @@ object TextAnalysis {
                topN: Int = Bm25TopN): DataFrame =
     bm25TopKStage(docs, terms, k1, b, topN).result
 
-  /** [[bm25TopK]] with its cache handle (ADVICE r10: the persisted
-    * per-doc tf projection is released via `unpersist()` by library
-    * callers composing several operators in one session).
-    */
   def bm25TopKStage(docs: DataFrame, terms: Seq[String],
                     k1: Double = Bm25K1, b: Double = Bm25B,
-                    topN: Int = Bm25TopN): CachedStage = {
+                    topN: Int = Bm25TopN): Stage = {
     require(terms.nonEmpty && terms.size <= 16, "query term set is small by contract")
     val toks = tokens(lower(col("text")))
     // all per-term tfs from ONE token pass of the StopwordScores kernel
@@ -847,12 +802,12 @@ object TextAnalysis {
       col("toks"), terms.map(Seq(_)))
     // persisted: ~24-byte rows feed BOTH the constants fold and the score
     // join — without it the corpus text is scanned and tokenized twice
-    val perDoc = docs.select(col("doc_id"), toks.as("toks"))
+    val perDoc = Stages.persisted(docs
+      .select(col("doc_id"), toks.as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         tfs.as("tfs"))
       .select(Seq(col("doc_id"), col("dl")) ++
-        terms.indices.map(i => col("tfs").getItem(i).as(s"tf_$i")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        terms.indices.map(i => col("tfs").getItem(i).as(s"tf_$i")): _*))
     val constAggs =
       Seq(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl")) ++
         terms.indices.map(i =>
@@ -873,7 +828,7 @@ object TextAnalysis {
         round(score, 4).as("score"): _*)
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topN)
-    CachedStage(perDoc, result)
+    Stage(result, Seq(perDoc))
   }
 
   // --- Kneser-Ney bigram LM ---------------------------------------------
@@ -904,12 +859,11 @@ object TextAnalysis {
     * rolls up per doc. All counts are integers (exactly reproducible);
     * the probability is one fixed-order double expression.
     */
-  def lmScoreKneserNeyStage(docs: DataFrame): LmScoreStage = {
+  def lmScoreKneserNeyStage(docs: DataFrame): Stage = {
     val f = lmFusedStage(docs)
     val bg = f.pairs.filter(col("prev_fp").isNotNull)
-    val c2 = bg.groupBy(col("prev_fp"), col("tok_fp"))
-      .agg(sum(col("k")).as("c2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c2 = Stages.persisted(
+      bg.groupBy(col("prev_fp"), col("tok_fp")).agg(sum(col("k")).as("c2")))
     val ctx = c2.groupBy(col("prev_fp"))
       .agg(sum(col("c2")).as("c1"), count(lit(1)).as("nf"))
     val cont = c2.groupBy(col("tok_fp")).agg(count(lit(1)).as("nr"))
@@ -937,13 +891,9 @@ object TextAnalysis {
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         round(col("nll") / col("n_bigrams"), 4).as("avg_nll"),
         round(exp(col("nll") / col("n_bigrams")), 4).as("ppl"))
-    LmScoreStage(f.pairs, result)
+    Stage(result, Seq(f.pairs, c2))
   }
 
-  /** [[lmScoreKneserNeyStage]]'s result (handle discipline as
-    * [[lmScore]]); the inner c₂ persist is released with the session
-    * cache like every other query intermediate.
-    */
   def lmScoreKneserNey(docs: DataFrame): DataFrame =
     lmScoreKneserNeyStage(docs).result
 
@@ -972,16 +922,11 @@ object TextAnalysis {
   def shingleNovelty(docs: DataFrame): DataFrame =
     shingleNoveltyStage(docs).result
 
-  /** [[shingleNovelty]] with its cache handle (ADVICE r10: release the
-    * persisted fingerprint pair stream via `unpersist()` instead of
-    * leaning on session-level cache clearing).
-    */
-  def shingleNoveltyStage(docs: DataFrame): CachedStage = {
-    val perDoc = docs
+  def shingleNoveltyStage(docs: DataFrame): Stage = {
+    val perDoc = Stages.persisted(docs
       .select(col("doc_id"),
         explode(array_distinct(Dedup.shingles(col("text")))).as("s"))
-      .select(col("doc_id"), fp60(col("s")).as("s_fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), fp60(col("s")).as("s_fp")))
     // pairs are distinct per doc, so df=1 ⟺ exactly one owner = min(doc_id)
     val uniqueOwned = perDoc.groupBy(col("s_fp"))
       .agg(count(lit(1)).as("df"), min(col("doc_id")).as("only_doc"))
@@ -995,7 +940,7 @@ object TextAnalysis {
         graft.functions.AggFunctions.ratioQ(
           coalesce(col("n_unique"), lit(0L)), col("n_shingles"), 4)
           .as("novelty"))
-    CachedStage(perDoc, result)
+    Stage(result, Seq(perDoc))
   }
 
   /** Top boilerplate report: the `topN` most document-frequent word
@@ -1015,13 +960,11 @@ object TextAnalysis {
   def topBoilerplate(docs: DataFrame, topN: Int = 20): DataFrame =
     topBoilerplateStage(docs, topN).result
 
-  /** [[topBoilerplate]] with its cache handle (ADVICE r10). */
-  def topBoilerplateStage(docs: DataFrame, topN: Int = 20): CachedStage = {
-    val pd = docs
+  def topBoilerplateStage(docs: DataFrame, topN: Int = 20): Stage = {
+    val pd = Stages.persisted(docs
       .select(col("doc_id"),
         explode(array_distinct(Dedup.shingles(col("text")))).as("s"))
-      .select(col("s"), fp60(col("s")).as("s_fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("s"), fp60(col("s")).as("s_fp")))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val top = pd.groupBy(col("s_fp")).agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("s_fp"))
@@ -1034,6 +977,6 @@ object TextAnalysis {
       .select(col("shingle"), col("df"),
         graft.functions.AggFunctions.ratioQ(
           col("df"), col("n_docs"), 4).as("doc_share"))
-    CachedStage(pd, result)
+    Stage(result, Seq(pd))
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextAnalysis
+import graft.operators.{Stage, Stages, TextAnalysis}
 
 /** Streaming deduplication over a document stream (SURVEY.md §2.14).
   *
@@ -49,16 +49,6 @@ object StreamingDedup {
     * production precomputes; at scale they arrive as parquet, not a
     * recomputation.
     */
-  /** [[nearDupsAgainstCorpusStage]]'s streaming result with the cache
-    * handle for the persisted static corpus index (ADVICE r7: the repo's
-    * stage-handle discipline applies to streaming operators too — a
-    * driver running several queries per session must be able to release
-    * the index when the query stops, not wait for session teardown).
-    */
-  case class CorpusProbeStage(corpusIndex: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = { corpusIndex.unpersist(); () }
-  }
-
   def nearDupsAgainstCorpus(docsStream: DataFrame, corpus: DataFrame,
                             threshold: Double = 0.5,
                             watermarkDelay: String = "10 minutes"): DataFrame =
@@ -67,14 +57,13 @@ object StreamingDedup {
 
   def nearDupsAgainstCorpusStage(docsStream: DataFrame, corpus: DataFrame,
                                  threshold: Double = 0.5,
-                                 watermarkDelay: String = "10 minutes"): CorpusProbeStage = {
+                                 watermarkDelay: String = "10 minutes"): Stage = {
     import graft.operators.Dedup
     // the static side of a stream-static join re-evaluates EVERY
     // micro-batch — persist the one-scan corpus index so each batch pays
     // a cache read, not a corpus re-shingle (production reads
     // precomputed parquet; the stage handle releases it on query stop)
-    val corpIdx = Dedup.dedupIndex(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpIdx = Stages.persisted(Dedup.dedupIndex(corpus))
     val corpBands = Dedup.bandsFromIndex(corpIdx)
       .select(col("band_idx"), col("band_hash"), col("doc_id").as("corp_id"))
     val corpSh = corpIdx.select(col("doc_id").as("corp_id"),
@@ -98,17 +87,7 @@ object StreamingDedup {
       .filter(col("jaccard") >= threshold)
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("doc_id", "corp_id")
-    CorpusProbeStage(corpIdx, result)
-  }
-
-  /** [[editDistanceAgainstCorpusStream]]'s handles: the persisted static
-    * corpus relations (segment index + id map), released on query stop.
-    */
-  case class EdCorpusStreamStage(corpusIndex: DataFrame,
-                                 corpusIds: DataFrame, result: DataFrame) {
-    def unpersist(): Unit = {
-      corpusIndex.unpersist(); corpusIds.unpersist(); ()
-    }
+    Stage(result, Seq(corpIdx))
   }
 
   def editDistanceAgainstCorpusStream(namesStream: DataFrame,
@@ -135,15 +114,13 @@ object StreamingDedup {
     */
   def editDistanceAgainstCorpusStreamStage(namesStream: DataFrame,
       corpus: DataFrame, idCol: String, strCol: String, k: Int,
-      watermarkDelay: String = "10 minutes"): EdCorpusStreamStage = {
+      watermarkDelay: String = "10 minutes"): Stage = {
     import graft.operators.EditDistance
-    val corpIds = corpus
+    val corpIds = Stages.persisted(corpus
       .select(col(idCol).as("id_corp"), col(strCol).as("s"))
-      .filter(col("s").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("s").isNotNull))
     val corpD = corpIds.select(col("s").as("c")).distinct()
-    val corpIdx = EditDistance.segIndex(corpD, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpIdx = Stages.persisted(EditDistance.segIndex(corpD, k))
     val in = namesStream
       .select(col("ts"), col(idCol).as("id"), col(strCol).as("c"))
       .filter(col("c").isNotNull)
@@ -164,6 +141,6 @@ object StreamingDedup {
       .select(col("ts"), col("id"), col("id_corp"), col("dist"))
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("id", "id_corp")
-    EdCorpusStreamStage(corpIdx, corpIds, result)
+    Stage(result, Seq(corpIdx, corpIds))
   }
 }

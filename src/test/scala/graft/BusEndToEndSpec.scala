@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.sources.v2.KafkaBus
 import graft.streaming.SolarStreaming
@@ -72,7 +71,7 @@ class BusEndToEndSpec extends SparkSpecBase {
     assert(golden.nonEmpty && golden.forall(_._1 == "p1"),
       s"fixture must anomalize exactly panel p1: $golden")
 
-    val ckpt = Files.createTempDirectory("bus_e2e_").toString
+    val ckpt = Bridge.tempDir("bus_e2e_")
     val q = SolarStreaming.toKafka(
       SolarStreaming.encodeAnomalies(
         SolarStreaming.anomalyPipelineStream(
@@ -117,7 +116,7 @@ class BusEndToEndSpec extends SparkSpecBase {
     val sfx = java.util.UUID.randomUUID().toString.take(8)
     val inTopic = s"solar-raw-restart-$sfx"
     val outTopic = s"solar-anom-restart-$sfx"
-    val ckpt = Files.createTempDirectory("bus_e2e_restart_").toString
+    val ckpt = Bridge.tempDir("bus_e2e_restart_")
 
     def run(): Unit = {
       val q = SolarStreaming.toKafka(
@@ -162,7 +161,7 @@ class BusEndToEndSpec extends SparkSpecBase {
     KafkaBus.publish(topic, "p9".getBytes("UTF-8"),
       """{"power":7,"nam""".getBytes("UTF-8"), (T0 + 9) * 1000000L)
 
-    val ckpt = Files.createTempDirectory("bus_decode_").toString
+    val ckpt = Bridge.tempDir("bus_decode_")
     val name = s"bus_decode_$sfx"
     val q = SolarStreaming.fromKafka(spark, "in-jvm", topic, "kafka-bus")
       .writeStream.format("memory").queryName(name)

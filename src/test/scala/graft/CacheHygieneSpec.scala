@@ -1,6 +1,9 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, Solar, TextAnalysis}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, hash, sum}
+
+import graft.operators.{Curation, Dedup, Similarity, Solar, Stage, TextAnalysis}
 
 /** Every operator that persists a shared intermediate (Solar's module
   * aggregate, the LSH band index, the heavy-hitters/boilerplate/span/LM
@@ -21,9 +24,32 @@ class CacheHygieneSpec extends SparkSpecBase {
   private def cachedCount =
     spark.sparkContext.getPersistentRDDs.keySet.diff(baselineIds).size
 
-  test("Solar.stages cache is released by Stages.unpersist") {
+  private def resetBaseline(): Unit = {
     spark.catalog.clearCache()
     baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  }
+
+  /** Every column of `df` through one aggregate: a bare `count()` may let
+    * Catalyst prune a cached branch the result never needs for a count.
+    */
+  private def runAll(df: DataFrame): Unit =
+    df.agg(sum(hash(df.columns.map(c => col(s"`$c`")): _*))).collect()
+
+  /** Run the stage, see that it cached something, release it through the
+    * handle, and see that nothing it created is left.
+    */
+  private def assertReleased(st: Stage, clue: String = "")(run: => Unit): Unit = {
+    run
+    assert(cachedCount > 0, clue)
+    st.unpersist()
+    assert(cachedCount === 0,
+      s"$clue left ${spark.sparkContext.getPersistentRDDs.keySet.diff(baselineIds)}")
+  }
+
+  private def docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+
+  test("Solar.stages cache is released by Stages.unpersist") {
+    resetBaseline()
     val st = Solar.stages(graft.sources.Tables.events(spark, "/root/testdata/sf0.001"))
     st.joined.count()
     assert(cachedCount > 0)          // the shared module aggregate is cached
@@ -34,8 +60,7 @@ class CacheHygieneSpec extends SparkSpecBase {
   test("q04-q08 share one checkpointed module aggregate via the memo") {
     val dir = "/root/testdata/sf0.001"
     SessionArtifacts.release(spark, dir, "solarModule") // a prior suite may have published
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    resetBaseline()
     // first chain query computes and publishes the checkpoint-backed module
     val q4 = SparkEntry.queries("q04_join_panel_module")(spark, dir)
     q4.count()
@@ -67,8 +92,7 @@ class CacheHygieneSpec extends SparkSpecBase {
   test("q11 publishes the shared LSH stage; q105/q106 consume the checkpoint") {
     val dir = "/root/testdata/sf0.001"
     SessionArtifacts.release(spark, dir, "lshCalib") // a prior suite may have published
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    resetBaseline()
     // the producer computes fresh, publishes, and releases the stage's own
     // shingle-index cache — only the calibration checkpoint remains
     SparkEntry.queries("q11_dedup_minhash_lsh")(spark, dir).count()
@@ -97,125 +121,73 @@ class CacheHygieneSpec extends SparkSpecBase {
   }
 
   test("r11 one-shot stage handles release their persisted intermediates") {
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stages = Seq[graft.operators.TextAnalysis.CachedStage](
+    resetBaseline()
+    val stages = Seq[Stage](
       TextAnalysis.bm25TopKStage(docs, Seq("dup", "spark")),
       TextAnalysis.shingleNoveltyStage(docs),
       TextAnalysis.topBoilerplateStage(docs),
-      graft.operators.Curation.qualityPercentileStage(docs))
-    stages.foreach { st =>
-      st.result.count()
-      assert(cachedCount > 0)
-      st.unpersist()
-      assert(cachedCount === 0)
-    }
+      Curation.qualityPercentileStage(docs))
+    stages.foreach(st => assertReleased(st)(st.result.count()))
   }
 
   test("EdJoinStage/EdIncStage release their persisted id relations") {
     import spark.implicits._
     val p = Seq((1L, "kitten"), (2L, "sitten"), (3L, "mitten"))
       .toDF("id", "s")
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    resetBaseline()
     val st = graft.operators.EditDistance.editDistanceJoinStage(p, "id", "s", 1)
-    st.result.count()
-    assert(cachedCount > 0)
-    st.unpersist()
-    assert(cachedCount === 0)
+    assertReleased(st)(st.result.count())
     val inc = graft.operators.EditDistance
       .editDistanceAgainstCorpusStage(p, p.limit(2), "id", "s", 1)
-    inc.result.count()
-    assert(cachedCount > 0)
-    inc.unpersist()
-    assert(cachedCount === 0)
+    assertReleased(inc)(inc.result.count())
   }
 
   test("Dedup near-dup caches are released by NearDupStage.unpersist") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = Dedup.minhashNearDupsStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"),
-      threshold = 0.5)
-    stage.result.count()
-    assert(cachedCount > 0)          // shingle index + capped band relation
-    stage.unpersist()
-    assert(cachedCount === 0)
+    resetBaseline()
+    // shingle index + capped band relation
+    val stage = Dedup.minhashNearDupsStage(docs, threshold = 0.5)
+    assertReleased(stage)(stage.result.count())
   }
 
   test("windowedJaccardPairsStage posting index is released by the handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = Dedup.windowedJaccardPairsStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"),
-      idWindow = 25, threshold = 0.2)
-    stage.result.count()
-    assert(cachedCount > 0)          // the capped posting-list index
-    stage.unpersist()
-    assert(cachedCount === 0)
+    resetBaseline()
+    val stage = Dedup.windowedJaccardPairsStage(docs, idWindow = 25, threshold = 0.2)
+    assertReleased(stage)(stage.result.count()) // the capped posting-list index
   }
 
   test("heavyHitters shared token explode is released by the stage handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = TextAnalysis.heavyHittersStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"))
-    stage.result.count()
-    assert(cachedCount > 0)          // the shared token explode is cached
-    stage.unpersist()
-    assert(cachedCount === 0)
+    resetBaseline()
+    val stage = TextAnalysis.heavyHittersStage(docs)
+    assertReleased(stage)(stage.result.count()) // the shared token explode
   }
 
   test("packStage shared token-count projection is released by the handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = graft.operators.Curation.packStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"))
-    stage.result.count()
-    assert(cachedCount > 0)          // the shared (n_tokens, block) projection
-    stage.unpersist()
-    assert(cachedCount === 0)
+    resetBaseline()
+    val stage = Curation.packStage(docs)
+    assertReleased(stage)(stage.result.count()) // the (n_tokens, block) projection
   }
 
   test("budgetStage shared scored projection is released by the handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = graft.operators.Curation.budgetStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"), 5000L)
-    stage.result.count()
-    assert(cachedCount > 0)
-    stage.unpersist()
-    assert(cachedCount === 0)
+    resetBaseline()
+    val stage = Curation.budgetStage(docs, 5000L)
+    assertReleased(stage)(stage.result.count())
   }
 
   test("boilerplateStage shared chunk explode is released by the handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = Dedup.boilerplateStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"))
-    stage.result.count()
-    assert(cachedCount > 0)
-    stage.unpersist()
-    assert(cachedCount === 0)
+    resetBaseline()
+    val stage = Dedup.boilerplateStage(docs)
+    assertReleased(stage)(stage.result.count())
   }
 
   test("lmScoreStage shared term-frequency pairs are released by the handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = TextAnalysis.lmScoreStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"))
-    stage.result.count()
-    assert(cachedCount > 0)          // the shared (doc, tok_fp, k) pairs
-    stage.unpersist()
-    assert(cachedCount === 0)
+    resetBaseline()
+    val stage = TextAnalysis.lmScoreStage(docs)
+    assertReleased(stage)(stage.result.count()) // the shared (doc, tok_fp, k) pairs
   }
 
   test("lmFusedStage scores both models from ONE shared pair stream") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = TextAnalysis.lmFusedStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"))
+    resetBaseline()
+    val stage = TextAnalysis.lmFusedStage(docs)
     stage.unigram.count()
     stage.bigram.agg(org.apache.spark.sql.functions.sum("ppl")).collect()
     assert(cachedCount === 1)        // exactly one shared pairs relation
@@ -224,79 +196,121 @@ class CacheHygieneSpec extends SparkSpecBase {
   }
 
   test("lmScoreBigramStage shared pair stream is released by the handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = TextAnalysis.lmScoreBigramStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"))
+    resetBaseline()
+    val stage = TextAnalysis.lmScoreBigramStage(docs)
     // aggregate over ppl: a bare count() lets Catalyst skip the scored
     // (cached) side of the left join entirely
-    stage.result.agg(org.apache.spark.sql.functions.sum("ppl")).collect()
-    assert(cachedCount > 0)
-    stage.unpersist()
-    assert(cachedCount === 0)
+    assertReleased(stage)(
+      stage.result.agg(org.apache.spark.sql.functions.sum("ppl")).collect())
   }
 
   test("srpStage and exactQuantilesTwoPassStage release their caches") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val srp = graft.operators.Similarity.srpStage(
+    resetBaseline()
+    val srp = Similarity.srpStage(
       graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001"))
-    srp.result.count()
-    assert(cachedCount > 0)          // the keyed signature relation
-    srp.unpersist()
-    assert(cachedCount === 0)
+    assertReleased(srp)(srp.result.count()) // the keyed signature relation
     val qs = graft.operators.Relational.exactQuantilesTwoPassStage(
       graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001"),
       "l_returnflag", "l_extendedprice", Seq(0.5))
-    qs.result.count()
-    assert(cachedCount > 0)          // stats + histogram + picked
-    qs.unpersist()
-    assert(cachedCount === 0)
+    assertReleased(qs)(qs.result.count()) // stats + histogram + picked
   }
 
   test("dedupAgainstCorpusStage releases both side indexes via the handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+    resetBaseline()
     val stage = Dedup.dedupAgainstCorpusStage(
-      docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0),
-      docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 1))
-    stage.result.count()
-    assert(cachedCount > 0)          // corpus + incoming one-scan indexes
-    stage.unpersist()
-    assert(cachedCount === 0)
+      docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1))
+    assertReleased(stage)(stage.result.count()) // both one-scan indexes
   }
 
   test("vocabCoverageStage and sourceDivergenceStage release their caches") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+    resetBaseline()
     val vc = TextAnalysis.vocabCoverageStage(docs)
-    vc.result.count()
-    assert(cachedCount > 0)          // the vocab-sized count relation
-    vc.unpersist()
-    assert(cachedCount === 0)
+    assertReleased(vc)(vc.result.count()) // the vocab-sized count relation
     val sd = TextAnalysis.sourceDivergenceStage(docs)
-    sd.result.count()
-    assert(cachedCount > 0)          // the (source, tok_fp) pair relation
-    sd.unpersist()
-    assert(cachedCount === 0)
+    assertReleased(sd)(sd.result.count()) // the (source, tok_fp) pairs
   }
 
   test("spanDedupStage shared span pairs are released by the handle") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val stage = Dedup.spanDedupStage(
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"))
-    stage.result.count()
-    assert(cachedCount > 0)          // the shared distinct (doc, span_fp) set
-    stage.unpersist()
-    assert(cachedCount === 0)
+    resetBaseline()
+    val stage = Dedup.spanDedupStage(docs)
+    assertReleased(stage)(stage.result.count()) // distinct (doc, span_fp) set
+  }
+
+  // ---- handles that own more than one kind of state ----
+
+  test("lmScoreKneserNeyStage releases the pair stream AND its c2 counts") {
+    resetBaseline()
+    val stage = TextAnalysis.lmScoreKneserNeyStage(docs)
+    assertReleased(stage)(runAll(stage.result))
+  }
+
+  test("curationDagStage releases its four caches AND the dropped-id checkpoint") {
+    resetBaseline()
+    val stage = Curation.curationDagStage(docs)
+    assertReleased(stage)(runAll(stage.result))
+  }
+
+  test("semanticDedupStage releases the distributed CC label checkpoint") {
+    import spark.implicits._
+    val e = Seq(
+      (0L, Array(1.0f, 0.0f)), (1L, Array(0.99f, 0.01f)),
+      (2L, Array(0.9f, 0.25f)), (3L, Array(0.0f, 1.0f))
+    ).toDF("vec_id", "embedding")
+    val model = Similarity.KmeansModel(
+      Array(Seq(1.0, 0.0), Seq(0.0, 1.0)),
+      Seq((0L, 0), (1L, 0), (2L, 0), (3L, 1)).toDF("vec_id", "cell"))
+    resetBaseline()
+    // the labels sit on a localCheckpoint only on the distributed path
+    spark.conf.set("graft.cc.driverMaxEdges", "0")
+    try {
+      val stage = Similarity.semanticDedupStage(e, model, threshold = 0.9)
+      assertReleased(stage)(runAll(stage.result))
+    } finally spark.conf.unset("graft.cc.driverMaxEdges")
+  }
+
+  test("every other public *Stage builder is released by its handle") {
+    import spark.implicits._
+    val lineitem = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001")
+    val names = Seq((1L, "kitten"), (2L, "sitten"), (3L, "mitten")).toDF("id", "s")
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val nameStream = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(java.sql.Timestamp, Long, String)]
+      .toDF().toDF("ts", "id", "s")
+    val cases: Seq[(String, () => Stage)] = Seq(
+      "prefixSimilarityJoinStage" -> (() =>
+        Dedup.prefixSimilarityJoinStage(docs, 0.5)),
+      "prefixJoinAgainstCorpusStage" -> (() =>
+        Dedup.prefixJoinAgainstCorpusStage(docs.filter(col("doc_id") % 4 =!= 0),
+          docs.filter(col("doc_id") % 4 === 0), 0.5)),
+      "containmentJoinAgainstCorpusStage" -> (() =>
+        Dedup.containmentJoinAgainstCorpusStage(docs.filter(col("doc_id") % 3 =!= 0),
+          docs.filter(col("doc_id") % 3 === 0), 0.35)),
+      "sourceDatacardStage" -> (() => Curation.sourceDatacardStage(docs)),
+      "sourceDatacardIncrementalStage" -> (() =>
+        Curation.sourceDatacardIncrementalStage(
+          docs.filter(col("doc_id") % 2 === 0),
+          Curation.docCardStats(docs.filter(col("doc_id") % 2 === 1)))),
+      "importanceStage" -> (() => Curation.importanceStage(docs, "src0")),
+      "profileKeysStage" -> (() =>
+        graft.operators.Relational.profileKeysStage(lineitem, "l_orderkey")),
+      "encodeStage" -> (() =>
+        graft.operators.Bpe.encodeStage(docs, Seq(("t", "h"), ("th", "e")))),
+      "editDistanceAgainstCorpusStreamStage" -> (() =>
+        graft.streaming.StreamingDedup.editDistanceAgainstCorpusStreamStage(
+          nameStream, names, "id", "s", 1)))
+    cases.foreach { case (name, build) =>
+      resetBaseline()
+      val st = build()
+      // a streaming result cannot run as a batch; its micro-batches read
+      // the cached static side
+      assertReleased(st, name)(
+        if (st.result.isStreaming) st.cached.foreach(_.count())
+        else runAll(st.result))
+    }
   }
 
   test("Bpe.train releases the vocab persist AND training checkpoints") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    resetBaseline()
     // 30 merges crosses CheckpointEvery=25, so the handle must release
     // both the persisted base relation and the final localCheckpoint's
     // raw-RDD blocks (ADVICE r6: unpersisting the derived vocab plan
@@ -311,24 +325,20 @@ class CacheHygieneSpec extends SparkSpecBase {
   }
 
   test("streaming nearDupsAgainstCorpusStage releases the corpus index") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    resetBaseline()
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(java.sql.Timestamp, Long, String)]
     val stage = graft.streaming.StreamingDedup.nearDupsAgainstCorpusStage(
       input.toDF().toDF("ts", "doc_id", "text"),
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001"))
-    stage.corpusIndex.count()        // what each micro-batch would read
-    assert(cachedCount > 0)          // the static-side one-scan index
-    stage.unpersist()
-    assert(cachedCount === 0)
+      docs)
+    // the static-side one-scan index, read by each micro-batch
+    assertReleased(stage)(stage.cached.head.count())
   }
 
   test("kmeansFit leaves no cached RDDs behind (training sample released)") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    resetBaseline()
     val e = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     Similarity.kmeansFit(e, k = 2, iters = 1).cells.count()
     assert(cachedCount === 0)        // the train-sample persist is scoped
@@ -336,8 +346,7 @@ class CacheHygieneSpec extends SparkSpecBase {
 
   test("q130 ingestion chain releases everything under the Verify clearCache " +
     "(lifecycle — VERDICT r12 #6)") {
-    spark.catalog.clearCache()
-    baselineIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    resetBaseline()
     val out = SparkEntry.queries("q130_ingest_chain")(
       spark, "/root/testdata/sf0.001")
     assert(out.count() > 0)

@@ -745,7 +745,7 @@ class CurationSpec extends SparkSpecBase {
     // is the clearCache-managed projections plus the one checkpointed
     // dropped-id relation the handle releases
     spark.catalog.clearCache()
-    stage.release()
+    stage.unpersist()
     assert(spark.sparkContext.getPersistentRDDs.size === baseline)
   }
 }

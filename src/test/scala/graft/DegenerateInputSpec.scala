@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.{Curation, Dedup, Relational, TextAnalysis}
 
@@ -80,11 +81,11 @@ class DegenerateInputSpec extends SparkSpecBase {
     val s = graft.operators.QualityModel.scoreDocs(blank).collect()
     assert(s.forall(r => !r.getDouble(2).isNaN))
     // WARC: an empty corpus writes no shard files and reads back empty
-    val dir = java.nio.file.Files.createTempDirectory("warc_empty_").toString
+    val dir = Bridge.tempDir("warc_empty_")
     graft.sources.Warc.writeWarc(emptyFull, dir, shards = 2)
     assert(graft.sources.Warc.readWarc(spark, dir).count() === 0)
     // and blank-text payloads (Content-Length: 0) round-trip exactly
-    val dir2 = java.nio.file.Files.createTempDirectory("warc_blank_").toString
+    val dir2 = Bridge.tempDir("warc_blank_")
     graft.sources.Warc.writeWarc(blankFull, dir2, shards = 2)
     assert(graft.sources.Warc.readWarc(spark, dir2)
       .as[(Long, String, String, String)].collect().toSet ===
@@ -102,10 +103,10 @@ class DegenerateInputSpec extends SparkSpecBase {
     // EMPTY packing, not a driver NPE on the null token-sum scalar
     val st1 = Curation.curationDagStage(emptyFull)
     assert(st1.result.count() === 0)
-    st1.release()
+    st1.unpersist()
     val st2 = Curation.curationDagStage(blankFull)
     assert(st2.result.count() === 0)
-    st2.release()
+    st2.unpersist()
     // decontamination: empty pool -> no rows; empty benchmark -> nothing
     // can be contaminated but the accounting keeps every pool doc
     assert(Dedup.decontaminationReport(empty, empty).count() === 0)
@@ -133,8 +134,7 @@ class DegenerateInputSpec extends SparkSpecBase {
     assert(Curation.mergeCorpus(emptyFull, emptyFull).count() === 0)
     // compaction: an empty layout (dir exists, no partitions) yields an
     // empty report, not a schema-inference failure
-    val emptyDir = java.nio.file.Files
-      .createTempDirectory("compact_empty_").toString
+    val emptyDir = Bridge.tempDir("compact_empty_")
     assert(graft.sources.Writers
       .compactPartitioned(spark, emptyDir, "event_date").count() === 0)
     spark.catalog.clearCache()
@@ -199,7 +199,7 @@ class DegenerateInputSpec extends SparkSpecBase {
     // single row lands in one directory
     val emptyEv = Seq.empty[(Long, Long, Double)]
       .toDF("event_id", "user_id", "value")
-    val d1 = java.nio.file.Files.createTempDirectory("zdeg_").toString + "/e"
+    val d1 = Bridge.tempDir("zdeg_") + "/e"
     graft.sources.Writers.writeZOrdered(emptyEv, d1, "user_id", "value")
     // partitionBy on an empty frame writes only metadata; reading the
     // keyed derivation of the empty frame is the contract that matters

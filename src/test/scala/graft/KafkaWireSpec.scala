@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.streaming.SolarStreaming
 
@@ -46,7 +47,7 @@ class KafkaWireSpec extends SparkSpecBase {
       .option("kafka.bootstrap.servers", servers)
       .option("topic", topic).save()
 
-    val ckpt = java.nio.file.Files.createTempDirectory("kafka_in_").toString
+    val ckpt = Bridge.tempDir("kafka_in_")
     val q = SolarStreaming.fromKafka(spark, servers, topic)
       .writeStream.format("memory").queryName(s"wire_$suffix")
       .option("checkpointLocation", ckpt)
@@ -69,7 +70,7 @@ class KafkaWireSpec extends SparkSpecBase {
       "m_cnt", "m_sum_power", "m_avg_power",
       "p_cnt", "p_sum_power", "p_avg_power",
       "squares_sum", "variance", "deviance")
-    val ckpt = java.nio.file.Files.createTempDirectory("kafka_out_").toString
+    val ckpt = Bridge.tempDir("kafka_out_")
     val q = SolarStreaming.toKafka(
       SolarStreaming.encodeAnomalies(anomalies), servers, topic, ckpt)
     input.addData((new Timestamp(0L), "p1", "m3",

@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.plans.MvCatalog
 
@@ -20,7 +19,7 @@ class MvRewriteSpec extends SparkSpecBase {
     df.queryExecution.executedPlan.toString
 
   private def withMv[T](f: (String, String) => T): T = {
-    val root = Files.createTempDirectory("graft_mv_spec_").toString
+    val root = Bridge.tempDir("graft_mv_spec_")
     val base = s"$root/base"
     val mv = s"$root/mv"
     // base: (g, sub, x) with a group ("b", "v") that sums to null-free
@@ -165,7 +164,7 @@ class MvRewriteSpec extends SparkSpecBase {
   }
 
   test("type-widening rollup stands down: decimal sums fall through to base") {
-    val root = Files.createTempDirectory("graft_mv_dec_").toString
+    val root = Bridge.tempDir("graft_mv_dec_")
     val base = s"$root/base"
     val mv = s"$root/mv"
     Seq(("a", BigDecimal("1.50")), ("a", BigDecimal("2.25")),

@@ -179,9 +179,11 @@ class PrefixSimilaritySpec extends SparkSpecBase {
     val corpus = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val stage = Dedup.prefixSimilarityJoinStage(corpus, 0.5)
     stage.result.collect()
-    assert(stage.fps.storageLevel.useMemory || stage.fps.storageLevel.useDisk)
+    assert(stage.cached.head.storageLevel.useMemory ||
+      stage.cached.head.storageLevel.useDisk)
     stage.unpersist()
-    assert(stage.fps.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(stage.cached.head.storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE)
   }
 
   // ---- containment join (q170) ----

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.{Curation, Stages}
 import graft.sources.SnapshotStore
@@ -18,8 +19,7 @@ class SnapshotSpec extends SparkSpecBase {
 
   /** Build a 3-version chain in a fresh store root; returns the root. */
   private def buildChain(): String = {
-    val root = java.nio.file.Files
-      .createTempDirectory("snapspec_").toString
+    val root = Bridge.tempDir("snapspec_")
     val v1 = docsDf(1L -> "alpha", 2L -> "beta", 3L -> "gamma")
     val v2 = docsDf(2L -> "beta revised", 4L -> "delta") // rewrite + insert
     val v3 = docsDf(2L -> "beta revised", 5L -> "eps")   // refresh + insert
@@ -107,8 +107,7 @@ class SnapshotSpec extends SparkSpecBase {
   }
 
   test("an empty merge output commits an empty version cleanly") {
-    val root = java.nio.file.Files
-      .createTempDirectory("snapspec_empty_").toString
+    val root = Bridge.tempDir("snapspec_empty_")
     val empty = Curation.mergeCorpusIncremental(
       docsDf().limit(0), Curation.corpusFingerprints(docsDf().limit(0)))
     val m = SnapshotStore.commit(spark, root, 1L, empty)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graftbridge.Bridge
+
 import graft.operators.Solar
 import graft.sources.v2.SolarSimSource
 
@@ -235,8 +237,7 @@ class SolarSimSourceSpec extends SparkSpecBase {
   }
 
   test("micro-batch stream drains the inventory in admitted slices, batch ≡ stream") {
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("simstream_ckpt_").toString
+    val ckpt = Bridge.tempDir("simstream_ckpt_")
     val q = spark.readStream.format("solar-sim")
       .option("panels", 2).option("modules", 3)
       .option("readingsPerModule", 20).option("readingsPerTrigger", 7)
@@ -259,10 +260,8 @@ class SolarSimSourceSpec extends SparkSpecBase {
 
   test("micro-batch source resumes exactly from the checkpoint (restart-safe)") {
     import org.apache.spark.sql.streaming.Trigger
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("simstream_restart_").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("simstream_out_").toString + "/rows"
+    val ckpt = Bridge.tempDir("simstream_restart_")
+    val out = Bridge.tempDir("simstream_out_") + "/rows"
     def start(trigger: Trigger) = spark.readStream.format("solar-sim")
       .option("panels", 2).option("modules", 2)
       .option("readingsPerModule", 30).option("readingsPerTrigger", 10)
@@ -288,8 +287,7 @@ class SolarSimSourceSpec extends SparkSpecBase {
     // full two-aggregate anomaly pipeline -> memory sink, with enough
     // event-time inventory (60 readings x 10s = 600s) for the watermark
     // to close windows and emit finalized anomalies
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("simstream_pipe_").toString
+    val ckpt = Bridge.tempDir("simstream_pipe_")
     val stream = spark.readStream.format("solar-sim")
       .option("panels", 3).option("modules", 4)
       .option("readingsPerModule", 60).option("readingsPerTrigger", 30)

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.streaming.SolarTws
 import graft.streaming.SolarTws._
@@ -32,7 +33,7 @@ class SolarStatefulSpec extends SparkSpecBase {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[In]
     val name = s"custom_state_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_custom_state").toString
+    val ckpt = Bridge.tempDir("graft_custom_state")
     val q = SolarTws.moduleAggTws(spark,
         input.toDF().toDF("ts", "panel", "module", "power").as[Reading])
       .writeStream.format("memory").queryName(name).outputMode("append")

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.streaming.SolarStreaming
 
@@ -33,8 +34,8 @@ class StateSourceSpec extends SparkSpecBase {
 
   test("statestore source reads the aggregation state offline: buffered " +
     "keys are exactly the unexpired windows") {
-    val srcDir = Files.createTempDirectory("graft_sts_src").toString
-    val ckptDir = Files.createTempDirectory("graft_sts_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_sts_src")
+    val ckptDir = Bridge.tempDir("graft_sts_ckpt")
     // two closed-window emissions + one window still open at stop
     Seq(
       (ts("2024-01-01 00:00:05"), "p1", "m1", 10.0),
@@ -80,9 +81,9 @@ class StateSourceSpec extends SparkSpecBase {
 
   test("parquet file sink: exactly-once across restart, orphan files " +
     "invisible to readers via _spark_metadata") {
-    val srcDir = Files.createTempDirectory("graft_fsk_src").toString
-    val outDir = Files.createTempDirectory("graft_fsk_out").toString + "/t"
-    val ckptDir = Files.createTempDirectory("graft_fsk_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_fsk_src")
+    val outDir = Bridge.tempDir("graft_fsk_out") + "/t"
+    val ckptDir = Bridge.tempDir("graft_fsk_ckpt")
 
     def writeBatch(rows: Seq[(Timestamp, String, String, Double)]): Unit =
       rows.toDF("ts", "panel", "module", "power")

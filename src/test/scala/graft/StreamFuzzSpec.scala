@@ -1,5 +1,9 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Try
+
 import graft.tools.StreamFuzz
 
 /** Batch ↔ streaming differential-fuzz spec (VERDICT r16 #3). The big
@@ -38,6 +42,9 @@ import graft.tools.StreamFuzz
   * battery so the differential keeps running on every `sbt test`.
   */
 class StreamFuzzSpec extends SparkSpecBase {
+
+  /** Seeds of the battery in flight at once. */
+  private val FuzzPool = 4
 
   private def toDF(rows: Seq[StreamFuzz.Ev]): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -90,10 +97,18 @@ class StreamFuzzSpec extends SparkSpecBase {
   }
 
   test("50-seed battery: streaming legs equal batch legs row-for-row") {
+    // seeds run FuzzPool at a time; every query a seed starts carries the
+    // seed in its name (sfz_<seed>_k<kind>), so no two seeds share a sink
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(FuzzPool)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val runs = try {
+      Await.result(Future.traverse((1L to 50L).toList) { s =>
+        Future(s -> Try(StreamFuzz.runOne(spark, StreamFuzz.generate(s))))
+      }, Duration.Inf)
+    } finally pool.shutdown()
     var produced = 0
-    (1L to 50L).foreach { s =>
-      val q = StreamFuzz.generate(s)
-      val (streamed, batch) = StreamFuzz.runOne(spark, q)
+    runs.foreach { case (s, run) =>
+      val (streamed, batch) = run.fold(e => fail(s"seed $s threw", e), identity)
       assert(streamed === batch,
         s"seed $s diverged: streamed=${streamed.size} batch=${batch.size}\n" +
           (streamed.diff(batch) ++ batch.diff(streamed)).take(6)

@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.streaming.SolarStreaming
 
@@ -26,8 +26,8 @@ class StreamingRecoverySpec extends SparkSpecBase {
     StructField("module", StringType), StructField("power", DoubleType)))
 
   test("append-mode windows emit exactly once across a checkpointed restart") {
-    val srcDir = Files.createTempDirectory("graft_src").toString
-    val ckptDir = Files.createTempDirectory("graft_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_src")
+    val ckptDir = Bridge.tempDir("graft_ckpt")
     val emitted = mutable.Buffer[(Long, String, String, Double)]()
 
     def writeBatch(rows: Seq[(Timestamp, String, String, Double)]): Unit =
@@ -71,8 +71,8 @@ class StreamingRecoverySpec extends SparkSpecBase {
   }
 
   test("transformWithState recovers its ListState and timers across a restart") {
-    val srcDir = Files.createTempDirectory("graft_tws_src").toString
-    val ckptDir = Files.createTempDirectory("graft_tws_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_tws_src")
+    val ckptDir = Bridge.tempDir("graft_tws_ckpt")
     val emitted = mutable.Buffer[(Long, String, String, Double)]()
 
     def writeBatch(rows: Seq[(Timestamp, String, String, Double)]): Unit =
@@ -116,8 +116,8 @@ class StreamingRecoverySpec extends SparkSpecBase {
   }
 
   test("curateStream dedup state survives a restart (no dup re-admitted)") {
-    val srcDir = Files.createTempDirectory("graft_cur_src").toString
-    val ckptDir = Files.createTempDirectory("graft_cur_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_cur_src")
+    val ckptDir = Bridge.tempDir("graft_cur_ckpt")
     val docSchema = StructType(Seq(
       StructField("ts", TimestampType), StructField("doc_id", LongType),
       StructField("text", StringType)))
@@ -161,8 +161,8 @@ class StreamingRecoverySpec extends SparkSpecBase {
   }
 
   test("viralShingleAlarm emits each window's alarms once across a restart") {
-    val srcDir = Files.createTempDirectory("graft_viral_src").toString
-    val ckptDir = Files.createTempDirectory("graft_viral_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_viral_src")
+    val ckptDir = Bridge.tempDir("graft_viral_ckpt")
     val docSchema = StructType(Seq(
       StructField("ts", TimestampType), StructField("doc_id", LongType),
       StructField("text", StringType)))
@@ -220,8 +220,8 @@ class StreamingRecoverySpec extends SparkSpecBase {
   }
 
   test("dedupWithinWatermark fingerprint state survives a restart") {
-    val srcDir = Files.createTempDirectory("graft_ddw_src").toString
-    val ckptDir = Files.createTempDirectory("graft_ddw_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_ddw_src")
+    val ckptDir = Bridge.tempDir("graft_ddw_ckpt")
     val docSchema = StructType(Seq(
       StructField("ts", TimestampType), StructField("doc_id", LongType),
       StructField("text", StringType)))
@@ -267,9 +267,9 @@ class StreamingRecoverySpec extends SparkSpecBase {
        "ids continue, versions advance, artifact equals full recompute") {
     import org.apache.spark.sql.functions._
     import graft.streaming.StreamingSummary
-    val root = Files.createTempDirectory("graft_sum_resume_").toString + "/store"
-    val ckpt = Files.createTempDirectory("graft_sum_resume_ckpt_").toString
-    val srcDir = Files.createTempDirectory("graft_sum_resume_src").toString
+    val root = Bridge.tempDir("graft_sum_resume_") + "/store"
+    val ckpt = Bridge.tempDir("graft_sum_resume_ckpt_")
+    val srcDir = Bridge.tempDir("graft_sum_resume_src")
     val rowSchema = StructType(Seq(
       StructField("g", StringType), StructField("x", LongType)))
 
@@ -322,8 +322,8 @@ class StreamingRecoverySpec extends SparkSpecBase {
     // anomaly below would NOT flag and the means would re-seed — equality
     // with the batch fold over the full feed is only reachable if the
     // checkpoint restored the exact state
-    val srcDir = Files.createTempDirectory("graft_ewma_src").toString
-    val ckptDir = Files.createTempDirectory("graft_ewma_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_ewma_src")
+    val ckptDir = Bridge.tempDir("graft_ewma_ckpt")
     val emitted = mutable.Buffer[(Long, Long, Long, Long, Boolean)]()
     val ewmaSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("ts", TimestampType),
@@ -387,8 +387,8 @@ class StreamingRecoverySpec extends SparkSpecBase {
     // a restart exercises — run 1's arrivals must not re-emit when run 2
     // resumes from the checkpoint
     import graft.functions.ImageKernels
-    val srcDir = Files.createTempDirectory("graft_img_src").toString
-    val ckptDir = Files.createTempDirectory("graft_img_ckpt").toString
+    val srcDir = Bridge.tempDir("graft_img_src")
+    val ckptDir = Bridge.tempDir("graft_img_ckpt")
     val emitted = mutable.Buffer[(Long, Option[Long], Int)]()
     val known = Seq(0L, 2L).map(id => (id,
       ImageKernels.dhash64(ImageKernels.decodePng(

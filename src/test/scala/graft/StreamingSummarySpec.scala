@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.streaming.StreamingSummary
 
@@ -22,8 +23,7 @@ class StreamingSummarySpec extends SparkSpecBase {
        "no-ops; readers resolve through _HEAD") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_stream_mv_").toString + "/store"
+    val root = Bridge.tempDir("graft_stream_mv_") + "/store"
     val base = Seq(("a", 1L), ("a", 5L), ("b", 10L)).toDF("g", "x")
     StreamingSummary.init(spark, root, summarize(base))
     assert(StreamingSummary.head(spark, root) === ((1L, -1L)))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import scala.collection.mutable
@@ -8,6 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.streaming.SolarStreaming
 
@@ -37,7 +37,7 @@ class SuppressAndLatenessSpec extends SparkSpecBase {
   test("update-mode suppress twin: latest value per key, at most one " +
        "emission per key per trigger, unchanged keys stay silent") {
     val (input, df) = newInput()
-    val ckpt = Files.createTempDirectory("graft_supp_").toString
+    val ckpt = Bridge.tempDir("graft_supp_")
     // (batchId, w_start, module, cnt, sum)
     val emitted = mutable.Buffer[(Long, Long, String, Long, Double)]()
     val q = SolarStreaming.startModuleAggUpdateQuery(df, ckpt,
@@ -80,7 +80,7 @@ class SuppressAndLatenessSpec extends SparkSpecBase {
     val q = SolarStreaming.moduleAggStream(df)
       .writeStream.outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_late_").toString)
+        Bridge.tempDir("graft_late_"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         emitted ++= b.select("w_start", "module", "m_sum_power")
           .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))

@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import org.apache.spark.sql.graftbridge.Bridge
+
 import graft.sources.{Tables, Warc}
 
 /** WARC interchange framing: the reader/writer pair must survive payloads
@@ -23,7 +25,7 @@ class WarcSpec extends SparkSpecBase {
       (3L, "unicode é中文 text\nwith\nnewlines", "fr", "src3"),
       (4L, "plain", "en", "src1")
     ).toDF("doc_id", "text", "lang", "source")
-    val dir = Files.createTempDirectory("warc_rt_").toString + "/corpus"
+    val dir = Bridge.tempDir("warc_rt_") + "/corpus"
     Warc.writeWarc(docs, dir, shards = 2)
     val back = Warc.readWarc(spark, dir)
       .as[(Long, String, String, String)].collect().toSet
@@ -52,7 +54,7 @@ class WarcSpec extends SparkSpecBase {
         "WARC-Identified-Content-Language: und\r\n" +
         "Content-Length: " + payload2.length + "\r\n" +
         "\r\n"
-    val dir = Files.createTempDirectory("warc_foreign_").toString
+    val dir = Bridge.tempDir("warc_foreign_")
     val bytes = new java.io.ByteArrayOutputStream()
     bytes.write(rec1.getBytes(UTF_8)); bytes.write(payload1)
     bytes.write("\r\n\r\n".getBytes(UTF_8))
@@ -68,7 +70,7 @@ class WarcSpec extends SparkSpecBase {
   }
 
   test("truncated payload fails loudly, never silently drops the tail") {
-    val dir = Files.createTempDirectory("warc_trunc_").toString
+    val dir = Bridge.tempDir("warc_trunc_")
     val rec = "WARC/1.0\r\nWARC-Record-ID: <urn:graft:doc:7>\r\n" +
       "Content-Length: 100\r\n\r\nonly a few bytes"
     Files.write(java.nio.file.Paths.get(dir, "part-00000.warc"),
@@ -85,7 +87,7 @@ class WarcSpec extends SparkSpecBase {
       (11L, "", "und", "src2"),
       (12L, "répétition 中文 🚀 " * 50, "fr", "src3") // compressible + multibyte
     ).toDF("doc_id", "text", "lang", "source")
-    val dir = Files.createTempDirectory("warc_gz_").toString + "/corpus"
+    val dir = Bridge.tempDir("warc_gz_") + "/corpus"
     Warc.writeWarc(docs, dir, shards = 2, compress = true)
     // ignore Hadoop LocalFileSystem's hidden .crc checksum sidecars
     val names = new java.io.File(dir).listFiles().map(_.getName)
@@ -101,11 +103,11 @@ class WarcSpec extends SparkSpecBase {
       .toDF("doc_id", "text", "lang", "source")
     val gz = Seq((21L, "gzip shard", "de", "srcB"))
       .toDF("doc_id", "text", "lang", "source")
-    val dir = Files.createTempDirectory("warc_mix_").toString + "/corpus"
+    val dir = Bridge.tempDir("warc_mix_") + "/corpus"
     Warc.writeWarc(plain, dir, shards = 1)
     // write the gzip shard into a sibling temp dir, then move it in (the
     // writer would otherwise collide on part numbering)
-    val dir2 = Files.createTempDirectory("warc_mix2_").toString + "/c"
+    val dir2 = Bridge.tempDir("warc_mix2_") + "/c"
     Warc.writeWarc(gz, dir2, shards = 1, compress = true)
     val gzFile = new java.io.File(dir2).listFiles()
       .filterNot(_.getName.startsWith(".")).head // skip the .crc sidecar
@@ -120,7 +122,7 @@ class WarcSpec extends SparkSpecBase {
   test("truncated gzip shard fails loudly, never silently drops the tail") {
     val docs = Seq((30L, "x" * 5000, "en", "src1"))
       .toDF("doc_id", "text", "lang", "source")
-    val dir = Files.createTempDirectory("warc_gztrunc_").toString + "/corpus"
+    val dir = Bridge.tempDir("warc_gztrunc_") + "/corpus"
     Warc.writeWarc(docs, dir, shards = 1, compress = true)
     val shard = new java.io.File(dir).listFiles()
       .find(_.getName.endsWith(".gz")).get
@@ -140,7 +142,7 @@ class WarcSpec extends SparkSpecBase {
   test("sf0.001 corpus round-trips shard-parallel with exact contents") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text", "lang", "source")
-    val dir = Files.createTempDirectory("warc_sf_").toString + "/corpus"
+    val dir = Bridge.tempDir("warc_sf_") + "/corpus"
     Warc.writeWarc(docs, dir, shards = 4)
     // shard count drives read parallelism (the gzip-JSONL contract)
     val parts = new java.io.File(dir).listFiles()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The `format("warc")` DSv2 surface: batch write protocol (temp-file
   * commit, overwrite-truncate) + per-shard batch read, and interop with
@@ -18,7 +19,7 @@ class WarcV2Spec extends SparkSpecBase {
       .collect().map(_.toSeq).toSet
 
   test("V2 write → V2 read round-trips the corpus exactly (gzip)") {
-    val path = java.nio.file.Files.createTempDirectory("warcv2_").toString
+    val path = Bridge.tempDir("warcv2_")
     docs.repartition(4)
       .write.format("warc").option("compress", "true")
       .mode("overwrite").save(path)
@@ -32,16 +33,16 @@ class WarcV2Spec extends SparkSpecBase {
   }
 
   test("V2-written shards are readable by Warc.readWarc and vice versa") {
-    val p1 = java.nio.file.Files.createTempDirectory("warcv2_i1_").toString
+    val p1 = Bridge.tempDir("warcv2_i1_")
     docs.write.format("warc").mode("overwrite").save(p1)
     assert(asSet(graft.sources.Warc.readWarc(spark, p1)) === asSet(docs))
-    val p2 = java.nio.file.Files.createTempDirectory("warcv2_i2_").toString
+    val p2 = Bridge.tempDir("warcv2_i2_")
     graft.sources.Warc.writeWarc(docs, p2, shards = 3, compress = true)
     assert(asSet(spark.read.format("warc").load(p2)) === asSet(docs))
   }
 
   test("overwrite truncates the prior layout; append accumulates") {
-    val path = java.nio.file.Files.createTempDirectory("warcv2_ow_").toString
+    val path = Bridge.tempDir("warcv2_ow_")
     val half1 = docs.filter(col("doc_id") % 2 === 0)
     val half2 = docs.filter(col("doc_id") % 2 === 1)
     half1.write.format("warc").mode("overwrite").save(path)
@@ -55,7 +56,7 @@ class WarcV2Spec extends SparkSpecBase {
   }
 
   test("an empty relation writes an empty layout that reads back empty") {
-    val path = java.nio.file.Files.createTempDirectory("warcv2_e_").toString
+    val path = Bridge.tempDir("warcv2_e_")
     docs.filter(lit(false)).write.format("warc").mode("overwrite").save(path)
     assert(spark.read.format("warc").load(path).count() === 0)
   }

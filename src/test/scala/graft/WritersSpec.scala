@@ -1,13 +1,21 @@
 package graft
 
-import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.sources.{Tables, Writers}
 
 class WritersSpec extends SparkSpecBase {
 
+  /** Managed tables this suite created: dropped (data included) at the end. */
+  private val tables = scala.collection.mutable.Buffer[String]()
+
+  override protected def afterAll(): Unit = {
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    super.afterAll()
+  }
+
   test("date partitioning prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("graft_part_").toString
+    val dir = Bridge.tempDir("graft_part_")
     val events = Tables.events(spark, "/root/testdata/sf0.001")
     Writers.writeEventsPartitioned(events, dir)
 
@@ -26,6 +34,7 @@ class WritersSpec extends SparkSpecBase {
     // rerun would otherwise hit locationAlreadyExists on CREATE
     val t1 = s"li_bucketed_${System.nanoTime()}"
     val t2 = s"or_bucketed_${System.nanoTime()}"
+    tables ++= Seq(t1, t2)
     Writers.writeBucketed(li.select("l_orderkey", "l_quantity"), t1, "l_orderkey", 8)
     Writers.writeBucketed(or.select("o_orderkey", "o_totalprice"), t2, "o_orderkey", 8)
 
@@ -93,7 +102,7 @@ class WritersSpec extends SparkSpecBase {
 
   test("gzip JSONL round trip is lossless and sharded for parallel reads") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString + "/docs"
+    val dir = Bridge.tempDir("jsonl") + "/docs"
     Writers.writeJsonl(docs, dir, shards = 4)
     // shard count drives gzip read parallelism (non-splittable codec)
     val parts = new java.io.File(dir).listFiles()
@@ -109,8 +118,7 @@ class WritersSpec extends SparkSpecBase {
 
   test("compactPartitioned collapses fragmented partitions losslessly") {
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files
-      .createTempDirectory("compact_").toString + "/events"
+    val dir = Bridge.tempDir("compact_") + "/events"
     // 16-way fragmented write: streaming-ingest debris
     graft.sources.Writers.writeEventsPartitioned(events.repartition(16), dir)
     val pre = spark.read.parquet(dir).collect().map(_.toSeq).toSet
@@ -142,8 +150,7 @@ class WritersSpec extends SparkSpecBase {
       .withColumn("ts",
         org.apache.spark.sql.functions.lit("2024-01-01 12:00:00")
           .cast("timestamp"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("compact_big_").toString + "/events"
+    val dir = Bridge.tempDir("compact_big_") + "/events"
     graft.sources.Writers.writeEventsPartitioned(docs.repartition(4), dir)
     // target ~100 rows/file: a 1,000-row partition must split, not
     // produce one monolith
@@ -160,7 +167,7 @@ class WritersSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     val events = Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "user_id", "value")
-    val dir = Files.createTempDirectory("graft_zorder_").toString + "/events"
+    val dir = Bridge.tempDir("graft_zorder_") + "/events"
     Writers.writeZOrdered(events, dir, "user_id", "value")
     val lay = spark.read.parquet(dir)
     // 1) lossless round trip
@@ -199,7 +206,7 @@ class WritersSpec extends SparkSpecBase {
     // 4) degenerate input: a constant column collapses to bucket 0 on
     // that axis without dividing by zero
     val const = events.withColumn("user_id", lit(7L))
-    val dir2 = Files.createTempDirectory("graft_zorder_c_").toString + "/e"
+    val dir2 = Bridge.tempDir("graft_zorder_c_") + "/e"
     Writers.writeZOrdered(const, dir2, "user_id", "value")
     val back = spark.read.parquet(dir2)
     assert(back.count() === events.count())
@@ -211,7 +218,7 @@ class WritersSpec extends SparkSpecBase {
   test("evolved read fuses layout generations with NULL-fill; schemaDiff " +
        "reports the delta; incompatible generations fail loudly") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_evo_spec_").toString
+    val root = Bridge.tempDir("graft_evo_spec_")
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
     val v2 = Seq((3L, "c", 30L), (4L, "d", 40L)).toDF("k", "s", "extra")
     v1.write.parquet(s"$root/v1")

@@ -2,6 +2,7 @@ package graft.sources.v2
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.SerializableHadoopConf
@@ -26,7 +27,7 @@ class WarcWriteProtocolSpec extends AnyFunSuite {
       .map(_.getName).toSeq.filterNot(_.startsWith("."))
 
   test("task abort deletes the temp file; nothing was ever glob-visible") {
-    val path = java.nio.file.Files.createTempDirectory("warcproto_a_").toString
+    val path = Bridge.tempDir("warcproto_a_")
     val w = WarcWriterFactory(path, compress = false, Seq(0, 1, 2, 3), conf)
       .createWriter(0, 0L)
     w.write(row(1L)); w.write(row(2L))
@@ -38,7 +39,7 @@ class WarcWriteProtocolSpec extends AnyFunSuite {
   }
 
   test("job commit renames temps to shard names; job abort deletes them") {
-    val path = java.nio.file.Files.createTempDirectory("warcproto_c_").toString
+    val path = Bridge.tempDir("warcproto_c_")
     val bw = new WarcBatchWrite(path, compress = false, truncate = false,
       Seq(0, 1, 2, 3), conf)
     val factory = bw.createBatchWriterFactory(null)

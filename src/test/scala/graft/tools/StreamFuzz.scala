@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Batch ↔ streaming differential fuzzer (VERDICT r16 #3): seeded
   * windowed-aggregation/join/dedup plans run TWICE over identical data —
@@ -559,10 +560,8 @@ object StreamFuzz {
     */
   private def runRestartTws(spark: SparkSession, q: SFQuery): Seq[String] = {
     import spark.implicits._
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_sfz_twssrc_").toString
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_sfz_twsckpt_").toString
+    val srcDir = Bridge.tempDir("graft_sfz_twssrc_")
+    val ckptDir = Bridge.tempDir("graft_sfz_twsckpt_")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("ts",
         org.apache.spark.sql.types.TimestampType),
@@ -636,10 +635,8 @@ object StreamFuzz {
     */
   private def runRestartTwsMap(spark: SparkSession, q: SFQuery): Seq[String] = {
     import spark.implicits._
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_sfz_twsmsrc_").toString
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_sfz_twsmckpt_").toString
+    val srcDir = Bridge.tempDir("graft_sfz_twsmsrc_")
+    val ckptDir = Bridge.tempDir("graft_sfz_twsmckpt_")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("ts",
         org.apache.spark.sql.types.TimestampType),
@@ -764,10 +761,8 @@ object StreamFuzz {
   private def runRestart(spark: SparkSession, q: SFQuery,
                          update: Boolean = false): Seq[String] = {
     import spark.implicits._
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_sfz_src_").toString
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_sfz_ckpt_").toString
+    val srcDir = Bridge.tempDir("graft_sfz_src_")
+    val ckptDir = Bridge.tempDir("graft_sfz_ckpt_")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("ts",
         org.apache.spark.sql.types.TimestampType),
