@@ -1714,7 +1714,12 @@ private[graft] trait EntryOraclesB { self: EntryShared =>
     // deduped corpus's tokens (a scalar subquery — the budget derives
     // from the data in both engines), and q77's block-sharded packing of
     // the selected docs. Each fragment is the established bit-exact
-    // oracle of its standalone gate; this chains them.
+    // oracle of its standalone gate; this chains them. `labels` is
+    // MATERIALIZED because j2, m2, surv and dd all read the recursive
+    // walk through it: inlined, DuckDB 1.0 ran out of memory on `surv`
+    // alone under a 2 GiB limit (and on the whole query under its
+    // 12.5 GiB default) although `walk` holds 37 rows at sf0.01;
+    // materialized, `surv` finishes in 43 s under the same limit.
     "q119_curation_dag" -> {
       val stop = stopCountSql("ltoks", TextAnalysis.StopwordDicts.head._2)
       val qual =
@@ -1777,7 +1782,7 @@ private[graft] trait EntryOraclesB { self: EntryShared =>
          |  SELECT src, src FROM edges
          |  UNION
          |  SELECT w.id, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
-         |labels AS (
+         |labels AS MATERIALIZED (
          |  SELECT id AS doc_id, min(reach) AS cluster FROM walk GROUP BY id),
          |j2 AS (SELECT labels.cluster, labels.doc_id, q0.quality
          |       FROM labels JOIN q0 USING (doc_id)),

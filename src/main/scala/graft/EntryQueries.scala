@@ -27,40 +27,38 @@ private[graft] trait EntryQueries { self: EntryShared =>
 
     // rows 10-11: window-preserving re-key + per-panel aggregate
     "q03_panel_agg" -> ((s, dir) =>
-      Solar.panelAgg(Solar.moduleAgg(Tables.events(s, dir)))
-        .select(col("w_start"), col("panel"), col("p_cnt"),
+      Solar.panelAgg(Solar.moduleWindowAgg(Solar.normalize(Tables.events(s, dir))))
+        .select(Solar.windowStart, col("panel"), col("p_cnt"),
           r4("p_sum_power"), col("p_avg_power"))),
 
-    // row 12: windowed inner join #1 (panel-agg broadcast onto module-agg)
-    // q04–q08 consume the shared module aggregate (solarStagesShared):
-    // the chain's upstream scan + shuffle runs once per (session, dir).
-    "q04_join_panel_module" -> ((s, dir) => {
-      val st = solarStagesShared(s, dir)
-      Solar.joinPanelModule(st.module, st.panel)
-        .select(moduleOut ++ Seq(col("p_cnt"), r4("p_sum_power"), col("p_avg_power")): _*)
-    }),
+    // row 12: windowed inner join #1 — each module row with its panel's
+    // aggregate, re-attached from the panel stage's gathered list.
+    // q04–q08 apply the panel stage to the shared module aggregate
+    // (solarPanels): the chain's upstream scan + shuffle runs once per
+    // (session, dir).
+    "q04_join_panel_module" -> ((s, dir) =>
+      solarRows(s, dir)
+        .select(moduleOut ++ Seq(col("p_cnt"), r4("p_sum_power"), col("p_avg_power")): _*)),
 
     // row 13: rounded-mean variance / deviance re-aggregation (SURVEY §2.12)
     "q05_variance_deviance" -> ((s, dir) =>
-      solarStagesShared(s, dir).panelStats
-        .select(Seq(col("w_start"), col("panel")) ++ panelFinalOut: _*)),
+      solarPanels(s, dir)
+        .select(Seq(Solar.windowStart, col("panel")) ++ panelFinalOut: _*)),
 
-    // row 14: windowed inner join #2 (module-agg ⋈ final panel stats)
+    // row 14: windowed inner join #2 (module rows with the final panel stats)
     "q06_join_module_panel" -> ((s, dir) =>
-      solarStagesShared(s, dir).joined
-        .select(moduleOut ++ panelFinalOut: _*)),
+      solarRows(s, dir).select(moduleOut ++ panelFinalOut: _*)),
 
     // rows 15-16: z-score anomaly predicate + window-unwrap projection
     "q07_anomaly_filter" -> ((s, dir) =>
-      Solar.anomalies(solarStagesShared(s, dir).joined)
+      Solar.anomalies(solarRows(s, dir))
         .select(col("w_start"), col("panel"), col("module"),
           round(abs(col("m_sum_power") - col("p_avg_power")), 4).as("abs_diff"),
           col("deviance"))),
 
     // full topology: events → anomalies (batch twin of SolarConsumer.java)
     "q08_flagship_anomalies" -> ((s, dir) =>
-      Solar.anomalies(solarStagesShared(s, dir).joined)
-        .select(moduleOut ++ panelFinalOut: _*)),
+      Solar.anomalies(solarRows(s, dir)).select(moduleOut ++ panelFinalOut: _*)),
 
     // rows 2 + 17: JSON decode (from_json) / encode (to_json) round-trip
     "q09_json_roundtrip" -> ((s, dir) =>

@@ -40,13 +40,17 @@ private[graft] trait EntryShared {
     SessionArtifacts.get(s, dir, "ccLabels", Stages.releaseCheckpoint)(
       ccLabels(s, dir))
 
-  // Solar module aggregate (VERDICT r8 #6): q04–q08 rebuild only the
-  // panel stages below it (Solar.stagesFrom); q02/q03 compute fresh, as
-  // their timings price the stage build itself.
-  protected def solarStagesShared(s: SparkSession, dir: String): Solar.Stages =
-    Solar.stagesFrom(SessionArtifacts.get(s, dir, "solarModule",
+  // Solar module aggregate (VERDICT r8 #6): q04–q08 apply the panel stage
+  // to one checkpointed module relation per (session, dir); q02/q03
+  // compute fresh, as their timings price the stage build itself.
+  protected def solarPanels(s: SparkSession, dir: String): DataFrame =
+    Solar.panelAgg(SessionArtifacts.get(s, dir, "solarModule",
       Stages.releaseCheckpoint)(
-      Solar.moduleAgg(Tables.events(s, dir)).localCheckpoint(true)))
+      Solar.moduleWindowAgg(Solar.normalize(Tables.events(s, dir))).localCheckpoint(true)))
+
+  // The panel stage's module rows, window unwrapped (q04, q06–q08).
+  protected def solarRows(s: SparkSession, dir: String): DataFrame =
+    Solar.unwrap(Solar.moduleRows(solarPanels(s, dir)))
 
   // MinHash-LSH calibration relation (VERDICT r10 #1): the unfiltered
   // superset of the verified pairs (same banding and cap, exact Jaccard on

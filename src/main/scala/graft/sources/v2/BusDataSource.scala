@@ -28,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * rows (`SolarConsumer.java:99,188`) cannot be integration-tested
   * against a live broker here — `KafkaWireSpec` holds that harness and
   * cancels without `GRAFT_KAFKA_BOOTSTRAP`. This connector closes the
-  * remaining gap IN-JVM: `SolarStreaming.fromKafka → anomalyPipeline →
-  * toKafka` runs end to end through a real DSv2 source and a real DSv2
+  * remaining gap IN-JVM: `SolarStreaming.fromKafka → anomalyPipelineStream
+  * → toKafka` runs end to end through a real DSv2 source and a real DSv2
   * streaming sink, with offset checkpointing, epoch-commit idempotence,
   * and golden-byte assertions on the sink topic (`BusEndToEndSpec`).
   * Deployment against a real broker is the SAME code path with

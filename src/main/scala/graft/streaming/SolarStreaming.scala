@@ -24,17 +24,19 @@ import graft.operators.Solar
   *    stream duplication at `SolarConsumer.java:136-138` is unnecessary —
   *    a DataFrame feeds any number of consumers.
   *
-  * Topology shape: [[anomalyPipelineStream]] runs the whole topology in
-  * the streaming engine as two chained windowed aggregates. The
-  * per-module aggregate is the only long-lived state, keyed by (window,
-  * panel, module). The window-on-window panel aggregate after it sees a
-  * window's module rows in the micro-batch that finalizes them (append
-  * mode emits them all at once, as the watermark passes the window end)
-  * and emits in that batch, so its state is empty between batches — the
-  * same barrier the reference encodes with suppression. Variance, the
-  * joins back onto module rows and the z-filter are stateless columns
-  * after it. [[streamStreamJoin]] and [[panelAggStream]] are the
-  * join-for-join witnesses of the reference topology.
+  * Topology shape: the stages are [[Solar]]'s, the one definition of the
+  * topology for batch and stream; this object puts a watermark under them.
+  * [[anomalyPipelineStream]] runs the whole topology in the streaming
+  * engine as two chained windowed aggregates. The per-module aggregate is
+  * the only long-lived state, keyed by (window, panel, module). The
+  * window-on-window panel aggregate after it sees a window's module rows
+  * in the micro-batch that finalizes them (append mode emits them all at
+  * once, as the watermark passes the window end) and emits in that batch,
+  * so its state is empty between batches — the same barrier the reference
+  * encodes with suppression. Variance, the joins back onto module rows and
+  * the z-filter are stateless columns after it. [[streamStreamJoin]] and
+  * [[panelAggStream]] are the join-for-join witnesses of the reference
+  * topology.
   */
 object SolarStreaming {
 
@@ -102,22 +104,13 @@ object SolarStreaming {
         col("panel").isNull || col("module").isNull || col("power").isNull)
 
   /** The watermarked per-module tumbling-window aggregate (rows 5-8),
-    * keyed by the `w` window struct: `m_cnt`, `m_sum_power` and the exact
-    * quantized mean `m_avg_power`. [[moduleAggStream]], the module side
-    * of [[streamStreamJoin]] and [[anomalyPipelineStream]] all start from
-    * it.
+    * [[Solar.moduleWindowAgg]] after the watermark. [[moduleAggStream]],
+    * [[panelAggStream]], both sides of [[streamStreamJoin]] and
+    * [[anomalyPipelineStream]] all start from it.
     */
-  private def moduleWindowAgg(normalized: DataFrame, windowDuration: String,
-                              watermarkDelay: String): DataFrame =
-    normalized
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDuration).as("w"),
-        col("panel"), col("module"))
-      .agg(
-        count(lit(1)).as("m_cnt"),
-        sum(col("power")).as("m_sum_power"),
-        graft.functions.AggFunctions.meanQ(col("power"), 1)
-          .as("m_avg_power"))
+  private def watermarkedModules(normalized: DataFrame, windowDuration: String,
+                                 watermarkDelay: String): DataFrame =
+    Solar.moduleWindowAgg(normalized.withWatermark("ts", watermarkDelay), windowDuration)
 
   /** Stateful stage: watermarked per-module tumbling-window aggregate
     * (rows 5-8). In append mode this emits each (window, panel, module)
@@ -126,10 +119,7 @@ object SolarStreaming {
   def moduleAggStream(normalized: DataFrame,
                       windowDuration: String = Solar.WindowDuration,
                       watermarkDelay: String = "30 seconds"): DataFrame =
-    moduleWindowAgg(normalized, windowDuration, watermarkDelay)
-      .select(col("w.start").cast("long").as("w_start"),
-        col("panel"), col("module"),
-        col("m_cnt"), col("m_sum_power"), col("m_avg_power"))
+    Solar.unwrapModule(watermarkedModules(normalized, windowDuration, watermarkDelay))
 
   /** Streaming twin of [[graft.operators.Windows.ohlcDownsample]]: the
     * candle compaction as a continuous query — same min_by/max_by
@@ -176,32 +166,26 @@ object SolarStreaming {
     * aggregate still emits exactly once per finalized window. The reference
     * needed a repartition topic + second state store + suppression for
     * this hop (`SolarConsumer.java:122-130`); here it is a second shuffle
-    * and a chained window.
+    * and a chained window: [[Solar.panelAgg]], of which only the panel
+    * columns are kept (Catalyst prunes the gathered module list).
     */
   def panelAggStream(normalized: DataFrame,
                      windowDuration: String = Solar.WindowDuration,
                      watermarkDelay: String = "30 seconds"): DataFrame =
-    normalized
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDuration).as("w"),
-        col("panel"), col("module"))
-      .agg(sum(col("power")).as("m_sum_power"))
-      .groupBy(window(col("w"), windowDuration).as("pw"), col("panel"))
-      .agg(
-        count(lit(1)).as("p_cnt"),
-        sum(col("m_sum_power")).as("p_sum_power"),
-        graft.functions.AggFunctions.meanQ(col("m_sum_power"), 1)
-          .as("p_avg_power"))
-      .select(col("pw.start").cast("long").as("w_start"), col("panel"),
+    Solar.panelAgg(watermarkedModules(normalized, windowDuration, watermarkDelay),
+        windowDuration)
+      .select(Solar.windowStart, col("panel"),
         col("p_cnt"), col("p_sum_power"), col("p_avg_power"))
 
   /** TRUE watermarked stream-stream join — the literal twin of the
     * reference's windowed join #1 (`SolarConsumer.java:142-147`), running
     * inside the streaming engine (state-store backed), not in foreachBatch:
     * both sides are watermarked streaming aggregations over the same
-    * normalized input, joined on the (window, panel) equi-key. Kafka
-    * Streams' `JoinWindows.of(30 s)` tolerance is vacuous here because the
-    * window key already pins the exact window (SURVEY §2 row 12).
+    * normalized input — the module aggregate, and [[Solar.panelAgg]]'s
+    * panel columns over a second one — joined on the (window, panel)
+    * equi-key. Kafka Streams' `JoinWindows.of(30 s)` tolerance is vacuous
+    * here because the window key already pins the exact window (SURVEY §2
+    * row 12).
     *
     * Uses Spark's multiple-stateful-operator support (3.4+): two windowed
     * aggregations feed a stream-stream join in append mode; joining on the
@@ -215,21 +199,13 @@ object SolarStreaming {
   def streamStreamJoin(normalized: DataFrame,
                        windowDuration: String = Solar.WindowDuration,
                        watermarkDelay: String = "30 seconds"): DataFrame = {
-    val m = moduleWindowAgg(normalized, windowDuration, watermarkDelay)
-    val p = normalized
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDuration).as("w"),
-        col("panel"), col("module"))
-      .agg(sum(col("power")).as("ms"))
-      .groupBy(window(col("w"), windowDuration).as("w"), col("panel"))
-      .agg(
-        count(lit(1)).as("p_cnt"),
-        sum(col("ms")).as("p_sum_power"),
-        graft.functions.AggFunctions.meanQ(col("ms"), 1)
-          .as("p_avg_power"))
+    val m = watermarkedModules(normalized, windowDuration, watermarkDelay)
+    val p = Solar.panelAgg(watermarkedModules(normalized, windowDuration, watermarkDelay),
+        windowDuration)
+      .select(col("w"), col("panel"),
+        col("p_cnt"), col("p_sum_power"), col("p_avg_power"))
     m.join(p, Seq("w", "panel"))
-      .select(col("w").getField("start").cast("long").as("w_start"),
-        col("panel"), col("module"),
+      .select(Solar.windowStart, col("panel"), col("module"),
         col("m_cnt"), col("m_sum_power"), col("m_avg_power"),
         col("p_cnt"), col("p_sum_power"), col("p_avg_power"))
   }
@@ -262,7 +238,16 @@ object SolarStreaming {
     * (module ordering excludes self/duplicate pairs).
     */
   def coReadingsStream(normalized: DataFrame, tolSec: Int = 30,
-                       watermarkDelay: String = "30 seconds"): DataFrame = {
+                       watermarkDelay: String = "30 seconds"): DataFrame =
+    coReadings(normalized, tolSec, watermarkDelay, "inner")
+
+  /** The co-reading join of [[coReadingsStream]] and its outer forms:
+    * watermarked l/r projections of the same stream, paired on the panel,
+    * `l_module < r_module` and the ±`tolSec` event-time range. A full
+    * outer row may have only the right side, so its panel is coalesced.
+    */
+  private def coReadings(normalized: DataFrame, tolSec: Int,
+                         watermarkDelay: String, joinType: String): DataFrame = {
     val l = normalized
       .select(col("ts").as("l_ts"), col("panel"),
         col("module").as("l_module"), col("power").as("l_power"))
@@ -271,11 +256,15 @@ object SolarStreaming {
       .select(col("ts").as("r_ts"), col("panel").as("r_panel"),
         col("module").as("r_module"), col("power").as("r_power"))
       .withWatermark("r_ts", watermarkDelay)
+    val panel =
+      if (joinType == "fullOuter") coalesce(col("panel"), col("r_panel")).as("panel")
+      else col("panel")
     l.join(r, expr(
       s"""panel = r_panel AND l_module < r_module AND
          |r_ts BETWEEN l_ts - INTERVAL $tolSec SECONDS
-         |         AND l_ts + INTERVAL $tolSec SECONDS""".stripMargin))
-      .select(unix_micros(col("l_ts")).as("l_t"), col("panel"),
+         |         AND l_ts + INTERVAL $tolSec SECONDS""".stripMargin),
+      joinType)
+      .select(unix_micros(col("l_ts")).as("l_t"), panel,
         col("l_module"), col("r_module"),
         unix_micros(col("r_ts")).as("r_t"),
         col("l_power"), col("r_power"))
@@ -299,25 +288,8 @@ object SolarStreaming {
     * unmatched row the spec pins.
     */
   def coReadingsLeftOuterStream(normalized: DataFrame, tolSec: Int = 30,
-                                watermarkDelay: String = "30 seconds"): DataFrame = {
-    val l = normalized
-      .select(col("ts").as("l_ts"), col("panel"),
-        col("module").as("l_module"), col("power").as("l_power"))
-      .withWatermark("l_ts", watermarkDelay)
-    val r = normalized
-      .select(col("ts").as("r_ts"), col("panel").as("r_panel"),
-        col("module").as("r_module"), col("power").as("r_power"))
-      .withWatermark("r_ts", watermarkDelay)
-    l.join(r, expr(
-      s"""panel = r_panel AND l_module < r_module AND
-         |r_ts BETWEEN l_ts - INTERVAL $tolSec SECONDS
-         |         AND l_ts + INTERVAL $tolSec SECONDS""".stripMargin),
-      "leftOuter")
-      .select(unix_micros(col("l_ts")).as("l_t"), col("panel"),
-        col("l_module"), col("r_module"),
-        unix_micros(col("r_ts")).as("r_t"),
-        col("l_power"), col("r_power"))
-  }
+                                watermarkDelay: String = "30 seconds"): DataFrame =
+    coReadings(normalized, tolSec, watermarkDelay, "leftOuter")
 
   /** FULL OUTER time-interval stream-stream join — completes the flavor
     * matrix ([[coReadingsStream]] inner, [[coReadingsLeftOuterStream]]
@@ -332,34 +304,17 @@ object SolarStreaming {
     * never as the RIGHT row.
     */
   def coReadingsFullOuterStream(normalized: DataFrame, tolSec: Int = 30,
-                                watermarkDelay: String = "30 seconds"): DataFrame = {
-    val l = normalized
-      .select(col("ts").as("l_ts"), col("panel"),
-        col("module").as("l_module"), col("power").as("l_power"))
-      .withWatermark("l_ts", watermarkDelay)
-    val r = normalized
-      .select(col("ts").as("r_ts"), col("panel").as("r_panel"),
-        col("module").as("r_module"), col("power").as("r_power"))
-      .withWatermark("r_ts", watermarkDelay)
-    l.join(r, expr(
-      s"""panel = r_panel AND l_module < r_module AND
-         |r_ts BETWEEN l_ts - INTERVAL $tolSec SECONDS
-         |         AND l_ts + INTERVAL $tolSec SECONDS""".stripMargin),
-      "fullOuter")
-      .select(unix_micros(col("l_ts")).as("l_t"),
-        coalesce(col("panel"), col("r_panel")).as("panel"),
-        col("l_module"), col("r_module"),
-        unix_micros(col("r_ts")).as("r_t"),
-        col("l_power"), col("r_power"))
-  }
+                                watermarkDelay: String = "30 seconds"): DataFrame =
+    coReadings(normalized, tolSec, watermarkDelay, "fullOuter")
 
   /** The ENTIRE reference topology inside the streaming engine — no
-    * foreachBatch anywhere — as two chained windowed aggregates:
+    * foreachBatch anywhere — as [[Solar.anomaliesOf]] over the watermarked
+    * module aggregate, which plans two chained windowed aggregates:
     *
     *  1. the per-module aggregate (rows 5-8), computed once;
-    *  2. a window-on-window aggregate per (window, panel), the same
-    *     chaining [[panelAggStream]] uses, that computes the panel stats
-    *     and gathers the panel's module rows sorted by module.
+    *  2. [[Solar.panelAgg]], a window-on-window aggregate per (window,
+    *     panel) that computes the panel stats and gathers the panel's
+    *     module rows sorted by module.
     *
     * The reference's two windowed joins and variance re-aggregation
     * (`SolarConsumer.java:142-173`) then become stateless columns: the
@@ -368,7 +323,8 @@ object SolarStreaming {
     * and `inline` re-attaches the panel stats to every module row before
     * the z-filter. The watermark propagates through both state stores
     * (Spark's multiple-stateful-operator support) and every window emits
-    * exactly once.
+    * exactly once. Over a static DataFrame it plans the same stages as
+    * [[Solar.pipeline]] and returns the same rows.
     *
     * Aggregate 2 receives a window's module rows in the micro-batch that
     * finalizes them and emits them in that same batch, so its state is
@@ -384,30 +340,9 @@ object SolarStreaming {
   def anomalyPipelineStream(normalized: DataFrame,
                             windowDuration: String = Solar.WindowDuration,
                             watermarkDelay: String = "30 seconds",
-                            z: Double = Solar.Z): DataFrame = {
-    moduleWindowAgg(normalized, windowDuration, watermarkDelay)
-      .groupBy(window(col("w"), windowDuration).as("w"), col("panel"))
-      .agg(
-        count(lit(1)).as("p_cnt"),
-        sum(col("m_sum_power")).as("p_sum_power"),
-        graft.functions.AggFunctions.meanQ(col("m_sum_power"), 1)
-          .as("p_avg_power"),
-        array_sort(collect_list(struct(col("module"), col("m_cnt"),
-          col("m_sum_power"), col("m_avg_power")))).as("modules"))
-      .withColumn("squares_sum", aggregate(col("modules"), lit(0.0),
-        (acc, m) => acc + pow(m.getField("m_sum_power") - col("p_avg_power"), 2)))
-      .withColumn("variance", col("squares_sum") / col("p_cnt"))
-      .withColumn("deviance", round(sqrt(col("variance")), 1))
-      .select(col("w"), col("panel"), col("p_cnt"), col("p_sum_power"),
-        col("p_avg_power"), col("squares_sum"), col("variance"),
-        col("deviance"), inline(col("modules")))
-      .filter(abs(col("m_sum_power") - col("p_avg_power")) > lit(z) * col("deviance"))
-      .select(col("w").getField("start").cast("long").as("w_start"),
-        col("panel"), col("module"),
-        col("m_cnt"), col("m_sum_power"), col("m_avg_power"),
-        col("p_cnt"), col("p_sum_power"), col("p_avg_power"),
-        col("squares_sum"), col("variance"), col("deviance"))
-  }
+                            z: Double = Solar.Z): DataFrame =
+    Solar.anomaliesOf(watermarkedModules(normalized, windowDuration, watermarkDelay),
+      windowDuration, z)
 
   /** LITERAL `suppress(untilTimeLimit(30 s, unbounded()))` twin
     * (`SolarConsumer.java:114`) — the update-mode rate-limit semantics,

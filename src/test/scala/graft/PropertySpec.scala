@@ -75,11 +75,10 @@ class PropertySpec extends SparkSpecBase {
         val variance = squares / sums.size
         (w, p) -> (variance, round1(math.sqrt(variance)))
       }
-      val st = Solar.stages(toDf(evs))
-      val got = st.panelStats.select("w_start", "panel", "variance", "deviance")
+      val got = Solar.panelAgg(Solar.moduleWindowAgg(Solar.normalize(toDf(evs))))
+        .select(Solar.windowStart, col("panel"), col("variance"), col("deviance"))
         .collect().map(r => (r.getLong(0), r.getString(1)) ->
           (r.getDouble(2), r.getDouble(3))).toMap
-      st.module.unpersist()
       got.keySet == ref.keySet && ref.forall { case (k, (v, d)) =>
         approx(got(k)._1, v) && got(k)._2 == d
       }

@@ -59,9 +59,11 @@ class StreamStreamJoinSpec extends SparkSpecBase {
   }
 
   test("stream-stream join matches the batch join on the same input") {
-    // batch reference: moduleAgg ⋈ panelAgg through the batch stages
-    val m = Solar.moduleAgg(data.toDF("ts", "event_type", "user_id", "value"))
-    val expected = Solar.joinPanelModule(m, Solar.panelAgg(m))
+    // batch reference: the panel stage's inlined module rows, so the join
+    // witness and the batch gather check each other
+    val events = data.toDF("ts", "event_type", "user_id", "value")
+    val expected = Solar.unwrap(Solar.moduleRows(
+        Solar.panelAgg(Solar.moduleWindowAgg(Solar.normalize(events)))))
       .select(cols.head, cols.tail: _*)
       .as[JoinedRow].collect().toSet
 
@@ -117,7 +119,7 @@ class StreamStreamJoinSpec extends SparkSpecBase {
     assert(expected.keys.map(_._1).toSet === Set(1704067200L, 1704067230L),
       s"fixture must anomalize both split and unsplit windows: ${expected.keys}")
     // the single-module panel: deviance 0 and no anomaly
-    val p3 = Solar.stagesFrom(Solar.moduleAgg(events)).panelStats
+    val p3 = Solar.panelAgg(Solar.moduleWindowAgg(Solar.normalize(events)))
       .filter(org.apache.spark.sql.functions.col("panel") === "p3")
       .select("p_cnt", "deviance").as[(Long, Double)].collect()
     assert(p3.toSeq === Seq((1L, 0.0)))
@@ -139,6 +141,36 @@ class StreamStreamJoinSpec extends SparkSpecBase {
       assert(got.columns.toSeq === PipelineCols)
       assert(got.count() === expected.size.toLong, "a row emitted twice")
       assertSameRows(keyed(got), expected)
+    } finally query.stop()
+  }
+
+  test("streaming squares fold around the rounded panel mean") {
+    // module sums 1, 2 and 10: the panel mean 4.333… rounds to 4.3
+    // (SolarPanelAggregator.java:40-41,52), so squares_sum is
+    // 3.3² + 2.3² + 5.7² = 48.67, not the 48.666… of the exact mean;
+    // deviance = round(sqrt(48.67 / 3), 1) = 4.0, so only m3 is anomalous
+    val (input, df) = newInput()
+    val name = s"sq_${System.nanoTime()}"
+    val query = SolarStreaming.anomalyPipelineStream(df)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      input.addData(
+        (ts("2024-01-01 00:00:01"), "p1", "m1", 1.0),
+        (ts("2024-01-01 00:00:02"), "p1", "m2", 2.0),
+        (ts("2024-01-01 00:00:03"), "p1", "m3", 10.0))
+      query.processAllAvailable()
+      input.addData((ts("2024-01-01 00:10:00"), "p9", "m9", 1.0))
+      query.processAllAvailable()
+      val got = spark.table(name)
+        .select("module", "p_avg_power", "squares_sum", "variance", "deviance")
+        .as[(String, Double, Double, Double, Double)].collect().toSeq
+      assert(got.map(_._1) === Seq("m3"))
+      val (_, avg, squares, variance, deviance) = got.head
+      val want = Seq(1.0, 2.0, 10.0).map(s => math.pow(s - 4.3, 2)).sum
+      assert(avg === 4.3)
+      assert(math.abs(squares - want) <= 1e-9 * want, s"$squares vs $want")
+      assert(math.abs(variance - want / 3) <= 1e-9 * want, s"$variance")
+      assert(deviance === 4.0)
     } finally query.stop()
   }
 

@@ -109,9 +109,12 @@ def main():
 
         # poison the payload WITHOUT updating the sidecar: the checksum
         # must reject the entry and the run must fall back to live DuckDB
-        payloads = [p for p in os.listdir(cache) if p.endswith(".parquet")]
+        # the live entry is the one step 5 wrote last; entries of steps 1
+        # and 3 are keyed on other SQL/corpus states and never read again
+        payloads = [os.path.join(cache, p) for p in os.listdir(cache)
+                    if p.endswith(".parquet")]
         assert payloads, "no cached payloads to poison"
-        victim = os.path.join(cache, sorted(payloads)[-1])
+        victim = max(payloads, key=os.path.getmtime)
         pd.DataFrame({"g1": ["poisoned"], "n": [999]}).to_parquet(
             victim, index=False)
         hits, misses, ok, stdout = run(sf, out, cache)
