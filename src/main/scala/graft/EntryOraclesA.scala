@@ -85,7 +85,7 @@ private[graft] trait EntryOraclesA { self: EntryShared =>
 
     // kept-shingle Jaccard: shingles with document frequency above the cap
     // are dropped from BOTH the intersection and the set sizes, mirroring
-    // Dedup.windowedJaccardPairs' posting-list truncation
+    // Dedup.windowedJaccardPairsStage's posting-list truncation
     "q13_dedup_ngram_jaccard" ->
       (docCtes.stripSuffix("\n") + ",\n" +
         s"""inv AS (

@@ -1199,7 +1199,7 @@ private[graft] trait EntryOraclesB { self: EntryShared =>
       // hardcoded literals would desynchronize on a parameter change);
       // Double.toString is the shortest round-trip decimal, so DuckDB
       // parses each literal back to the bit-identical double the engine
-      // folded (1.2 + 1.0 etc. are computed HERE, same as bm25TopK does)
+      // folded (1.2 + 1.0 etc. are computed HERE, same as bm25TopKStage does)
       import graft.operators.TextAnalysis.{Bm25K1, Bm25B, Bm25TopN}
       val k1p1 = s"${(Bm25K1 + 1.0).toString}e0"
       val k1L = s"${Bm25K1.toString}e0"

@@ -80,7 +80,7 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // calibration superset fresh and publishes the checkpoint the other
     // five consumers read (VERDICT r10 #1); its own result is the
     // verified-pair filter of that relation, bit-identical to
-    // Dedup.minhashNearDups (DedupSpec pins the equivalence).
+    // Dedup.minhashNearDupsStage (DedupSpec pins the equivalence).
     "q11_dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.pairsFromCalibration(lshCalibFresh(s, dir), threshold = 0.5)),
 
@@ -92,7 +92,8 @@ private[graft] trait EntryQueries { self: EntryShared =>
 
     // exact word-3-gram Jaccard pairs in a doc_id window
     "q13_dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.windowedJaccardPairs(Tables.documents(s, dir), idWindow = 25, threshold = 0.2)),
+      Dedup.windowedJaccardPairsStage(Tables.documents(s, dir), idWindow = 25,
+        threshold = 0.2).result),
 
     // EXACT all-pairs set-similarity join via prefix filtering (the
     // AllPairs/PPJoin family): no id window, no posting-list cap, no
@@ -100,7 +101,8 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // gated against the NAIVE all-pairs oracle (PrefixSimilaritySpec
     // pins brute-force equality and LSH ⊆ exact)
     "q154_set_similarity_exact" -> ((s, dir) =>
-      Dedup.prefixSimilarityJoin(Tables.documents(s, dir), threshold = 0.5)),
+      Dedup.prefixSimilarityJoinStage(Tables.documents(s, dir),
+        threshold = 0.5).result),
 
     // corpus-wide k-NN JOIN (kNN-graph construction / pair mining):
     // EVERY vector's IVF multi-probe top-5 — the symmetric-shuffle plan,
@@ -146,9 +148,9 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // self-joins, completeness unconditional
     "q158_set_similarity_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      Dedup.prefixJoinAgainstCorpus(
+      Dedup.prefixJoinAgainstCorpusStage(
         docs.filter(col("doc_id") % 4 =!= 0),
-        docs.filter(col("doc_id") % 4 === 0), threshold = 0.5)
+        docs.filter(col("doc_id") % 4 === 0), threshold = 0.5).result
     }),
 
     // composed gate: PageRank centrality over the q155 kNN graph — the
@@ -484,7 +486,7 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // heavy hitters: exact top-k tokens probed against a Count-Min sketch
     // (custom mergeable sketch aggregate); CMS one-sided bound in-band
     "q66_heavy_hitters" -> ((s, dir) =>
-      TextAnalysis.heavyHitters(Tables.documents(s, dir))),
+      TextAnalysis.heavyHittersStage(Tables.documents(s, dir)).result),
 
     // the custom AGGREGATES through the SQL surface (VERDICT r4 #4):
     // histogram_agg + count_min_agg + cms_query registered by
@@ -576,7 +578,7 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // running sums stitched by a broadcast per-block prefix — parallelism
     // scales with nBlocks, not #languages (VERDICT r5 #1)
     "q77_sequence_packing" -> ((s, dir) =>
-      Curation.packSequences(Tables.documents(s, dir), ctxTokens = 256)),
+      Curation.packStage(Tables.documents(s, dir), ctxTokens = 256).result),
 
     // temperature-based (alpha=0.5) domain rebalancing with TRUE
     // upsampling: targetFrac=1.0 pushes the small strata past 100% so
@@ -595,8 +597,8 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // token-budget selection: whole quality buckets above the cutoff,
     // running sum only inside the boundary bucket — never a global sort
     "q80_token_budget_select" -> ((s, dir) =>
-      Curation.tokenBudgetSelect(Tables.documents(s, dir),
-        budgetTokens = 10000L)),
+      Curation.budgetStage(Tables.documents(s, dir),
+        budgetTokens = 10000L).result),
 
     // deterministic epoch shuffle: per-epoch md5 priority, parallel
     // per-shard ranks — reproducible data-loader order without rand()
@@ -605,60 +607,61 @@ private[graft] trait EntryQueries { self: EntryShared =>
 
     // CCNet/C4-style boilerplate chunk removal + ordered reassembly
     "q82_boilerplate_removal" -> ((s, dir) =>
-      Dedup.removeBoilerplate(Tables.documents(s, dir),
-        chunkTokens = 16, maxDf = 1)),
+      Dedup.boilerplateStage(Tables.documents(s, dir),
+        chunkTokens = 16, maxDf = 1).result),
 
     // substring-level exact dedup: strided 16-token span fingerprints,
     // per-doc fraction of spans shared with another document (Lee et al.
     // ACL'22 re-expressed as parallel span fingerprints, not a suffix
     // array)
     "q83_span_dedup" -> ((s, dir) =>
-      Dedup.spanDedup(Tables.documents(s, dir),
-        spanTokens = 16, stride = 8, maxDupFrac = 0.5)),
+      Dedup.spanDedupStage(Tables.documents(s, dir),
+        spanTokens = 16, stride = 8, maxDupFrac = 0.5).result),
 
     // CCNet-style perplexity scoring under a corpus-trained unigram LM
     // (train + score in one job; one scan, 8-byte fingerprint joins)
     "q84_lm_perplexity" -> ((s, dir) =>
-      TextAnalysis.lmScore(Tables.documents(s, dir))),
+      TextAnalysis.lmScoreStage(Tables.documents(s, dir)).result),
 
     // signed-random-projection LSH: angular near-dup candidates from
     // 8-bit signature bands (equi-join, never all-pairs), exact-cosine
     // verified — the third near-dup family (MinHash = set overlap,
     // SimHash = token multiset, SRP = raw-embedding angle)
     "q85_srp_lsh" -> ((s, dir) =>
-      Similarity.srpBucketedNearDups(Tables.embeddings(s, dir),
-        threshold = 0.35)),
+      Similarity.srpStage(Tables.embeddings(s, dir),
+        threshold = 0.35).result),
 
     // incremental ingestion dedup: the src0/src1 batch dedups AGAINST the
     // rest of the corpus (fingerprint left-join + bands-vs-index LSH),
     // never corpus-vs-corpus
     "q86_incremental_dedup" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      Dedup.dedupAgainstCorpus(
+      Dedup.dedupAgainstCorpusStage(
         docs.filter(!col("source").isin("src0", "src1")),
-        docs.filter(col("source").isin("src0", "src1")))
+        docs.filter(col("source").isin("src0", "src1"))).result
     }),
 
     // EXACT quantiles with bounded memory: histogram pass + ranking only
     // the boundary buckets — q29's answer without buffering any group
     "q87_exact_quantile_twopass" -> ((s, dir) =>
-      Relational.exactQuantilesTwoPass(Tables.lineitem(s, dir),
-        "l_returnflag", "l_extendedprice", Seq(0.5, 0.95))),
+      Relational.exactQuantilesTwoPassStage(Tables.lineitem(s, dir),
+        "l_returnflag", "l_extendedprice", Seq(0.5, 0.95)).result),
 
     // bigram-LM perplexity: conditional p(cur|prev), context counts and
     // vocabulary re-folded from one persisted pair stream
     "q88_lm_bigram" -> ((s, dir) =>
-      TextAnalysis.lmScoreBigram(Tables.documents(s, dir))),
+      TextAnalysis.lmScoreBigramStage(Tables.documents(s, dir)).result),
 
     // vocabulary coverage curve: exact top-V via TakeOrdered heaps,
     // cumulating windows over the V-row result only
     "q89_vocab_coverage" -> ((s, dir) =>
-      TextAnalysis.vocabCoverage(Tables.documents(s, dir), topV = 50)),
+      TextAnalysis.vocabCoverageStage(Tables.documents(s, dir),
+        topV = 50).result),
 
     // per-source drift monitor: exact smoothed KL vs the corpus unigram
     // distribution, absent-token mass in closed form (never source x vocab)
     "q90_source_divergence" -> ((s, dir) =>
-      TextAnalysis.sourceDivergence(Tables.documents(s, dir))),
+      TextAnalysis.sourceDivergenceStage(Tables.documents(s, dir)).result),
 
     // OHLC downsampling: min_by/max_by candles in one aggregation pass,
     // no window, no sort
@@ -678,7 +681,7 @@ private[graft] trait EntryQueries { self: EntryShared =>
 
     // pre-flight join-key skew diagnosis: hottest-key share + entropy
     "q94_key_profile" -> ((s, dir) =>
-      Relational.profileKeys(Tables.orders(s, dir), "o_custkey")),
+      Relational.profileKeysStage(Tables.orders(s, dir), "o_custkey").result),
 
     // C4-style blocklist filter: whole-token hits via the one-pass
     // stopword kernel, scan-fused, zero shuffle
@@ -832,8 +835,8 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // the 64-distinct-names/2,000-parts fixture exercises the
     // value-set factoring + ed=0 group expansion
     "q164_edit_distance_join" -> ((s, dir) =>
-      graft.operators.EditDistance.editDistanceJoin(
-        Tables.part(s, dir), "p_partkey", "p_name", k = 2)),
+      graft.operators.EditDistance.editDistanceJoinStage(
+        Tables.part(s, dir), "p_partkey", "p_name", k = 2).result),
 
     // deterministic synchronous label propagation (4 rounds, min
     // tie-break): community detection over the near-dup graph — splits
@@ -866,9 +869,9 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // first prefixes; the graded upgrade of q122's any-shingle flag
     "q170_containment_join" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      Dedup.containmentJoinAgainstCorpus(
+      Dedup.containmentJoinAgainstCorpusStage(
         docs.filter(col("doc_id") % 3 =!= 0),
-        docs.filter(col("doc_id") % 3 === 0), threshold = 0.35)
+        docs.filter(col("doc_id") % 3 === 0), threshold = 0.35).result
     }),
 
     // first-order Markov transition matrix over per-user event paths —
@@ -1198,10 +1201,10 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // keeps the prefix lemma valid across both relations
     "q166_edit_distance_incremental" -> ((s, dir) => {
       val p = Tables.part(s, dir)
-      graft.operators.EditDistance.editDistanceAgainstCorpus(
+      graft.operators.EditDistance.editDistanceAgainstCorpusStage(
         p.filter(col("p_partkey") % 4 =!= 0),
         p.filter(col("p_partkey") % 4 === 0),
-        "p_partkey", "p_name", k = 2)
+        "p_partkey", "p_name", k = 2).result
     }),
 
     "q151_interval_join_rewrite" -> ((s, dir) => {
@@ -1281,19 +1284,19 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // paper's survivor policy: keep the member LEAST similar to its
     // cell centroid, aggregate-argmin, ties to the smaller vec_id
     "q136_semantic_dedup" -> ((s, dir) =>
-      Similarity.semanticDedup(Tables.embeddings(s, dir),
-        kmeansShared(s, dir), SemDedupThreshold)),
+      Similarity.semanticDedupStage(Tables.embeddings(s, dir),
+        kmeansShared(s, dir), SemDedupThreshold).result),
 
     // Okapi BM25 top-50 retrieval for a fixed query term set: tf/dl from
     // per-row array kernels in the scan, corpus constants one broadcast
     // row, top-N a TakeOrdered heap — nothing shuffles at corpus size
     "q100_bm25_topk" -> ((s, dir) =>
-      TextAnalysis.bm25TopK(Tables.documents(s, dir), Bm25Terms)),
+      TextAnalysis.bm25TopKStage(Tables.documents(s, dir), Bm25Terms).result),
 
     // interpolated Kneser-Ney bigram perplexity: continuation/context
     // counts re-folded from the one persisted LM pair stream
     "q101_lm_kneser_ney" -> ((s, dir) =>
-      TextAnalysis.lmScoreKneserNey(Tables.documents(s, dir))),
+      TextAnalysis.lmScoreKneserNeyStage(Tables.documents(s, dir)).result),
 
     // near-dup survivor selection: keep-best-quality per q52 cluster
     // (shared component labels; aggregate-then-join argmax, never a
@@ -1306,13 +1309,13 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // 3-gram shingles appearing in no other doc — inter-document
     // boilerplate signal; fingerprint-frequency fold + one equi-join
     "q103_shingle_novelty" -> ((s, dir) =>
-      TextAnalysis.shingleNovelty(Tables.documents(s, dir))),
+      TextAnalysis.shingleNoveltyStage(Tables.documents(s, dir)).result),
 
     // per-source quality percentile: midrank over the (source, quality)
     // histogram — windows touch only the metadata-sized histogram, docs
     // pick up their percentile by equi-join
     "q104_quality_percentile" -> ((s, dir) =>
-      Curation.qualityPercentile(Tables.documents(s, dir))),
+      Curation.qualityPercentileStage(Tables.documents(s, dir)).result),
 
     // MinHash calibration: estimated vs exact Jaccard on every LSH
     // candidate pair — the (k, bands, rows) tuning report. IS the shared
@@ -1330,7 +1333,7 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // top boilerplate shingles: df fold on fingerprints, TakeOrdered
     // heap, strings rejoin for the N winners only
     "q107_top_boilerplate" -> ((s, dir) =>
-      TextAnalysis.topBoilerplate(Tables.documents(s, dir))),
+      TextAnalysis.topBoilerplateStage(Tables.documents(s, dir)).result),
 
     // cross-family dedup agreement: MinHash vs SimHash pair sets as one
     // row — do the families catch the same near-dups on this corpus?
@@ -1452,8 +1455,8 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // fold (one tokenize pass, vocab-cardinality model join, TakeOrdered
     // selection on the rounded normalized weight)
     "q117_importance_resample" -> ((s, dir) =>
-      Curation.importanceResample(Tables.documents(s, dir),
-        targetSource = "src0")),
+      Curation.importanceStage(Tables.documents(s, dir),
+        targetSource = "src0").result),
 
     // BPE tokenizer APPLICATION gate (VERDICT r11 #1 — narrows q98's
     // exemption to the training fixpoint alone): train on the dir's
@@ -1633,7 +1636,8 @@ private[graft] trait EntryQueries { self: EntryShared =>
           when(col("doc_id") % 10 === 0,
             concat(col("text"), lit(" updated")))
             .otherwise(col("text")))
-      Curation.sourceDatacardIncremental(incoming, cardStatsShared(s, dir))
+      Curation.sourceDatacardIncrementalStage(incoming,
+        cardStatsShared(s, dir)).result
     }),
 
     // eval-set decontamination (GPT-3 app. C / Pile §6 discipline):
@@ -1653,7 +1657,7 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // number integer-derived so the hash gate can't flake on summation
     // order; one kernel scan + an 8-byte-fp dup join
     "q124_source_datacard" -> ((s, dir) =>
-      Curation.sourceDatacard(Tables.documents(s, dir))),
+      Curation.sourceDatacardStage(Tables.documents(s, dir)).result),
 
     // the DAILY INGESTION pipeline gated end to end (VERDICT r12 #6 —
     // q119 proved the curation DAG; this is the ingestion twin): today's
@@ -1680,7 +1684,8 @@ private[graft] trait EntryQueries { self: EntryShared =>
         .select("doc_id", "text", "lang", "source")
         .filter(col("doc_id") % 5 =!= 4)
       val merged = Curation.mergeCorpus(prior, curated)
-      Curation.sourceDatacard(merged.select("doc_id", "source", "text"))
+      Curation.sourceDatacardStage(
+        merged.select("doc_id", "source", "text")).result
     }),
 
     // q137: the q130 ingestion chain through the STEADY-STATE artifact
@@ -1701,9 +1706,9 @@ private[graft] trait EntryQueries { self: EntryShared =>
       val curated = incoming
         .join(Curation.curate(incoming, lang = "en", minQuality = 0.5)
           .select("doc_id"), "doc_id")
-      Curation.sourceDatacardIncremental(
+      Curation.sourceDatacardIncrementalStage(
         curated.select("doc_id", "source", "text"),
-        cardStatsShared(s, dir))
+        cardStatsShared(s, dir)).result
     }),
 
     // classifier QUALITY gate (VERDICT r11 #6): confusion counts +

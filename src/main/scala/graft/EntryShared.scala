@@ -57,7 +57,7 @@ private[graft] trait EntryShared {
   // every candidate; Dedup.minhashCalibrationStage). q11 produces it; q105
   // reads it whole and the pair consumers (q11, q52/q93, q106, q108) filter
   // `jaccard >= 0.5` (Dedup.pairsFromCalibration, bit-identical to
-  // minhashNearDups; DedupSpec pins it).
+  // minhashNearDupsStage; DedupSpec pins it).
   private def lshCalib(s: SparkSession, dir: String): DataFrame = {
     val stage = Dedup.minhashCalibrationStage(Tables.documents(s, dir))
     // eager checkpoint: the shingle index cache is consumed here and only
@@ -77,7 +77,7 @@ private[graft] trait EntryShared {
 
   /** The verified near-dup pairs at the gate's threshold, derived from the
     * shared calibration checkpoint (bit-identical to
-    * `Dedup.minhashNearDups(docs, 0.5)` — DedupSpec pins it).
+    * `Dedup.minhashNearDupsStage(docs, 0.5).result` — DedupSpec pins it).
     */
   protected def lshPairsShared(s: SparkSession, dir: String): DataFrame =
     Dedup.pairsFromCalibration(lshCalibShared(s, dir), threshold = 0.5)
@@ -862,10 +862,6 @@ private[graft] trait EntryShared {
       |  FROM toks)
       |""".stripMargin
 
-  /** Normalized-text fingerprint, mirroring [[TextAnalysis.normalized]]
-    * (DuckDB regexp_replace needs the explicit 'g' flag to match Spark's
-    * global-by-default behavior).
-    */
   /** The synthetic pixel-PNG corpus's closed-form pixel relation
     * (mirrors [[graft.functions.ImageKernels]] synthWidth/Height/Pix):
     * one row per (media, x, y) with the luminance value — what lets
@@ -949,6 +945,10 @@ private[graft] trait EntryShared {
        |  WHERE a.b < 64
        |  GROUP BY 1)""".stripMargin
 
+  /** Normalized-text fingerprint, mirroring [[TextAnalysis.normalized]]
+    * (DuckDB regexp_replace needs the explicit 'g' flag to match Spark's
+    * global-by-default behavior).
+    */
   protected val fpSql =
     "md5(trim(regexp_replace(lower(text), ' +', ' ', 'g')))"
 
@@ -1206,12 +1206,6 @@ private[graft] trait EntryShared {
        |""".stripMargin
   }
 
-  /** Double-precision cosine SQL over two float-list expressions (widened
-    * to double), mirroring [[Similarity.cosine]].
-    */
-  /** The q52 connected-components oracle (recursive reachability +
-    * min-label), shared by q93's savings histogram.
-    */
   /** The verified near-dup pair graph (threshold 0.5) as a symmetric
     * `edges` CTE — the shared tail of q52's connected components and
     * q152's PageRank (both replay the SAME graph the engine derives from
@@ -1234,6 +1228,9 @@ private[graft] trait EntryShared {
        |  UNION ALL SELECT id_b, id_a FROM nd),
        |""".stripMargin
 
+  /** The q52 connected-components oracle (recursive reachability +
+    * min-label), shared by q93's savings histogram.
+    */
   protected lazy val clusterLabelsSql: String =
     docCtes.stripSuffix("\n").replaceFirst("WITH ", "WITH RECURSIVE ") + ",\n" +
       ndEdgesCtes +
@@ -1243,12 +1240,6 @@ private[graft] trait EntryShared {
         |  SELECT w.id, e.dst FROM walk w JOIN edges e ON e.src = w.reach)
         |SELECT id AS doc_id, min(reach) AS cluster FROM walk GROUP BY id""".stripMargin
 
-  /** q152's fixed-point PageRank iterations as generated CTEs (the BPE
-    * merge-round precedent): rank in integer micro-units, every step
-    * `//`-floored on positive operands — bit-identical to the engine's
-    * `div`-truncated longs. Mirrors [[graft.operators.Graph
-    * .pageRankIntScaled]] at damp 85/100, scale 10⁶.
-    */
   /** The corpus-wide multi-probe kNN replay (q155's CTE chain, shared
     * with q159's composed centrality gate so the two cannot drift):
     * every vector probes its top-2 cells by the kmeans distance
@@ -1332,6 +1323,12 @@ private[graft] trait EntryShared {
        |$branches""".stripMargin
   }
 
+  /** q152's fixed-point PageRank iterations as generated CTEs (the BPE
+    * merge-round precedent): rank in integer micro-units, every step
+    * `//`-floored on positive operands — bit-identical to the engine's
+    * `div`-truncated longs. Mirrors [[graft.operators.Graph
+    * .pageRankIntScaled]] at damp 85/100, scale 10⁶.
+    */
   protected def pagerankCtes(
       iters: Int,
       nodesSql: String = "SELECT doc_id AS id FROM documents",
@@ -1440,6 +1437,9 @@ private[graft] trait EntryShared {
         s"  ($b, [${pl.map(v => if (v > 0) "1.0" else "-1.0").mkString(", ")}])"
       }.mkString(",\n")
 
+  /** Double-precision cosine SQL over two float-list expressions (widened
+    * to double), mirroring [[Similarity.cosine]].
+    */
   protected def cosineSql(a: String, b: String): String = {
     def dot(x: String, y: String) =
       s"list_sum(list_transform(range(1, len($x) + 1), i -> ($x[i]::DOUBLE) * ($y[i]::DOUBLE)))"

@@ -562,14 +562,6 @@ case class LangPredict(child: Expression, dicts: Seq[Seq[String]],
     copy(child = newChild)
 }
 
-/** Count of codepoints NOT in [a-z0-9 ] — the single-pass twin of
-  * `size(regexp_extract_all(lowered, '[^a-z0-9 ]', 0))`, which costs ~34 µs
-  * per 300-char document (regex engine + one match object per punctuation
-  * character; measured as 34 s of the 1 M-doc curation probe's 38 s).
-  * Every non-ASCII codepoint is outside the allowed set by definition, so
-  * multibyte sequences count as one without decoding. Callers pass the
-  * LOWERCASED text, exactly like the regex form.
-  */
 /** `conv(substring(md5(x), 1, 15), 16, 10)::long` in one fused kernel
   * call — the engine-wide 60-bit fingerprint ([[TextKernels.md5Prefix60]]).
   */
@@ -628,6 +620,14 @@ case class HllReg(child: Expression)
     copy(child = newChild)
 }
 
+/** Count of codepoints NOT in [a-z0-9 ] — the single-pass twin of
+  * `size(regexp_extract_all(lowered, '[^a-z0-9 ]', 0))`, which costs ~34 µs
+  * per 300-char document (regex engine + one match object per punctuation
+  * character; measured as 34 s of the 1 M-doc curation probe's 38 s).
+  * Every non-ASCII codepoint is outside the allowed set by definition, so
+  * multibyte sequences count as one without decoding. Callers pass the
+  * LOWERCASED text, exactly like the regex form.
+  */
 case class PunctCount(child: Expression)
     extends UnaryExpression {
 

@@ -59,19 +59,17 @@ object Bpe {
   val DefaultBatchK = 32
 
   /** The learned merge table and the vocabulary in its final
-    * segmentation, plus the cache handle: `base` is the DataFrame that
-    * was actually persisted (unpersisting the derived `vocab` plan would
-    * be a no-op — `Dataset.unpersist` only matches its own plan), and
-    * `vocab` may additionally be checkpoint-backed, so the handle also
-    * releases its raw-RDD blocks ([[Stages.releaseCheckpoint]]:
-    * neither `clearCache` nor `unpersist` covers checkpoint RDDs).
+    * segmentation. `stage` owns the training caches: the persisted word
+    * table the vocab derives from, and the vocab's own training
+    * checkpoint when the distributed loop took one.
     */
-  case class BpeModel(merges: DataFrame, vocab: DataFrame, base: DataFrame) {
-    def unpersist(): Unit = {
-      base.unpersist()
-      Stages.releaseCheckpoint(vocab)
-    }
+  case class BpeModel(merges: DataFrame, stage: Stage) {
+    def vocab: DataFrame = stage.result
   }
+
+  private def model(merges: DataFrame, vocab: DataFrame,
+                    base: DataFrame): BpeModel =
+    BpeModel(merges, Stage(vocab, Seq(base), Seq(vocab)))
 
   /** The longest usable rank-prefix of one round's top pairs, such that
     * applying the whole batch in one projection is bit-identical to
@@ -312,7 +310,7 @@ object Bpe {
     val vocab = rows.indices
       .map(i => (rows(i)._1, rows(i)._2, syms(i).toSeq))
       .toDF("word", "wcount", "segmentation")
-    BpeModel(
+    model(
       merges.result().toDF("rank", "left", "right", "merged", "pair_count"),
       vocab, base)
   }
@@ -369,7 +367,7 @@ object Bpe {
       }
     }
     import spark.implicits._
-    BpeModel(
+    model(
       merges.result()
         .toDF("rank", "left", "right", "merged", "pair_count"),
       tab.select(col("word"), col("wcount"),
@@ -429,7 +427,7 @@ object Bpe {
     val m = train(docs, nMerges)
     // the merge table is already materialized driver-side; the vocab
     // cache (and any training checkpoint) can go immediately
-    m.unpersist()
+    m.stage.unpersist()
     m.merges
   }
 
@@ -442,7 +440,7 @@ object Bpe {
     val pairs = m.merges.orderBy(col("rank"))
       .select(col("left"), col("right"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    m.unpersist()
+    m.stage.unpersist()
     pairs
   }
 

@@ -98,14 +98,6 @@ object Curation {
           .otherwise(lit("train")).as("split"))
   }
 
-  /** Stratified sampling by predicted language: each stratum keeps the
-    * documents whose hash bucket falls under its percentage (`rates`,
-    * else `defaultPct`). Content-hash sampling beats `rand()` at scale:
-    * it is reproducible (reruns and retried tasks sample identically,
-    * which exactly-once sinks need), joinable (two tables sampled on the
-    * same key stay aligned), and engine-portable for the oracle. One
-    * projection + filter, no shuffle at all.
-    */
   /** Fixed-size deterministic sample per stratum: the k documents with
     * the smallest md5(doc_id) in each predicted language — the "show me
     * k examples per slice" primitive. Hash-priority selection is a
@@ -122,6 +114,14 @@ object Curation {
       .filter(col("rn") <= k)
   }
 
+  /** Stratified sampling by predicted language: each stratum keeps the
+    * documents whose hash bucket falls under its percentage (`rates`,
+    * else `defaultPct`). Content-hash sampling beats `rand()` at scale:
+    * it is reproducible (reruns and retried tasks sample identically,
+    * which exactly-once sinks need), joinable (two tables sampled on the
+    * same key stay aligned), and engine-portable for the oracle. One
+    * projection + filter, no shuffle at all.
+    */
   def stratifiedSample(docs: DataFrame, rates: Map[String, Int],
                        defaultPct: Int): DataFrame = {
     val pct = rates.foldLeft(lit(defaultPct)) { case (e, (l, p)) =>
@@ -177,7 +177,7 @@ object Curation {
         when(col("contam_frac") >= flagThreshold, 1).otherwise(0))
   }
 
-  /** Default per-language block fan-out for [[packSequences]], mirrored in
+  /** Default per-language block fan-out for [[packStage]], mirrored in
     * the q77 oracle SQL.
     */
   val DefaultPackBlocks = 16
@@ -255,10 +255,6 @@ object Curation {
         (col("cum_before") % ctxTokens + col("n_tokens") > ctxTokens)
           .cast("int").as("spans_boundary"))
   }
-
-  def packSequences(docs: DataFrame, ctxTokens: Int = 256,
-                    nBlocks: Int = DefaultPackBlocks): DataFrame =
-    packStage(docs, ctxTokens, nBlocks).result
 
   /** Token-budget corpus selection — "take the best documents until the
     * token budget is spent", the data-mixing primitive behind quality-
@@ -360,12 +356,6 @@ object Curation {
     whole.select(col("doc_id"), col("q"), col("qb"), col("n_tokens"))
       .union(boundary)
   }
-
-  /** [[budgetStage]]'s result; release the shared scored projection via
-    * the handle or the session cache, as Bench/Verify do.
-    */
-  def tokenBudgetSelect(docs: DataFrame, budgetTokens: Long): DataFrame =
-    budgetStage(docs, budgetTokens).result
 
   /** Deterministic epoch shuffle — the "reshuffle the corpus differently
     * every epoch, reproducibly" primitive a training data-loader needs:
@@ -474,7 +464,7 @@ object Curation {
     * Scale shape: the quality score is rounded to 4 decimals, so the
     * per-source distribution collapses to a (source, quality) HISTOGRAM —
     * ≤ #sources × 10⁴ rows by construction. The cumulative window runs
-    * over that metadata-sized relation ONLY (the vocabCoverage
+    * over that metadata-sized relation ONLY (the vocabCoverageStage
     * discipline: windows over bounded model relations, never the corpus);
     * per-source totals are an aggregate join, and docs pick up their
     * percentile by a broadcast-able (source, quality) equi-join. The
@@ -489,9 +479,6 @@ object Curation {
     * DuckDB oracle (NULLS LAST), shifting every other percentile in the
     * source by the null count.
     */
-  def qualityPercentile(docs: DataFrame): DataFrame =
-    qualityPercentileStage(docs).result
-
   def qualityPercentileStage(docs: DataFrame): Stage = {
     // kernel counts materialize as attributes BEFORE the quality
     // formula so each text kernel runs exactly once per row —
@@ -549,7 +536,7 @@ object Curation {
     * integration):
     *
     *  1. per-source quality percentile, keep pctl ≥ 0.5 (the top half of
-    *     every source — [[qualityPercentile]] semantics);
+    *     every source — [[qualityPercentileStage]] semantics);
     *  2. MinHash-LSH near-dup clustering over the KEPT subset (band cap
     *     and candidate pairs computed on the survivors of stage 1, not
     *     the full corpus), keep-best-quality survivor per cluster
@@ -641,9 +628,6 @@ object Curation {
     Stage(packFromBase(base, ctxTokens), Seq(scored, keptIds, dd, base),
       Seq(drop))
   }
-
-  def curationDag(docs: DataFrame, ctxTokens: Int = 256): DataFrame =
-    curationDagStage(docs, ctxTokens).result
 
   /** Source-mixture selection — the data-MIXING primitive that turns a
     * data-card review into a training set: given target token SHARES per
@@ -874,11 +858,8 @@ object Curation {
     * Scale shape: one kernel scan into a persisted projection; the dup
     * flag is an 8-byte-fp self-aggregate + left join; everything else
     * folds map-side to ≤ #sources (× #langs) rows.
-    */
-  def sourceDatacard(docs: DataFrame): DataFrame =
-    sourceDatacardStage(docs).result
-
-  /** The stats projection is MATERIALIZED, not just persisted (r20): it
+    *
+    * The stats projection is MATERIALIZED, not just persisted (r20): it
     * fans out into the dup-fp aggregate, the base-counts join leg, and
     * the language census — three exchange subtrees of one action that
     * AQE submits concurrently, so a lazy cache was raced and the whole
@@ -890,7 +871,7 @@ object Curation {
     Stage(datacardFromStats(enr), Seq(enr))
   }
 
-  /** The per-document card-stats artifact [[sourceDatacardIncremental]]
+  /** The per-document card-stats artifact [[sourceDatacardIncrementalStage]]
     * consumes and refreshes — ~40 bytes per document (id, source, four
     * kernel values), the reporting analog of [[corpusFingerprints]]: a
     * production pipeline stores it next to the corpus snapshot so the
@@ -944,12 +925,8 @@ object Curation {
     * EXISTING carry row into a duplicate, so `pct_dup` is not
     * decomposable into prior-card + delta — but it IS a pure aggregate
     * of the stats relation, which this keeps current.
-    */
-  def sourceDatacardIncremental(incoming: DataFrame,
-                                priorStats: DataFrame): DataFrame =
-    sourceDatacardIncrementalStage(incoming, priorStats).result
-
-  /** The refreshed stats relation feeds three aggregation branches
+    *
+    * The refreshed stats relation feeds three aggregation branches
     * (dup-fp, base counts, language argmax), so it persists exactly like
     * the bootstrap path's projection; without it the BATCH would pay its
     * text kernels three times and the artifact three reads.
@@ -966,7 +943,7 @@ object Curation {
     * enters: three passes over ~40-byte rows (dup-fp self-aggregate,
     * per-source base counts, language argmax by the q102 join-back).
     * Shared verbatim by the bootstrap ([[sourceDatacardStage]]) and the
-    * incremental path ([[sourceDatacardIncremental]]).
+    * incremental path ([[sourceDatacardIncrementalStage]]).
     */
   def datacardFromStats(enr: DataFrame): DataFrame = {
     val dupFp = enr.groupBy(col("fp64"))
@@ -1002,7 +979,7 @@ object Curation {
     result
   }
 
-  /** Default selection size for [[importanceResample]], mirrored in the
+  /** Default selection size for [[importanceStage]], mirrored in the
     * q117 oracle.
     */
   val DefaultImportanceN = 100
@@ -1047,10 +1024,6 @@ object Curation {
     * derived from integer counts (e.g. the sorted-fold of k·lr at a
     * fixed quantization) instead.
     */
-  def importanceResample(docs: DataFrame, targetSource: String,
-                         n: Int = DefaultImportanceN): DataFrame =
-    importanceStage(docs, targetSource, n).result
-
   def importanceStage(docs: DataFrame, targetSource: String,
                       n: Int = DefaultImportanceN): Stage = {
     // persisted: the tf relation feeds both the model fold and the

@@ -162,9 +162,6 @@ object Dedup {
     Stage(result, Seq(idx, capped))
   }
 
-  def minhashNearDups(docs: DataFrame, threshold: Double): DataFrame =
-    minhashNearDupsStage(docs, threshold).result
-
   /** Cross-source near-dup overlap matrix: how many verified near-dup
     * pairs land between each (unordered) pair of sources — the
     * "how much does crawl A duplicate crawl B" report that decides which
@@ -172,14 +169,14 @@ object Dedup {
     * to investigate, run before committing to a source mix. Within-source
     * pairs appear on the diagonal.
     *
-    * Scale shape: the pair relation is [[minhashNearDups]]'s output
+    * Scale shape: the pair relation is [[minhashNearDupsStage]]'s output
     * (capped LSH bands, never all-pairs); sources attach by two 8-byte-id
     * equi-joins against the doc→source projection, the unordered pair
     * canonicalizes with least/greatest, and the matrix is one map-side-
     * combining aggregate to ≤ #sources² rows.
     */
   def sourceOverlap(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    sourceOverlapFromPairs(docs, minhashNearDups(docs, threshold))
+    sourceOverlapFromPairs(docs, minhashNearDupsStage(docs, threshold).result)
 
   /** [[sourceOverlap]] over an ALREADY-COMPUTED verified-pair relation —
     * how SparkEntry feeds the memoized LSH stage to q106 without
@@ -212,7 +209,8 @@ object Dedup {
     * empty — the 0/0 guard both engines agree on.
     */
   def familyAgreement(docs: DataFrame): DataFrame =
-    familyAgreementFromPairs(docs, minhashNearDups(docs, threshold = 0.5))
+    familyAgreementFromPairs(docs,
+      minhashNearDupsStage(docs, threshold = 0.5).result)
 
   /** [[familyAgreement]] with the MinHash side supplied as an
     * already-computed verified-pair relation (the SimHash side is still
@@ -249,12 +247,8 @@ object Dedup {
     * additions are the signature arrays riding the verification joins and
     * the k fixed-order equality terms of the estimate — integer counts,
     * exactly reproducible.
-    */
-  def minhashCalibration(docs: DataFrame,
-                         maxBucket: Int = DefaultMaxBucket): DataFrame =
-    minhashCalibrationStage(docs, maxBucket).result
-
-  /** The calibration relation is also the SHARED LSH pair stage: because
+    *
+    * The calibration relation is also the SHARED LSH pair stage: because
     * calibration is unfiltered, `result.filter(jaccard >= t)` is
     * bit-identical to
     * [[minhashNearDupsStage]]'s verified pairs at threshold t (same
@@ -299,7 +293,7 @@ object Dedup {
   }
 
   /** [[minhashCalibrationStage]]'s result restricted to verified pairs:
-    * bit-identical to [[minhashNearDups]] at the same threshold (see
+    * bit-identical to [[minhashNearDupsStage]] at the same threshold (see
     * [[minhashCalibrationStage]]; DedupSpec pins it). This is what the
     * SparkEntry memo hands every pair consumer.
     */
@@ -333,7 +327,7 @@ object Dedup {
     */
   def lshRecall(docs: DataFrame, idWindow: Int = 25,
                 threshold: Double = 0.5): DataFrame =
-    lshRecallFromPairs(docs, minhashNearDups(docs, threshold),
+    lshRecallFromPairs(docs, minhashNearDupsStage(docs, threshold).result,
       idWindow, threshold)
 
   /** [[lshRecall]] over already-computed verified pairs (the SparkEntry
@@ -408,7 +402,7 @@ object Dedup {
   }
 
   /** Default hot-shingle document-frequency cap for
-    * [[windowedJaccardPairs]], mirrored in the q13 oracle SQL.
+    * [[windowedJaccardPairsStage]], mirrored in the q13 oracle SQL.
     */
   val DefaultMaxShingleDf = 5
 
@@ -430,10 +424,6 @@ object Dedup {
     * is the better near-dup measure as well as the scalable one. This is
     * the 100 TB shape: distribute by posting list, bound the largest list.
     */
-  def windowedJaccardPairs(docs: DataFrame, idWindow: Int, threshold: Double,
-                           maxDf: Int = DefaultMaxShingleDf): DataFrame =
-    windowedJaccardPairsStage(docs, idWindow, threshold, maxDf).result
-
   def windowedJaccardPairsStage(docs: DataFrame, idWindow: Int,
                                 threshold: Double,
                                 maxDf: Int = DefaultMaxShingleDf): Stage = {
@@ -742,10 +732,6 @@ object Dedup {
     Stage(result, Seq(chunks))
   }
 
-  def removeBoilerplate(docs: DataFrame, chunkTokens: Int = 16,
-                        maxDf: Int = 1): DataFrame =
-    boilerplateStage(docs, chunkTokens, maxDf).result
-
   val SimhashBits = 64
 
   /** 64-bit SimHash over whitespace tokens: per-token hash from the first 8
@@ -870,10 +856,6 @@ object Dedup {
     Stage(result, Seq(spans))
   }
 
-  def spanDedup(docs: DataFrame, spanTokens: Int = 16, stride: Int = 8,
-                maxDupFrac: Double = 0.5): DataFrame =
-    spanDedupStage(docs, spanTokens, stride, maxDupFrac).result
-
   /** Dedup-savings report over connected-component labels ([[
     * nearDupClusters]] output): cluster-size histogram with, per size,
     * the document count and the rows removable by keeping one canonical
@@ -929,6 +911,38 @@ object Dedup {
         col("best_q").as("quality"), col("cluster_size"))
   }
 
+  /** Per-doc dedup index projection — ONE text scan yields everything
+    * [[dedupAgainstCorpusStage]] needs from a side: the 8-byte fingerprint and
+    * the distinct shingle set (minhash signatures and band hashes derive
+    * from the shingle SET — min over a multiset equals min over its set —
+    * so banding needs no second text pass).
+    */
+  private[graft] def dedupIndex(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      TextAnalysis.fp64Expr(col("text")).as("fp64"),
+      array_distinct(shingles(col("text"))).as("sh"))
+
+  /** (doc_id, band_idx, band_hash) from a [[dedupIndex]] relation. */
+  private[graft] def bandsFromIndex(index: DataFrame): DataFrame =
+    bandsFromSig(index.filter(size(col("sh")) > 0)
+      .select(col("doc_id"), minhashSignature(col("sh"), MinhashK).as("sig")))
+
+  /** The [[LshBands]] band hashes of a signature column, in band order —
+    * THE band-hash construction, shared by every LSH path (dedup,
+    * incremental, calibration, streaming) so a banding change cannot
+    * silently desynchronize the calibration report from the dedup it
+    * calibrates.
+    */
+  private[graft] def bandHashes(sig: Column): Column =
+    transform(sequence(lit(0), lit(LshBands - 1)), b =>
+      md5(concat_ws("|", slice(sig, b * LshRows + 1, lit(LshRows)))))
+
+  /** (doc_id, band_idx, band_hash) from a (doc_id, …, sig) relation. */
+  private[graft] def bandsFromSig(rel: DataFrame): DataFrame =
+    rel.select(col("doc_id"), posexplode(bandHashes(col("sig"))))
+      .withColumnRenamed("pos", "band_idx")
+      .withColumnRenamed("col", "band_hash")
+
   /** Incremental ingestion dedup: flag each INCOMING document that
     * duplicates the EXISTING corpus — exactly (content fingerprint) or
     * nearly (MinHash-LSH band collision verified by exact Jaccard) —
@@ -949,36 +963,8 @@ object Dedup {
     * fingerprint. Every shuffle key is a fixed-width hash; the corpus
     * text is scanned once for fingerprints and once for the band/shingle
     * index.
-    */
-  /** Per-doc dedup index projection — ONE text scan yields everything
-    * [[dedupAgainstCorpus]] needs from a side: the 8-byte fingerprint and
-    * the distinct shingle set (minhash signatures and band hashes derive
-    * from the shingle SET — min over a multiset equals min over its set —
-    * so banding needs no second text pass).
-    */
-  private[graft] def dedupIndex(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      TextAnalysis.fp64Expr(col("text")).as("fp64"),
-      array_distinct(shingles(col("text"))).as("sh"))
-
-  /** (doc_id, band_idx, band_hash) from a [[dedupIndex]] relation. */
-  private[graft] def bandsFromIndex(index: DataFrame): DataFrame =
-    bandsFromSig(index.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), minhashSignature(col("sh"), MinhashK).as("sig")))
-
-  /** (doc_id, band_idx, band_hash) from a (doc_id, …, sig) relation — THE
-    * band-hash construction, shared by every LSH path (dedup, incremental,
-    * calibration) so a banding change cannot silently desynchronize the
-    * calibration report from the dedup it calibrates.
-    */
-  private[graft] def bandsFromSig(rel: DataFrame): DataFrame =
-    rel.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(LshBands - 1)), b =>
-          md5(concat_ws("|", slice(col("sig"), b * LshRows + 1, lit(LshRows)))))))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_hash")
-
-  /** Incremental dedup: both sides' [[dedupIndex]] projections persist,
+    *
+    * Incremental dedup: both sides' [[dedupIndex]] projections persist,
     * so each corpus scans its text ONCE (fingerprint + shingles + bands
     * all derive from the cache).
     */
@@ -1018,11 +1004,6 @@ object Dedup {
           coalesce(col("n_near"), lit(0L)) === 0).cast("int").as("keep"))
     Stage(result, Seq(corp, inc))
   }
-
-  def dedupAgainstCorpus(corpus: DataFrame, incoming: DataFrame,
-                         threshold: Double = 0.5,
-                         maxBucket: Int = DefaultMaxBucket): DataFrame =
-    dedupAgainstCorpusStage(corpus, incoming, threshold, maxBucket).result
 
   /** Default shingle width for [[decontaminationReport]], mirrored in the
     * q122 oracle. GPT-3 decontaminated on 13-grams over web-length pages
@@ -1072,9 +1053,6 @@ object Dedup {
       .select(col("doc_id"), col("n_shingles"), col("n_hits"),
         (col("n_hits") > 0).cast("int").as("contaminated"))
   }
-
-  def prefixSimilarityJoin(docs: DataFrame, threshold: Double): DataFrame =
-    prefixSimilarityJoinStage(docs, threshold).result
 
   /** EXACT all-pairs set-similarity join via prefix filtering (the
     * AllPairs/PPJoin family — Bayardo et al., WWW'07; Xiao et al.,
@@ -1218,13 +1196,9 @@ object Dedup {
       .filter(col("j") >= t) // selection on the raw ratio, like the oracle
       .select(col("id_a"), col("id_b"), col("jq").as("jaccard"))
 
-  def prefixJoinAgainstCorpus(corpus: DataFrame, incoming: DataFrame,
-                              threshold: Double): DataFrame =
-    prefixJoinAgainstCorpusStage(corpus, incoming, threshold).result
-
   /** EXACT incremental set-similarity: every (incoming, corpus) pair with
     * Jaccard >= threshold — the exact counterpart of the LSH-based
-    * [[dedupAgainstCorpus]] (q86), for the daily-ingestion sweep that
+    * [[dedupAgainstCorpusStage]] (q86), for the daily-ingestion sweep that
     * must be provably complete (contamination audits, legal-hold dedup).
     *
     * The corpus NEVER self-joins: candidates are incoming-prefix ×
@@ -1263,10 +1237,6 @@ object Dedup {
     Stage(verifyPairs(cand, incSets, corpSets, t),
       Seq(corpInv, incInv, corpSets, incSets))
   }
-
-  def containmentJoinAgainstCorpus(corpus: DataFrame, needles: DataFrame,
-                                   threshold: Double): DataFrame =
-    containmentJoinAgainstCorpusStage(corpus, needles, threshold).result
 
   /** EXACT containment-similarity join: every (needle, corpus) pair with
     * C(a→b) = |Sa∩Sb| / |Sa| >= threshold — the ASYMMETRIC measure the

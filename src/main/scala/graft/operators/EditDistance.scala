@@ -48,10 +48,6 @@ import org.apache.spark.sql.functions._
   */
 object EditDistance {
 
-  def editDistanceJoin(rows: DataFrame, idCol: String, strCol: String,
-                       k: Int): DataFrame =
-    editDistanceJoinStage(rows, idCol, strCol, k).result
-
   private def commonPrefixLen(a: String, b: String): Int = {
     var i = 0
     val n = math.min(a.length, b.length)
@@ -211,11 +207,6 @@ object EditDistance {
         lit(0).as("dist"))
     Stage(cross.unionByName(within), Seq(ids, strsD0, strsD))
   }
-
-  def editDistanceAgainstCorpus(corpus: DataFrame, incoming: DataFrame,
-                                idCol: String, strCol: String,
-                                k: Int): DataFrame =
-    editDistanceAgainstCorpusStage(corpus, incoming, idCol, strCol, k).result
 
   /** EXACT incremental edit-distance join — every (incoming, corpus)
     * pair within Levenshtein distance k; the daily-ingestion twin of

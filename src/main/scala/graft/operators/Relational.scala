@@ -32,7 +32,6 @@ object Relational {
       .filter(col("rank") <= k)
   }
 
-  /** Customers with no orders: anti join (NOT EXISTS). */
   /** The TPC-H Q5 shape — local-supplier volume per nation: six tables,
     * two join keys on the fact (order AND supplier), the
     * customer-nation = supplier-nation equality that correlates two
@@ -64,6 +63,7 @@ object Relational {
         .as("revenue"),
         count(lit(1)).as("n_items"))
 
+  /** Customers with no orders: anti join (NOT EXISTS). */
   def customersWithoutOrders(customer: DataFrame, orders: DataFrame): DataFrame =
     customer.join(orders, col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_mktsegment"))
@@ -102,7 +102,7 @@ object Relational {
     * interpolation — same definition as the oracle's quantile_cont).
     * `percentile` buffers each group in memory, so this form is for
     * moderate group sizes; [[approxQuantiles]] is the sketch default and
-    * [[exactQuantilesTwoPass]] the bounded-memory EXACT path at scale.
+    * [[exactQuantilesTwoPassStage]] the bounded-memory EXACT path at scale.
     */
   def quantiles(lineitem: DataFrame): DataFrame =
     lineitem
@@ -125,9 +125,6 @@ object Relational {
     * after the first aggregate are metadata-sized; the crossJoins are
     * one-row-by-one-row.
     */
-  def profileKeys(df: DataFrame, keyCol: String, topK: Int = 10): DataFrame =
-    profileKeysStage(df, keyCol, topK).result
-
   def profileKeysStage(df: DataFrame, keyCol: String,
                       topK: Int = 10): Stage = {
     // persisted: the distinct-key counts feed both the moment aggregate
@@ -176,12 +173,8 @@ object Relational {
     * are unbucketable/unrankable, so a column with NULLs must be filtered
     * first (SQL `quantile_cont` silently skips NULLs — the two would
     * diverge otherwise).
-    */
-  def exactQuantilesTwoPass(df: DataFrame, groupCol: String, valCol: String,
-                            ps: Seq[Double], nBuckets: Int = 1000): DataFrame =
-    exactQuantilesTwoPassStage(df, groupCol, valCol, ps, nBuckets).result
-
-  /** The #groups stats relation and the #groups×nBuckets histogram are
+    *
+    * The #groups stats relation and the #groups×nBuckets histogram are
     * each consumed by several branches (bucketing, target positions, the
     * final join) — persisted, the input is scanned exactly three times
     * (stats, histogram build, boundary ranking); unpersisted, every
@@ -609,28 +602,6 @@ object Relational {
           .otherwise(lit(1)).as("no_false_neg"))
   }
 
-  /** Incremental maintenance of a pre-aggregated summary (the q188
-    * materialized view) from an APPEND batch — the daily-job companion
-    * to the MvRewrite rule, and the q128/q134 incremental-artifact
-    * discipline applied to relational summaries: the new summary is the
-    * old ARTIFACT merged with the delta's own rollup, so corpus-sized
-    * data enters the plan exactly once (the delta scan); the stored
-    * summary rides as group-cardinality rows.
-    *
-    * Merge laws, exact by construction for APPEND deltas:
-    *  - count: additive, absent side contributes 0;
-    *  - sum:   additive with SQL null semantics — null iff every value
-    *    on BOTH sides was null (an absent side and an all-null side
-    *    both arrive as null and must stay null only together);
-    *  - min/max: least/greatest with null-skip (nulls mean "no values
-    *    on that side", never "smaller than everything").
-    *
-    * DELETES are deliberately out of scope: count and sum are
-    * decrementable, min/max are NOT (retracting the current minimum
-    * needs the base data) — a delete-bearing feed routes to the q175
-    * CDC apply against the base and a summary REBUILD of the touched
-    * groups. Refusing here keeps the exactness claim honest.
-    */
   /** The summary rollup shared by [[summaryApplyDelta]] (append path)
     * and [[summaryRebuildGroups]] (delete path).
     */
@@ -666,6 +637,28 @@ object Relational {
     summary.join(t, groupCols, "left_anti").unionByName(rebuilt)
   }
 
+  /** Incremental maintenance of a pre-aggregated summary (the q188
+    * materialized view) from an APPEND batch — the daily-job companion
+    * to the MvRewrite rule, and the q128/q134 incremental-artifact
+    * discipline applied to relational summaries: the new summary is the
+    * old ARTIFACT merged with the delta's own rollup, so corpus-sized
+    * data enters the plan exactly once (the delta scan); the stored
+    * summary rides as group-cardinality rows.
+    *
+    * Merge laws, exact by construction for APPEND deltas:
+    *  - count: additive, absent side contributes 0;
+    *  - sum:   additive with SQL null semantics — null iff every value
+    *    on BOTH sides was null (an absent side and an all-null side
+    *    both arrive as null and must stay null only together);
+    *  - min/max: least/greatest with null-skip (nulls mean "no values
+    *    on that side", never "smaller than everything").
+    *
+    * DELETES are deliberately out of scope: count and sum are
+    * decrementable, min/max are NOT (retracting the current minimum
+    * needs the base data) — a delete-bearing feed routes to the q175
+    * CDC apply against the base and a summary REBUILD of the touched
+    * groups. Refusing here keeps the exactness claim honest.
+    */
   def summaryApplyDelta(summary: DataFrame, delta: DataFrame,
                         groupCols: Seq[String], cntCol: String,
                         sumCols: Map[String, String],

@@ -83,10 +83,6 @@ object Scd {
     facts.join(broadcast(dim), cond, "left").drop(dim(key))
   }
 
-  /** The gated dimension: per-customer (status, priority) history from the
-    * orders feed — each order is an observation of the customer's state at
-    * `o_orderdate`, tiebroken by `o_orderkey`.
-    */
   /** CDC apply — the lakehouse MERGE primitive (SCD Type 1 next to
     * [[scd2Build]]'s Type 2): fold an ordered change feed (key, seq,
     * op ∈ I/U/D, attrs) into a base table, last writer wins per key.
@@ -135,6 +131,10 @@ object Scd {
         when(col("_op").isNotNull, col(s"_c_$a"))
           .otherwise(col(a)).as(a)): _*)
 
+  /** The gated dimension: per-customer (status, priority) history from the
+    * orders feed — each order is an observation of the customer's state at
+    * `o_orderdate`, tiebroken by `o_orderkey`.
+    */
   def customerStatusDim(orders: DataFrame): DataFrame =
     scd2Build(
       orders.select(col("o_custkey").as("custkey"), col("o_orderdate"),

@@ -338,50 +338,6 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** Corpus-wide k-NN JOIN: every left-relation vector's top-k cosine
-    * neighbors among the right relation, through the shared IVF coarse
-    * quantizer — the batch pair-mining primitive (kNN-graph construction
-    * for SemDeDup-style analyses, bitext/parallel-pair mining when the
-    * two sides are different corpora, retrieval-pair generation).
-    *
-    * This is NOT [[ivfTopKMultiProbeModel]] with more queries: that
-    * operator BROADCASTS the query side, which is correct for a golden
-    * query sample and catastrophic when the query side IS a corpus. Here
-    * both sides are corpus-sized, so the plan is the symmetric-shuffle
-    * IVF join: the right side assigns its one coarse cell inside the
-    * scan projection (fused [[graft.functions.NearestCells]] argmin — no
-    * join against a stored assignment, so ANY relation with an
-    * `embedding` column works), the left side explodes into its
-    * `nProbe` nearest cells, and the two exchange hash-partitioned BY
-    * CELL — the only shuffle wider than the embedding itself. Ranking is
-    * the bounded [[graft.functions.TopKByScoreAgg]] heap (O(queries × k)
-    * state, map-side combined), never a window over the candidate
-    * stream. Probed cells are ranked by the same `|c|² − 2·(emb·c)`
-    * distance and (dist, cell) tie-break as every IVF operator, so the
-    * result is exactly the multi-probe answer at any scale.
-    *
-    * 100 TB posture: cost is Σ_q Σ_{probed cells} |cell| candidate dots
-    * — cells must stay bounded, so k grows with the corpus (the SemDeDup
-    * cell contract; the two-level assignment of q138 keeps large k
-    * affordable). A viral cell (similarity-defined skew) is an AQE
-    * skew-join split — but ONLY if the cell's rows span many map-output
-    * blocks: AQE splits a skewed reduce partition at MAP-BLOCK
-    * granularity, so a viral cluster stored CONTIGUOUSLY (sorted or
-    * clustered ingest — exactly how a near-dup burst lands when files
-    * are written in crawl order) is unsplittable and the straggler
-    * survives (measured at 10 M vectors: split fired, +1 task,
-    * straggler unchanged — SURVEY.md row "IVF viral-cell skew").
-    * `scatter` (default ON) closes that hole in-engine: the
-    * corpus side takes one uniform hash(vec_id) exchange before the
-    * cell-keyed join exchange, spreading every cell across all map
-    * blocks so the skew split always has cut points. Cost is one extra
-    * embedding-wide shuffle of the corpus — skipped automatically when
-    * the input's lineage already ends in a uniform repartition
-    * ([[alreadyScattered]]), which scatters for free. Self-pairs are
-    * excluded by id equality — callers
-    * mining ACROSS relations with overlapping id spaces should disable
-    * `excludeSameId`.
-    */
   /** True when `df`'s plan already ends in a shuffle that spreads rows
     * uniformly across map blocks — a hash repartition on THE SAME
     * attribute [[scattered]] would shuffle on (the output's `vec_id`,
@@ -510,6 +466,50 @@ object Similarity {
       c.join(q, Seq("cell", "salt")).drop("salt")
     }
 
+  /** Corpus-wide k-NN JOIN: every left-relation vector's top-k cosine
+    * neighbors among the right relation, through the shared IVF coarse
+    * quantizer — the batch pair-mining primitive (kNN-graph construction
+    * for SemDeDup-style analyses, bitext/parallel-pair mining when the
+    * two sides are different corpora, retrieval-pair generation).
+    *
+    * This is NOT [[ivfTopKMultiProbeModel]] with more queries: that
+    * operator BROADCASTS the query side, which is correct for a golden
+    * query sample and catastrophic when the query side IS a corpus. Here
+    * both sides are corpus-sized, so the plan is the symmetric-shuffle
+    * IVF join: the right side assigns its one coarse cell inside the
+    * scan projection (fused [[graft.functions.NearestCells]] argmin — no
+    * join against a stored assignment, so ANY relation with an
+    * `embedding` column works), the left side explodes into its
+    * `nProbe` nearest cells, and the two exchange hash-partitioned BY
+    * CELL — the only shuffle wider than the embedding itself. Ranking is
+    * the bounded [[graft.functions.TopKByScoreAgg]] heap (O(queries × k)
+    * state, map-side combined), never a window over the candidate
+    * stream. Probed cells are ranked by the same `|c|² − 2·(emb·c)`
+    * distance and (dist, cell) tie-break as every IVF operator, so the
+    * result is exactly the multi-probe answer at any scale.
+    *
+    * 100 TB posture: cost is Σ_q Σ_{probed cells} |cell| candidate dots
+    * — cells must stay bounded, so k grows with the corpus (the SemDeDup
+    * cell contract; the two-level assignment of q138 keeps large k
+    * affordable). A viral cell (similarity-defined skew) is an AQE
+    * skew-join split — but ONLY if the cell's rows span many map-output
+    * blocks: AQE splits a skewed reduce partition at MAP-BLOCK
+    * granularity, so a viral cluster stored CONTIGUOUSLY (sorted or
+    * clustered ingest — exactly how a near-dup burst lands when files
+    * are written in crawl order) is unsplittable and the straggler
+    * survives (measured at 10 M vectors: split fired, +1 task,
+    * straggler unchanged — SURVEY.md row "IVF viral-cell skew").
+    * `scatter` (default ON) closes that hole in-engine: the
+    * corpus side takes one uniform hash(vec_id) exchange before the
+    * cell-keyed join exchange, spreading every cell across all map
+    * blocks so the skew split always has cut points. Cost is one extra
+    * embedding-wide shuffle of the corpus — skipped automatically when
+    * the input's lineage already ends in a uniform repartition
+    * ([[alreadyScattered]]), which scatters for free. Self-pairs are
+    * excluded by id equality — callers
+    * mining ACROSS relations with overlapping id spaces should disable
+    * `excludeSameId`.
+    */
   def knnJoin(left: DataFrame, right: DataFrame, model: KmeansModel,
               k: Int, nProbe: Int, excludeSameId: Boolean = true,
               scatter: Boolean = true): DataFrame = {
@@ -721,12 +721,8 @@ object Similarity {
     * [[graft.functions.VectorCosine]] pass against the broadcast k×dim
     * centroid relation, and the survivor argmin is an aggregate +
     * join-back — no window over a (potentially viral) duplicate group.
-    */
-  def semanticDedup(embeddings: DataFrame, model: KmeansModel,
-                    threshold: Double): DataFrame =
-    semanticDedupStage(embeddings, model, threshold).result
-
-  /** The scored member relation feeds both the argmin aggregate and the
+    *
+    * The scored member relation feeds both the argmin aggregate and the
     * join-back, so it persists (it is group-members-sized —
     * pairs-participating vectors only); unpersisted, the
     * label⋈cells⋈centroid⋈embedding chain would scan the corpus twice.
@@ -849,10 +845,6 @@ object Similarity {
       round(element_at(slice(embD, 1, 4), 1), 4).as("first_dim"))
   }
 
-  /** IVF ANN over LEARNED cells: [[kmeansCells]] assignments replace the
-    * pre-assigned `label` column, closing the "ANN index build" loop
-    * (build the coarse quantizer, assign, probe).
-    */
   /** First-class ANN recall report (VERDICT r6 #5): per query, the
     * fraction of the EXACT top-k (`truth`, e.g. [[bruteTopK]] over a
     * deterministic sampled query set) that the index's top-k (`approx`,
@@ -1378,6 +1370,10 @@ object Similarity {
     embeddings.select((col("vec_id") +: cols): _*)
   }
 
+  /** IVF ANN over LEARNED cells: [[kmeansCells]] assignments replace the
+    * pre-assigned `label` column, closing the "ANN index build" loop
+    * (build the coarse quantizer, assign, probe).
+    */
   def ivfTopKKmeans(embeddings: DataFrame, queryIds: DataFrame => DataFrame,
                     k: Int, kCells: Int, iters: Int): DataFrame =
     ivfTopKKmeansModel(embeddings, kmeansFit(embeddings, kCells, iters),
@@ -1428,6 +1424,26 @@ object Similarity {
     }
   }
 
+  /** The SLIM (vec_id, band_idx, band_val) band relation for SRP-LSH —
+    * ~20 bytes/row; the 256-byte vectors never enter a band exchange.
+    */
+  private def srpBandRelation(embeddings: DataFrame,
+                              bits: Int, bands: Int): DataFrame = {
+    require(bits % bands == 0, s"$bits bits not divisible into $bands bands")
+    require(bits <= SrpMaxBits, s"$bits > $SrpMaxBits available planes")
+    require(bits / bands <= 30, s"band width ${bits / bands} overflows the int band value")
+    // one fused SrpBandValues pass — `bits` stacked literal-dot bit columns
+    // are identical arithmetic but fall off the JIT cliff at probe widths
+    // (see the expression's scaladoc)
+    val planes = (0 until bits).map(b => srpPlanes(b).toIndexedSeq)
+    embeddings
+      .select(col("vec_id"),
+        posexplode(graft.functions.VectorFunctions
+          .srp_bands(col("embedding"), planes, bands)))
+      .withColumnRenamed("pos", "band_idx")
+      .withColumnRenamed("col", "band_val")
+  }
+
   /** SRP-LSH near-dup pairs — the third near-dup family next to
     * MinHash/LSH (set overlap) and SimHash (token multiset): candidates
     * bucket by ANGLE of the raw embedding. Each vector gets a
@@ -1449,39 +1465,13 @@ object Similarity {
     * dropped outright (the [[Dedup.lshStage]] cap — a giant angular
     * bucket is a pile of trivial near-dups, not signal).
     */
-  def srpBucketedNearDups(embeddings: DataFrame,
-                          threshold: Double = 0.35,
-                          bits: Int = SrpBits, bands: Int = SrpBands,
-                          maxBucket: Int = SrpMaxBucket): DataFrame =
-    srpStage(embeddings, threshold, bits, bands, maxBucket).result
-
-  /** The SLIM (vec_id, band_idx, band_val) band relation for SRP-LSH —
-    * ~20 bytes/row; the 256-byte vectors never enter a band exchange.
-    */
-  private def srpBandRelation(embeddings: DataFrame,
-                              bits: Int, bands: Int): DataFrame = {
-    require(bits % bands == 0, s"$bits bits not divisible into $bands bands")
-    require(bits <= SrpMaxBits, s"$bits > $SrpMaxBits available planes")
-    require(bits / bands <= 30, s"band width ${bits / bands} overflows the int band value")
-    // one fused SrpBandValues pass — `bits` stacked literal-dot bit columns
-    // are identical arithmetic but fall off the JIT cliff at probe widths
-    // (see the expression's scaladoc)
-    val planes = (0 until bits).map(b => srpPlanes(b).toIndexedSeq)
-    embeddings
-      .select(col("vec_id"),
-        posexplode(graft.functions.VectorFunctions
-          .srp_bands(col("embedding"), planes, bands)))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_val")
-  }
-
   def srpStage(embeddings: DataFrame,
                threshold: Double = 0.35,
                bits: Int = SrpBits, bands: Int = SrpBands,
                maxBucket: Int = SrpMaxBucket): Stage = {
     // Candidates dedup across bands BEFORE verification, then only
     // candidate rows fetch their vectors back by vec_id (the
-    // minhashNearDups shape, and exactly the oracle's own CTE structure).
+    // minhashNearDupsStage shape, and exactly the oracle's own CTE structure).
     // The PRE-cap keyed signature relation persists, so the `bits` dot
     // products run once for the cap's aggregate, its anti-join left and
     // both sides of the band self-join.

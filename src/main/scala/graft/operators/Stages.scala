@@ -25,9 +25,6 @@ final case class Stage(result: DataFrame, cached: Seq[DataFrame] = Nil,
   *    [[releaseCheckpoint]] frees every LogicalRDD leaf of the relation,
   *    so a relation that reads an input's checkpoint (a `SessionArtifacts`
   *    entry, say) must never be listed.
-  *  - The result-only twins (`def foo = fooStage(...).result`) leave the
-  *    caches to the session: one-shot callers (Bench, Verify) clear the
-  *    catalog cache per query; long-lived callers use the handle.
   *
   * [[persisted]] is the lazy persist: the first action fills the cache.
   * [[materialized]] persists AND fills the cache eagerly (one count job)

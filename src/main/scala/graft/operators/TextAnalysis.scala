@@ -298,10 +298,6 @@ object TextAnalysis {
       Seq(toks))
   }
 
-  def heavyHitters(docs: DataFrame, k: Int = 10,
-                   depth: Int = 4, width: Int = 1024): DataFrame =
-    heavyHittersStage(docs, k, depth, width).result
-
   /** Gopher-style repetition signals per document: duplicate-word
     * fraction (1 − distinct/total words) and top-bigram fraction (share
     * of the most frequent word 2-gram among all 2-grams) — the
@@ -479,27 +475,6 @@ object TextAnalysis {
       md5(normalized(col("text"))).as("fp"),
       fp64Expr(col("text")).as("fp64"))
 
-  /** Perplexity scoring under a corpus-trained unigram LM — the
-    * statistical-LM quality filter of the CCNet pipeline (Wenzek et al.,
-    * LREC 2020 filter with KenLM; here the LM is a self-trained unigram
-    * model with Laplace smoothing, so training and scoring are one
-    * distributed job with no external model artifact). Per document:
-    * token count, average negative log-likelihood
-    * `−Σ k·ln((cnt+1)/(N+V)) / Σ k`, and perplexity `e^avg_nll`.
-    * Low-perplexity outliers are boilerplate/templated text,
-    * high-perplexity outliers are noise — downstream filters band on
-    * `ppl`.
-    *
-    * Scale shape: ONE corpus scan — the token explode collapses to
-    * distinct (doc_id, tok_fp) term frequencies by the very next
-    * map-side-combining aggregate and persists; the unigram counts re-fold
-    * those SAME pairs per 60-bit token fingerprint (the corpus is never
-    * exploded twice, and no token string enters any exchange). The model
-    * totals (N, V) are a one-row aggregate — broadcast safe by
-    * construction. Scoring joins pairs to counts on the 8-byte
-    * fingerprint (AQE-skew-splittable — stopword fingerprints are hot)
-    * and rolls up per doc_id.
-    */
   /** The fused LM stage (VERDICT r6 #6): ONE persisted
     * (doc_id, tok_fp, prev_fp) pair stream feeds BOTH the unigram and the
     * bigram model — vocab counts, context counts, and both scoring joins
@@ -580,7 +555,28 @@ object TextAnalysis {
     LmFusedStage(pairs, unigram, bigram)
   }
 
-  /** Standalone unigram stage — the lean token-granularity shape (ONE
+  /** Perplexity scoring under a corpus-trained unigram LM — the
+    * statistical-LM quality filter of the CCNet pipeline (Wenzek et al.,
+    * LREC 2020 filter with KenLM; here the LM is a self-trained unigram
+    * model with Laplace smoothing, so training and scoring are one
+    * distributed job with no external model artifact). Per document:
+    * token count, average negative log-likelihood
+    * `−Σ k·ln((cnt+1)/(N+V)) / Σ k`, and perplexity `e^avg_nll`.
+    * Low-perplexity outliers are boilerplate/templated text,
+    * high-perplexity outliers are noise — downstream filters band on
+    * `ppl`.
+    *
+    * Scale shape: ONE corpus scan — the token explode collapses to
+    * distinct (doc_id, tok_fp) term frequencies by the very next
+    * map-side-combining aggregate and persists; the unigram counts re-fold
+    * those SAME pairs per 60-bit token fingerprint (the corpus is never
+    * exploded twice, and no token string enters any exchange). The model
+    * totals (N, V) are a one-row aggregate — broadcast safe by
+    * construction. Scoring joins pairs to counts on the 8-byte
+    * fingerprint (AQE-skew-splittable — stopword fingerprints are hot)
+    * and rolls up per doc_id.
+    *
+    * Standalone unigram stage — the lean token-granularity shape (ONE
     * fingerprint per token, first fold directly to (doc, tok_fp)); use
     * [[lmFusedStage]] when the corpus is scored under BOTH models.
     */
@@ -612,8 +608,6 @@ object TextAnalysis {
         round(exp(col("nll_sum") / col("n_tokens")), 4).as("ppl"))
   }
 
-  def lmScore(docs: DataFrame): DataFrame = lmScoreStage(docs).result
-
   /** Bigram-LM perplexity — [[lmScoreStage]]'s conditional upgrade:
     * p(cur|prev) = (c₂(prev,cur)+1) / (c₁(prev)+V) with Laplace
     * smoothing, where c₁ counts prev as a CONTEXT (bigram instances with
@@ -627,8 +621,6 @@ object TextAnalysis {
     val f = lmFusedStage(docs)
     Stage(f.bigram, Seq(f.pairs))
   }
-
-  def lmScoreBigram(docs: DataFrame): DataFrame = lmScoreBigramStage(docs).result
 
   /** Demo blocklist for [[blocklistFilter]]'s gate — neutral terms chosen
     * so the gate discriminates on the synthetic corpus ("dup" appears in
@@ -664,9 +656,6 @@ object TextAnalysis {
     * (bounded by construction — the q80 boundary-bucket argument), with
     * the corpus totals a one-row broadcast.
     */
-  def vocabCoverage(docs: DataFrame, topV: Int = 50): DataFrame =
-    vocabCoverageStage(docs, topV).result
-
   def vocabCoverageStage(docs: DataFrame, topV: Int = 50): Stage = {
     // persisted: the vocab-sized count relation feeds BOTH the totals
     // aggregate and the top-V selection, so the corpus explodes once
@@ -707,9 +696,6 @@ object TextAnalysis {
     * corpus-constant relation is one row — broadcast safe by
     * construction.
     */
-  def sourceDivergence(docs: DataFrame): DataFrame =
-    sourceDivergenceStage(docs).result
-
   def sourceDivergenceStage(docs: DataFrame): Stage = {
     // persisted: the (source, tok_fp) pairs feed the corpus re-fold, the
     // constants aggregate and the scoring join (else three explodes)
@@ -758,7 +744,7 @@ object TextAnalysis {
   val Bm25K1 = 1.2
   val Bm25B = 0.75
 
-  /** Default [[bm25TopK]] result size, interpolated into the q100 oracle
+  /** Default [[bm25TopKStage]] result size, interpolated into the q100 oracle
     * (ADVICE r10: hardcoding it there would silently desynchronize).
     */
   val Bm25TopN = 50
@@ -783,11 +769,6 @@ object TextAnalysis {
     * the oracle) and top-N is a `TakeOrdered` heap, never a global sort.
     * Nothing shuffles at corpus cardinality.
     */
-  def bm25TopK(docs: DataFrame, terms: Seq[String],
-               k1: Double = Bm25K1, b: Double = Bm25B,
-               topN: Int = Bm25TopN): DataFrame =
-    bm25TopKStage(docs, terms, k1, b, topN).result
-
   def bm25TopKStage(docs: DataFrame, terms: Seq[String],
                     k1: Double = Bm25K1, b: Double = Bm25B,
                     topN: Int = Bm25TopN): Stage = {
@@ -833,12 +814,12 @@ object TextAnalysis {
 
   // --- Kneser-Ney bigram LM ---------------------------------------------
 
-  /** Absolute-discount constant for [[lmScoreKneserNey]] (Chen & Goodman
+  /** Absolute-discount constant for [[lmScoreKneserNeyStage]] (Chen & Goodman
     * 1999's fixed-D variant; 0.75 is the conventional choice).
     */
   val KneserNeyD = 0.75
 
-  /** Interpolated Kneser-Ney bigram perplexity — [[lmScoreBigram]]'s
+  /** Interpolated Kneser-Ney bigram perplexity — [[lmScoreBigramStage]]'s
     * smoothing upgrade and the canonical n-gram LM smoother (Kneser &
     * Ney 1995; Chen & Goodman 1999 interpolated form):
     *
@@ -894,9 +875,6 @@ object TextAnalysis {
     Stage(result, Seq(f.pairs, c2))
   }
 
-  def lmScoreKneserNey(docs: DataFrame): DataFrame =
-    lmScoreKneserNeyStage(docs).result
-
   // --- cross-document n-gram novelty ------------------------------------
 
   /** Per-document shingle novelty: the fraction of a document's DISTINCT
@@ -919,9 +897,6 @@ object TextAnalysis {
     * aggregate makes every join input doc-sized (measured 25 s, 6.7×). No
     * token strings cross any shuffle — only 60-bit fingerprints.
     */
-  def shingleNovelty(docs: DataFrame): DataFrame =
-    shingleNoveltyStage(docs).result
-
   def shingleNoveltyStage(docs: DataFrame): Stage = {
     val perDoc = Stages.persisted(docs
       .select(col("doc_id"),
@@ -945,8 +920,8 @@ object TextAnalysis {
 
   /** Top boilerplate report: the `topN` most document-frequent word
     * 3-gram shingles with their df and corpus share — the drill-down
-    * behind a low [[shingleNovelty]] score ("WHAT is the boilerplate"),
-    * and the candidate list for a [[graft.operators.Dedup#removeBoilerplate]]
+    * behind a low [[shingleNoveltyStage]] score ("WHAT is the boilerplate"),
+    * and the candidate list for a [[graft.operators.Dedup#boilerplateStage]]
     * blocklist.
     *
     * Scale shape: the heavy fold runs entirely on 60-bit fingerprints
@@ -957,9 +932,6 @@ object TextAnalysis {
     * exchange, not the corpus's shingle vocabulary. The corpus share
     * denominator is a one-row broadcast.
     */
-  def topBoilerplate(docs: DataFrame, topN: Int = 20): DataFrame =
-    topBoilerplateStage(docs, topN).result
-
   def topBoilerplateStage(docs: DataFrame, topN: Int = 20): Stage = {
     val pd = Stages.persisted(docs
       .select(col("doc_id"),

@@ -80,10 +80,6 @@ object Warc {
 
   private val Crlf = "\r\n".getBytes(UTF_8)
 
-  /** Write `docs` (doc_id, text, lang, source — extra columns ignored) as
-    * `shards` WARC files under `path`; `compress = true` gzips each shard
-    * and names it `part-NNNNN.warc.wet.gz`.
-    */
   /** Serialize ONE record in the shared grammar — the single definition
     * BOTH writers emit ([[writeWarc]] and the V2 `format("warc")` path),
     * so the two cannot drift (review r13: the V2 copy had already
@@ -111,6 +107,10 @@ object Warc {
     out.write(Crlf); out.write(Crlf)
   }
 
+  /** Write `docs` (doc_id, text, lang, source — extra columns ignored) as
+    * `shards` WARC files under `path`; `compress = true` gzips each shard
+    * and names it `part-NNNNN.warc.wet.gz`.
+    */
   def writeWarc(docs: DataFrame, path: String, shards: Int = 8,
                 compress: Boolean = false): Unit = {
     val sc = docs.sparkSession.sparkContext

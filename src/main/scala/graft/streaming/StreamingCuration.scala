@@ -66,7 +66,7 @@ object StreamingCuration {
 
   /** Viral-boilerplate alarm: per tumbling window, every shingle
     * fingerprint whose in-window document frequency crosses `minDf` —
-    * the streaming twin of [[graft.operators.TextAnalysis#topBoilerplate]]
+    * the streaming twin of [[graft.operators.TextAnalysis#topBoilerplateStage]]
     * (a continuous query cannot rank "top N ever", but it CAN finalize
     * "df ≥ threshold in this window" exactly once per window — the
     * alert-shaped reformulation, same as the Solar suppression story).
@@ -100,6 +100,44 @@ object StreamingCuration {
       .filter(col("df") >= minDf)
       .select(col("window.start").as("w_start"), col("s_fp"), col("df"))
 
+  /** Streaming card-stats rows — [[graft.operators.Curation
+    * .docCardStats]]'s continuous twin: the per-document stats-artifact
+    * row computed AT INGEST as a stateless projection (per-row latency,
+    * no watermark, no state store), so the nightly
+    * [[graft.operators.Curation.sourceDatacardIncrementalStage]] pass
+    * consumes an already-current artifact instead of re-running text
+    * kernels over the day's batch. Batch ≡ stream holds by construction
+    * (identical kernel expressions); CurationSpec pins it.
+    */
+  def cardStatsStream(docsStream: DataFrame): DataFrame =
+    docsStream.select(col("ts") +: col("doc_id") +: col("source") +:
+      graft.operators.Curation.cardStatCols: _*)
+
+  /** Streaming twin of [[graft.operators.Curation.mergeCorpusIncremental]]'s
+    * CLASSIFICATION: each incoming document is tagged insert/rewrite/
+    * refresh against the static `(doc_id, fp)` corpus artifact AT INGEST
+    * TIME — the change feed the batch merge derives daily, produced
+    * continuously instead. Stateless: the artifact is the static side of
+    * a stream-static left join (at 100 TB it is the 16-byte/doc relation
+    * [[graft.operators.Curation.corpusFingerprints]] maintains, read
+    * per micro-batch), the incoming fp is a scan-fused projection, and
+    * the class is a per-row CASE — append mode, per-row latency, no
+    * state store. `carry` has no streaming analog by construction
+    * (untouched corpus rows never enter the stream); the batch merge
+    * remains the operator that emits them.
+    */
+  def mergeClassifyStream(docsStream: DataFrame, corpusFps: DataFrame): DataFrame = {
+    val art = corpusFps.select(col("doc_id"), col("fp").as("corpus_fp"))
+    docsStream
+      .select(col("ts"), col("doc_id"),
+        TextAnalysis.fp64Expr(col("text")).as("fp"))
+      .join(art, Seq("doc_id"), "left")
+      .select(col("ts"), col("doc_id"), col("fp"),
+        when(col("corpus_fp").isNull, lit("insert"))
+          .when(col("corpus_fp") === col("fp"), lit("refresh"))
+          .otherwise(lit("rewrite")).as("change"))
+  }
+
   /** Streaming twin of [[graft.operators.Dedup.decontaminationReport]]:
     * flag each INCOMING document sharing any n-token shingle with a
     * STATIC benchmark relation — the ingest-time decontamination gate (a
@@ -115,47 +153,9 @@ object StreamingCuration {
     * The fp set rides the plan as an array literal scanned per shingle —
     * fine for eval-suite-sized benchmarks (10³-10⁵ fps, the real case);
     * past `fpLiteralMax` the operator switches itself to the broadcast-
-    * relation regime documented on the method.
-    */
-  /** Streaming twin of [[graft.operators.Curation.mergeCorpusIncremental]]'s
-    * CLASSIFICATION: each incoming document is tagged insert/rewrite/
-    * refresh against the static `(doc_id, fp)` corpus artifact AT INGEST
-    * TIME — the change feed the batch merge derives daily, produced
-    * continuously instead. Stateless: the artifact is the static side of
-    * a stream-static left join (at 100 TB it is the 16-byte/doc relation
-    * [[graft.operators.Curation.corpusFingerprints]] maintains, read
-    * per micro-batch), the incoming fp is a scan-fused projection, and
-    * the class is a per-row CASE — append mode, per-row latency, no
-    * state store. `carry` has no streaming analog by construction
-    * (untouched corpus rows never enter the stream); the batch merge
-    * remains the operator that emits them.
-    */
-  /** Streaming card-stats rows — [[graft.operators.Curation
-    * .docCardStats]]'s continuous twin: the per-document stats-artifact
-    * row computed AT INGEST as a stateless projection (per-row latency,
-    * no watermark, no state store), so the nightly
-    * [[graft.operators.Curation.sourceDatacardIncremental]] pass
-    * consumes an already-current artifact instead of re-running text
-    * kernels over the day's batch. Batch ≡ stream holds by construction
-    * (identical kernel expressions); CurationSpec pins it.
-    */
-  def cardStatsStream(docsStream: DataFrame): DataFrame =
-    docsStream.select(col("ts") +: col("doc_id") +: col("source") +:
-      graft.operators.Curation.cardStatCols: _*)
-
-  def mergeClassifyStream(docsStream: DataFrame, corpusFps: DataFrame): DataFrame = {
-    val art = corpusFps.select(col("doc_id"), col("fp").as("corpus_fp"))
-    docsStream
-      .select(col("ts"), col("doc_id"),
-        TextAnalysis.fp64Expr(col("text")).as("fp"))
-      .join(art, Seq("doc_id"), "left")
-      .select(col("ts"), col("doc_id"), col("fp"),
-        when(col("corpus_fp").isNull, lit("insert"))
-          .when(col("corpus_fp") === col("fp"), lit("refresh"))
-          .otherwise(lit("rewrite")).as("change"))
-  }
-
-  /** Two state regimes by benchmark size (VERDICT r17 #6):
+    * relation regime described below.
+    *
+    * Two state regimes by benchmark size (VERDICT r17 #6):
     *
     *  - **literal** (≤ `fpLiteralMax` fingerprints — every real eval
     *    suite, 10³-10⁵ fps): the fp set rides the plan as a sorted array

@@ -38,7 +38,7 @@ object StreamingDedup {
   def dedupExact(docsStream: DataFrame): DataFrame =
     fingerprinted(docsStream).dropDuplicates("fp")
 
-  /** Streaming twin of [[graft.operators.Dedup.dedupAgainstCorpus]]'s
+  /** Streaming twin of [[graft.operators.Dedup.dedupAgainstCorpusStage]]'s
     * near-dup arm: each streamed document's LSH bands probe a STATIC
     * corpus band index (stream-static join — stateless, no store), exact
     * Jaccard verifies the candidates, and the only stateful operator is
@@ -49,12 +49,6 @@ object StreamingDedup {
     * production precomputes; at scale they arrive as parquet, not a
     * recomputation.
     */
-  def nearDupsAgainstCorpus(docsStream: DataFrame, corpus: DataFrame,
-                            threshold: Double = 0.5,
-                            watermarkDelay: String = "10 minutes"): DataFrame =
-    nearDupsAgainstCorpusStage(docsStream, corpus, threshold, watermarkDelay)
-      .result
-
   def nearDupsAgainstCorpusStage(docsStream: DataFrame, corpus: DataFrame,
                                  threshold: Double = 0.5,
                                  watermarkDelay: String = "10 minutes"): Stage = {
@@ -68,17 +62,21 @@ object StreamingDedup {
       .select(col("band_idx"), col("band_hash"), col("doc_id").as("corp_id"))
     val corpSh = corpIdx.select(col("doc_id").as("corp_id"),
       col("sh").as("sh_corp"))
+    // each document shingles once; the signature derives from the
+    // distinct set (min over a multiset = min over its set), and the
+    // band hashes from the signature. A shingle-less document explodes
+    // to no rows: a Filter on `sh_in` would be pushed below its
+    // projection and shingle every document a second time.
     val inBands = docsStream
       .select(col("ts"), col("doc_id"),
-        array_distinct(Dedup.shingles(col("text"))).as("sh_in"),
-        posexplode(transform(
-          sequence(lit(0), lit(Dedup.LshBands - 1)),
-          b => md5(concat_ws("|", slice(
-            Dedup.minhashSignature(Dedup.shingles(col("text")), Dedup.MinhashK),
-            b * Dedup.LshRows + 1, lit(Dedup.LshRows)))))))
+        array_distinct(Dedup.shingles(col("text"))).as("sh_in"))
+      .select(col("ts"), col("doc_id"), col("sh_in"),
+        Dedup.minhashSignature(col("sh_in"), Dedup.MinhashK).as("sig"))
+      .select(col("ts"), col("doc_id"), col("sh_in"),
+        posexplode(when(size(col("sh_in")) > 0,
+          Dedup.bandHashes(col("sig")))))
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_hash")
-      .filter(size(col("sh_in")) > 0)
     val result = inBands
       .join(corpBands, Seq("band_idx", "band_hash"))
       .join(corpSh, "corp_id")
@@ -90,14 +88,8 @@ object StreamingDedup {
     Stage(result, Seq(corpIdx))
   }
 
-  def editDistanceAgainstCorpusStream(namesStream: DataFrame,
-      corpus: DataFrame, idCol: String, strCol: String, k: Int,
-      watermarkDelay: String = "10 minutes"): DataFrame =
-    editDistanceAgainstCorpusStreamStage(namesStream, corpus, idCol,
-      strCol, k, watermarkDelay).result
-
   /** Streaming twin of [[graft.operators.EditDistance
-    * .editDistanceAgainstCorpus]]: each streamed name's probe substrings
+    * .editDistanceAgainstCorpusStage]]: each streamed name's probe substrings
     * hit a STATIC corpus segment index (stream-static equi-join —
     * stateless, no store), the exact early-exit levenshtein verifies
     * candidates, and the only stateful operator is the watermark-bounded

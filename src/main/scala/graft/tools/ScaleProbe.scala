@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Engine
-import graft.operators.{Curation, Dedup, Similarity, Solar}
+import graft.operators.{Curation, Dedup, Similarity, Solar, Stages}
 
 /** Scale probe: synthesize an events table N× the sf0.1 row count and time
   * the flagship pipeline on it, to measure how the plan actually scales
@@ -50,20 +50,18 @@ object ScaleProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val rows = millions * 1000000L
-    // materialize the input once so generation cost isn't timed
-    val events = syntheticEvents(spark, rows)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    events.count()
-
-    def time(name: String)(f: => Long): Unit = {
+    def time(name: String, rowsIn: Long)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f
-      println(f"SCALE $name rows_in=${rows} rows_out=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
+      println(f"SCALE $name rows_in=$rowsIn rows_out=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
     }
-    time("solar_pipeline")(Solar.pipeline(events).count())
+
+    val rows = millions * 1000000L
+    // materialize the input once so generation cost isn't timed
+    val events = Stages.materialized(syntheticEvents(spark, rows))
+    time("solar_pipeline", rows)(Solar.pipeline(events).count())
     spark.catalog.clearCache()
-    time("exact_dedup") {
+    time("exact_dedup", rows) {
       // exact dedup over the synthetic values rendered as text
       Dedup.exact(events.select(col("user_id").as("doc_id"),
         concat_ws(" ", col("event_type"), col("value").cast("string")).as("text"))).count()
@@ -73,34 +71,22 @@ object ScaleProbe {
     // document-pipeline probes at rows/10 (each doc is ~50 words — a 10 M
     // probe hashes 500 M tokens through the simhash/curation kernels)
     val docRows = rows / 10
-    val docs = syntheticDocs(spark, docRows)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    docs.count()
-    def timeDocs(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"SCALE $name rows_in=${docRows} rows_out=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-    }
-    timeDocs("simhash_bucketed")(Dedup.simhashBucketedNearDups(docs).count())
+    val docs = Stages.materialized(syntheticDocs(spark, docRows))
+    time("simhash_bucketed", docRows)(
+      Dedup.simhashBucketedNearDups(docs).count())
     spark.catalog.clearCache()
-    timeDocs("curation_pipeline")(Curation.curate(docs, "und", 0.0).count())
+    time("curation_pipeline", docRows)(
+      Curation.curate(docs, "und", 0.0).count())
     spark.catalog.clearCache()
-    timeDocs("stratified_sample")(
+    time("stratified_sample", docRows)(
       Curation.stratifiedSample(docs, Map("und" -> 10), 50).count())
     docs.unpersist()
 
     val embRows = rows / 10
-    val embs = syntheticEmbeddings(spark, embRows)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    embs.count()
-    def timeEmb(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"SCALE $name rows_in=${embRows} rows_out=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-    }
-    timeEmb("quantize_int8")(Similarity.quantizeInt8(embs).count())
+    val embs = Stages.materialized(syntheticEmbeddings(spark, embRows))
+    time("quantize_int8", embRows)(Similarity.quantizeInt8(embs).count())
     spark.catalog.clearCache()
-    timeEmb("kmeans_cells")(Similarity.kmeansCells(embs, k = 4, iters = 2).count())
+    time("kmeans_cells", embRows)(Similarity.kmeansCells(embs, k = 4, iters = 2).count())
     spark.catalog.clearCache()
     embs.unpersist()
     spark.stop()

@@ -39,7 +39,7 @@ class BpeLocalSpec extends SparkSpecBase {
     assert(mergeRows(local) === mergeRows(dist))
     assert(segRows(local) === segRows(dist))
     assert(mergeRows(local).nonEmpty)
-    local.unpersist(); dist.unpersist()
+    local.stage.unpersist(); dist.stage.unpersist()
     spark.catalog.clearCache()
   }
 
@@ -52,7 +52,7 @@ class BpeLocalSpec extends SparkSpecBase {
     val (local, dist) = both(texts, nMerges = 20, batchK = 4)
     assert(mergeRows(local) === mergeRows(dist))
     assert(segRows(local) === segRows(dist))
-    local.unpersist(); dist.unpersist()
+    local.stage.unpersist(); dist.stage.unpersist()
     spark.catalog.clearCache()
   }
 
@@ -61,7 +61,7 @@ class BpeLocalSpec extends SparkSpecBase {
     val (local, dist) = both(texts, nMerges = 15, batchK = 1)
     assert(mergeRows(local) === mergeRows(dist))
     assert(segRows(local) === segRows(dist))
-    local.unpersist(); dist.unpersist()
+    local.stage.unpersist(); dist.stage.unpersist()
     spark.catalog.clearCache()
   }
 }

@@ -39,11 +39,11 @@ class BpeSpec extends SparkSpecBase {
       .as[(String, Seq[String])].collect().toMap
     assert(seg("aaab") === Seq("aaab"))
     assert(seg("ab") === Seq("ab"))
-    model.unpersist()
+    model.stage.unpersist()
     // deterministic: retraining reproduces the identical table
     val again = Bpe.train(docs, nMerges = 10)
     assert(again.merges.collect().toSeq === model.merges.collect().toSeq)
-    again.unpersist()
+    again.stage.unpersist()
     spark.catalog.clearCache()
   }
 
@@ -57,7 +57,7 @@ class BpeSpec extends SparkSpecBase {
     val seq = Bpe.train(docs, nMerges = 12, batchK = 1)
     val bat = Bpe.train(docs, nMerges = 12)
     assert(bat.merges.collect().toSeq === seq.merges.collect().toSeq)
-    seq.unpersist(); bat.unpersist()
+    seq.stage.unpersist(); bat.stage.unpersist()
     spark.catalog.clearCache()
   }
 
@@ -97,7 +97,7 @@ class BpeSpec extends SparkSpecBase {
     val seq = Bpe.train(docs, nMerges = 40, batchK = 1)
     val bat = Bpe.train(docs, nMerges = 40)
     assert(bat.merges.collect().toSeq === seq.merges.collect().toSeq)
-    seq.unpersist(); bat.unpersist()
+    seq.stage.unpersist(); bat.stage.unpersist()
     spark.catalog.clearCache()
   }
 
@@ -160,7 +160,7 @@ class BpeSpec extends SparkSpecBase {
         graft.functions.TextFunctions.bpe_encode(col("word"), pairs).as("enc"))
       .as[(String, Seq[String])].collect().toMap
     assert(encoded === fromVocab)
-    model.unpersist()
+    model.stage.unpersist()
     spark.catalog.clearCache()
   }
 
@@ -179,7 +179,7 @@ class BpeSpec extends SparkSpecBase {
     assert(enc("xyz") === Seq("x", "y", "z"))
     // in-vocab word reproduces its trained single token
     assert(enc("aaab") === Seq("aaab"))
-    model.unpersist()
+    model.stage.unpersist()
     spark.catalog.clearCache()
   }
 
@@ -198,7 +198,7 @@ class BpeSpec extends SparkSpecBase {
     assert(memo === direct)
     assert(direct.nonEmpty)
     stage.unpersist()
-    model.unpersist()
+    model.stage.unpersist()
     spark.catalog.clearCache()
   }
 

@@ -320,7 +320,7 @@ class CacheHygieneSpec extends SparkSpecBase {
       nMerges = 30)
     assert(model.merges.count() === 30)
     assert(cachedCount > 0)          // base persist (+ checkpoint blocks)
-    model.unpersist()
+    model.stage.unpersist()
     assert(cachedCount === 0)
   }
 

@@ -169,7 +169,7 @@ class CurationSpec extends SparkSpecBase {
     val docs = Seq(
       (1L, "en", words(100)), (2L, "en", words(200)), (3L, "en", words(100)),
       (10L, "de", words(300))).toDF("doc_id", "lang", "text")
-    val out = Curation.packSequences(docs, ctxTokens = 256, nBlocks = 1)
+    val out = Curation.packStage(docs, ctxTokens = 256, nBlocks = 1).result
       .select("doc_id", "cum_before", "seq_id", "offset", "spans_boundary")
       .as[(Long, Long, Long, Long, Int)].collect()
       .map(r => r._1 -> r).toMap
@@ -178,7 +178,7 @@ class CurationSpec extends SparkSpecBase {
     assert(out(3L) === ((3L, 300L, 1L, 44L, 0)))    // 300 = 256 + 44
     assert(out(10L) === ((10L, 0L, 0L, 0L, 1)))     // shards independent
     // invariant: seq_id * ctx + offset reconstructs the running position
-    val bad = Curation.packSequences(docs, 256)
+    val bad = Curation.packStage(docs, 256).result
       .filter(col("seq_id") * 256 + col("offset") =!= col("cum_before"))
       .count()
     assert(bad === 0L)
@@ -194,7 +194,7 @@ class CurationSpec extends SparkSpecBase {
         (i, if (i % 3 == 0) "en" else "de",
           (1 to (i % 37).toInt + 1).map(_ => "w").mkString(" ")))
       .toDF("doc_id", "lang", "text")
-    val twoLevel = Curation.packSequences(docs, ctxTokens = 64)
+    val twoLevel = Curation.packStage(docs, ctxTokens = 64).result
       .collect().map(_.toSeq).toSet
     val block = (conv(substring(md5(col("doc_id").cast("string")), 1, 4),
       16, 10).cast("int") % Curation.DefaultPackBlocks).as("block")
@@ -255,18 +255,18 @@ class CurationSpec extends SparkSpecBase {
     // the boundary, consumed in the two-level (md5-block, doc_id) order —
     // blocks are 11→2, 12→10, 13→12, 14→3, so docs 11 then 14 fit
     // (500, 600) and 12 would overflow; qb=50 starts past the budget
-    val out = Curation.tokenBudgetSelect(docs, budgetTokens = 600L)
+    val out = Curation.budgetStage(docs, budgetTokens = 600L).result
     val ids = out.select("doc_id").as[Long].collect().toSet
     assert(ids === Set(1L, 2L, 3L, 4L, 11L, 14L))
     val total = out.agg(sum(col("n_tokens"))).head().getLong(0)
     assert(total === 600L)
     // deterministic
-    val again = Curation.tokenBudgetSelect(docs, budgetTokens = 600L)
+    val again = Curation.budgetStage(docs, budgetTokens = 600L).result
       .select("doc_id").as[Long].collect().toSet
     assert(again === ids)
     // budget edges: zero selects nothing, a huge budget selects everything
-    assert(Curation.tokenBudgetSelect(docs, 0L).count() === 0L)
-    assert(Curation.tokenBudgetSelect(docs, 1000000L).count() === 12L)
+    assert(Curation.budgetStage(docs, 0L).result.count() === 0L)
+    assert(Curation.budgetStage(docs, 1000000L).result.count() === 12L)
     spark.catalog.clearCache() // budgetStage's shared projection
   }
 
@@ -625,11 +625,11 @@ class CurationSpec extends SparkSpecBase {
           .otherwise(col("text")))
     // the stored artifact: the reporting analog of q128's fp relation
     val stats = Curation.docCardStats(prior).localCheckpoint(true)
-    val inc = Curation.sourceDatacardIncremental(incoming, stats)
+    val inc = Curation.sourceDatacardIncrementalStage(incoming, stats).result
     // 1) bit-identical cards to the bootstrap path over the merged corpus
-    val full = Curation.sourceDatacard(
+    val full = Curation.sourceDatacardStage(
       Curation.mergeCorpus(prior, incoming)
-        .select("doc_id", "source", "text"))
+        .select("doc_id", "source", "text")).result
     assert(inc.collect().toSet === full.collect().toSet)
     // 2) the artifact path reads the checkpoint, never corpus text: the
     // only parquet scans allowed are the incoming batch's (pinned on the
@@ -648,7 +648,7 @@ class CurationSpec extends SparkSpecBase {
     // a second identical batch through it leaves the cards unchanged
     val stats2 = Curation.docCardStatsIncremental(incoming, stats)
       .localCheckpoint(true)
-    val again = Curation.sourceDatacardIncremental(incoming, stats2)
+    val again = Curation.sourceDatacardIncrementalStage(incoming, stats2).result
     assert(again.collect().toSet === full.collect().toSet)
     releaseCheckpoint(stats)
     releaseCheckpoint(stats2)
@@ -685,7 +685,7 @@ class CurationSpec extends SparkSpecBase {
       (4L, good, "B"),                    // dup of 1/2 ACROSS sources: counts in B too
       (5L, "el que la y en un mar y el sol", "B") // es majority tiebreak-relevant
     ).toDF("doc_id", "text", "source")
-    val rows = Curation.sourceDatacard(corpus).collect()
+    val rows = Curation.sourceDatacardStage(corpus).result.collect()
       .map(r => r.getAs[String]("source") -> r).toMap
     assert(rows.keySet === Set("A", "B"))
     val a = rows("A")

@@ -22,7 +22,7 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("minhash LSH finds exact and near dups, not unrelated pairs") {
-    val pairs = Dedup.minhashNearDups(docs, threshold = 0.5)
+    val pairs = Dedup.minhashNearDupsStage(docs, threshold = 0.5).result
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 4L)))          // identical -> jaccard 1.0
     assert(pairs.contains((1L, 2L)) || pairs.contains((2L, 4L))) // near dup
@@ -76,7 +76,8 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("windowed jaccard: identical pair scores 1.0, near pair in (0,1)") {
-    val out = Dedup.windowedJaccardPairs(docs, idWindow = 10, threshold = 0.2)
+    val out = Dedup.windowedJaccardPairsStage(docs, idWindow = 10,
+      threshold = 0.2).result
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(out((1L, 4L)) === 1.0)
     assert(out((1L, 2L)) > 0.2 && out((1L, 2L)) < 1.0)
@@ -195,15 +196,16 @@ class DedupSpec extends SparkSpecBase {
       (2L, "a b p q"),
       (3L, "m n")      // unique, untouched
     ).toDF("doc_id", "text")
-    val out = Dedup.removeBoilerplate(docs, chunkTokens = 2, maxDf = 1)
+    val out = Dedup.boilerplateStage(docs, chunkTokens = 2, maxDf = 1).result
       .as[(Long, Long, Long, String)].collect().map(r => r._1 -> r).toMap
     assert(out(1L) === ((1L, 2L, 1L, "x y")))
     assert(out(2L) === ((2L, 2L, 1L, "p q")))
     assert(out(3L) === ((3L, 1L, 0L, "m n")))
     // instance counting: repetition WITHIN one document is boilerplate
     // too, and an all-boilerplate document renders as the empty string
-    val rep = Dedup.removeBoilerplate(
-      Seq((4L, "a b a b")).toDF("doc_id", "text"), chunkTokens = 2, maxDf = 1)
+    val rep = Dedup.boilerplateStage(
+      Seq((4L, "a b a b")).toDF("doc_id", "text"), chunkTokens = 2,
+      maxDf = 1).result
       .as[(Long, Long, Long, String)].head()
     assert(rep === ((4L, 2L, 2L, "")))
   }
@@ -213,7 +215,7 @@ class DedupSpec extends SparkSpecBase {
     // lowered text exactly (chunk boundaries never lose or reorder tokens)
     val docs = Seq((1L, "The QUICK brown fox jumps over the lazy dog now"),
       (2L, "a"), (3L, "x  y")).toDF("doc_id", "text") // incl. double space
-    val out = Dedup.removeBoilerplate(docs, chunkTokens = 3, maxDf = 1000)
+    val out = Dedup.boilerplateStage(docs, chunkTokens = 3, maxDf = 1000).result
       .select("doc_id", "n_removed", "clean_text")
       .as[(Long, Long, String)].collect().map(r => r._1 -> r).toMap
     val in = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -231,7 +233,8 @@ class DedupSpec extends SparkSpecBase {
       (2L, "z b c d e"),    // one edited token, rest shared
       (3L, "p q r s t")     // fully unique
     ).toDF("doc_id", "text")
-    val out = Dedup.spanDedup(docs, spanTokens = 2, stride = 1, maxDupFrac = 0.5)
+    val out = Dedup.spanDedupStage(docs, spanTokens = 2, stride = 1,
+      maxDupFrac = 0.5).result
       .select("doc_id", "n_spans", "dup_spans", "keep")
       .as[(Long, Long, Long, Int)].collect().map(r => r._1 -> r).toMap
     // doc 1 spans: "a b","b c","c d","d e" -> 3 of 4 shared with doc 2
@@ -243,7 +246,7 @@ class DedupSpec extends SparkSpecBase {
   test("spanDedup counts documents, not occurrences, for span df") {
     // "a b" occurs twice inside doc 1 but in no other doc: df must stay 1
     val docs = Seq((1L, "a b a b"), (2L, "x y")).toDF("doc_id", "text")
-    val out = Dedup.spanDedup(docs, spanTokens = 2, stride = 2)
+    val out = Dedup.spanDedupStage(docs, spanTokens = 2, stride = 2).result
       .select("doc_id", "dup_spans").as[(Long, Long)].collect().toMap
     assert(out === Map(1L -> 0L, 2L -> 0L))
   }
@@ -269,7 +272,8 @@ class DedupSpec extends SparkSpecBase {
       (11L, s"$base extra"),     // near dup of 1 (jaccard 22/23)
       (12L, "entirely novel incoming document text")          // novel
     ).toDF("doc_id", "text")
-    val out = Dedup.dedupAgainstCorpus(corpus, incoming, threshold = 0.5)
+    val out = Dedup.dedupAgainstCorpusStage(corpus, incoming,
+      threshold = 0.5).result
       .select("doc_id", "exact_dup", "n_near", "keep")
       .as[(Long, Int, Long, Int)].collect().map(r => r._1 -> r).toMap
     assert(out(10L) === ((10L, 1, 1L, 0)))  // exact implies near too

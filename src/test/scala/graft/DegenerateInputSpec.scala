@@ -20,44 +20,44 @@ class DegenerateInputSpec extends SparkSpecBase {
     Seq((1L, ""), (2L, "")).toDF("doc_id", "text")
 
   test("dedup and scoring operators return cleanly on an empty corpus") {
-    assert(Dedup.spanDedup(empty).count() === 0)
-    assert(TextAnalysis.lmScore(empty).count() === 0)
-    assert(TextAnalysis.lmScoreBigram(empty).count() === 0)
-    assert(TextAnalysis.vocabCoverage(empty).count() === 0)
+    assert(Dedup.spanDedupStage(empty).result.count() === 0)
+    assert(TextAnalysis.lmScoreStage(empty).result.count() === 0)
+    assert(TextAnalysis.lmScoreBigramStage(empty).result.count() === 0)
+    assert(TextAnalysis.vocabCoverageStage(empty).result.count() === 0)
     assert(TextAnalysis.blocklistFilter(empty).count() === 0)
     assert(Curation.splitAssign(empty).count() === 0)
-    assert(Dedup.dedupAgainstCorpus(empty, empty).count() === 0)
-    assert(Relational.exactQuantilesTwoPass(
-      empty.toDF("g", "v"), "g", "v", Seq(0.5)).count() === 0)
+    assert(Dedup.dedupAgainstCorpusStage(empty, empty).result.count() === 0)
+    assert(Relational.exactQuantilesTwoPassStage(
+      empty.toDF("g", "v"), "g", "v", Seq(0.5)).result.count() === 0)
     // the r17 two-level budget rework collects the bucket histogram into
     // ONE array row — on an empty corpus that row carries an empty array
     // and must explode to nothing, not throw
-    assert(Curation.tokenBudgetSelect(empty, 100L).count() === 0)
+    assert(Curation.budgetStage(empty, 100L).result.count() === 0)
     spark.catalog.clearCache()
   }
 
   test("all-empty-text documents flow through without errors or NaNs") {
     // "" tokenizes to one empty token, shingles/bands are empty arrays:
     // span dedup scores the single empty span, LM scores the empty token
-    val span = Dedup.spanDedup(blank)
+    val span = Dedup.spanDedupStage(blank).result
       .select("doc_id", "dup_frac").as[(Long, Double)].collect().toMap
     assert(span === Map(1L -> 1.0, 2L -> 1.0)) // both share the empty span
-    val lm = TextAnalysis.lmScore(blank)
+    val lm = TextAnalysis.lmScoreStage(blank).result
       .select("doc_id", "ppl").as[(Long, Double)].collect()
     assert(lm.forall(r => !r._2.isNaN && r._2 > 0))
     // sub-2-token docs carry NULL bigram scores, not NaNs
-    val bg = TextAnalysis.lmScoreBigram(blank)
+    val bg = TextAnalysis.lmScoreBigramStage(blank).result
       .select("n_bigrams").as[Long].collect()
     assert(bg.toSeq === Seq(0L, 0L))
     // near-dup machinery drops shingle-less docs instead of matching them
-    assert(Dedup.dedupAgainstCorpus(blank, blank)
+    assert(Dedup.dedupAgainstCorpusStage(blank, blank).result
       .filter($"n_near" > 0).count() === 0)
     spark.catalog.clearCache()
   }
 
   test("an incoming batch against an EMPTY corpus keeps everything") {
     val incoming = Seq((1L, "some new document text here")).toDF("doc_id", "text")
-    val out = Dedup.dedupAgainstCorpus(empty, incoming)
+    val out = Dedup.dedupAgainstCorpusStage(empty, incoming).result
       .select("doc_id", "exact_dup", "n_near", "keep")
       .as[(Long, Int, Long, Int)].collect()
     assert(out.toSeq === Seq((1L, 0, 0L, 1)))
@@ -70,12 +70,13 @@ class DegenerateInputSpec extends SparkSpecBase {
     val blankFull = Seq((1L, "", "en", "src0"), (2L, "", "de", "src1"))
       .toDF("doc_id", "text", "lang", "source")
     // calibration / novelty / boilerplate: no shingles anywhere -> no rows
-    assert(Dedup.minhashCalibration(empty).count() === 0)
-    assert(Dedup.minhashCalibration(blank.select("doc_id", "text")).count() === 0)
-    assert(TextAnalysis.shingleNovelty(empty).count() === 0)
-    assert(TextAnalysis.topBoilerplate(blank).count() === 0)
+    assert(Dedup.minhashCalibrationStage(empty).result.count() === 0)
+    assert(Dedup.minhashCalibrationStage(blank.select("doc_id", "text"))
+      .result.count() === 0)
+    assert(TextAnalysis.shingleNoveltyStage(empty).result.count() === 0)
+    assert(TextAnalysis.topBoilerplateStage(blank).result.count() === 0)
     // percentile: NULL-quality (empty text) docs are filtered by contract
-    assert(Curation.qualityPercentile(emptyFull).count() === 0)
+    assert(Curation.qualityPercentileStage(emptyFull).result.count() === 0)
     // classifier: empty corpus scores no rows; blank docs score finite
     assert(graft.operators.QualityModel.scoreDocs(empty).count() === 0)
     val s = graft.operators.QualityModel.scoreDocs(blank).collect()
@@ -117,8 +118,8 @@ class DegenerateInputSpec extends SparkSpecBase {
     // fertility / data cards: empty in, empty out; blank docs aggregate
     // without NaN or NPE
     assert(graft.operators.Bpe.fertilityReport(emptyFull, Seq.empty).count() === 0)
-    assert(Curation.sourceDatacard(emptyFull).count() === 0)
-    assert(Curation.sourceDatacard(blankFull).count() === 2)
+    assert(Curation.sourceDatacardStage(emptyFull).result.count() === 0)
+    assert(Curation.sourceDatacardStage(blankFull).result.count() === 2)
     // classifier eval: empty corpus -> no split rows
     assert(graft.operators.QualityModel.evaluateSplits(emptyFull).count() === 0)
     // merge: empty existing -> everything inserts; empty incoming ->
@@ -187,13 +188,14 @@ class DegenerateInputSpec extends SparkSpecBase {
     // empty prior artifact -> cards of the batch alone; both empty -> 0
     val stats = Curation.docCardStats(docs)
     val emptyStats = Curation.docCardStats(emptyDocs)
-    val unchanged = Curation.sourceDatacardIncremental(emptyDocs, stats)
+    val unchanged =
+      Curation.sourceDatacardIncrementalStage(emptyDocs, stats).result
     assert(unchanged.collect().toSet ===
-      Curation.sourceDatacard(docs).collect().toSet)
-    val fresh = Curation.sourceDatacardIncremental(docs, emptyStats)
+      Curation.sourceDatacardStage(docs).result.collect().toSet)
+    val fresh = Curation.sourceDatacardIncrementalStage(docs, emptyStats).result
     assert(fresh.collect().toSet ===
-      Curation.sourceDatacard(docs).collect().toSet)
-    assert(Curation.sourceDatacardIncremental(emptyDocs, emptyStats)
+      Curation.sourceDatacardStage(docs).result.collect().toSet)
+    assert(Curation.sourceDatacardIncrementalStage(emptyDocs, emptyStats).result
       .count() === 0)
     // z-order: empty input writes an empty (but readable) layout; a
     // single row lands in one directory

@@ -100,8 +100,8 @@ class DoubleRatioBoundarySpec extends SparkSpecBase {
     }.toMap
     assertNotVacuous(ref.values.flatMap(p => Seq(p._1, p._2)), "lm nll")
     Parts.foreach { p =>
-      val got = TextAnalysis.lmScore(
-        docs.toDF("doc_id", "text").repartition(p))
+      val got = TextAnalysis.lmScoreStage(
+        docs.toDF("doc_id", "text").repartition(p)).result
         .select("doc_id", "avg_nll", "ppl")
         .as[(Long, Double, Double)].collect()
       assert(got.length === docs.size)
@@ -178,8 +178,9 @@ class DoubleRatioBoundarySpec extends SparkSpecBase {
     }.toMap
     assertNotVacuous(ref.values, "bm25")
     Parts.foreach { p =>
-      val got = TextAnalysis.bm25TopK(
-        docs.toDF("doc_id", "text").repartition(p), terms, topN = docs.size)
+      val got = TextAnalysis.bm25TopKStage(
+        docs.toDF("doc_id", "text").repartition(p), terms,
+        topN = docs.size).result
         .select("doc_id", "score").as[(Long, Double)].collect().toMap
       assert(got.keySet === ref.keySet, s"parts=$p")
       got.foreach { case (id, x) => ref(id).check(x, s"doc $id at parts=$p") }

@@ -89,7 +89,7 @@ class EngineSpec extends SparkSpecBase {
     val input = MemoryStream[(Timestamp, Long, String)]
     val df = input.toDF().toDF("ts", "doc_id", "text")
     val name = s"inc_dedup_${System.nanoTime()}"
-    val q = StreamingDedup.nearDupsAgainstCorpus(df, corpus)
+    val q = StreamingDedup.nearDupsAgainstCorpusStage(df, corpus).result
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       input.addData(

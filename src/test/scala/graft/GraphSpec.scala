@@ -232,7 +232,7 @@ class GraphSpec extends SparkSpecBase {
   test("q167's gate graph converges within its 4 rounds") {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.sources.Tables.documents(spark, dir)
-    val pairs = graft.operators.Dedup.minhashNearDups(docs, 0.5)
+    val pairs = graft.operators.Dedup.minhashNearDupsStage(docs, 0.5).result
       .select($"id_a", $"id_b")
     def run(r: Int) = Graph.kCorePeel(pairs, 2, r)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap

@@ -175,7 +175,8 @@ class PropertySpec extends SparkSpecBase {
         Seq((i.toLong, ws.mkString(" ")), (i + 10L, ws.mkString(" ")))
       }
       val out = graft.operators.Dedup
-        .spanDedup(rows.toDF("doc_id", "text"), spanTokens = 3, stride = 1)
+        .spanDedupStage(rows.toDF("doc_id", "text"), spanTokens = 3,
+          stride = 1).result
         .select("doc_id", "dup_frac").as[(Long, Double)].collect().toMap
       // every doc has an exact twin, so every span is shared: frac 1.0
       out.values.forall(_ === 1.0)

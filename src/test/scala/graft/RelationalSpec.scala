@@ -135,7 +135,7 @@ class RelationalSpec extends SparkSpecBase {
 
   test("profileKeys: uniform keys read as balanced, a hot key reads as skewed") {
     val uniform = (1 to 400).map(i => (i % 8, "x")).toDF("k", "v")
-    val u = Relational.profileKeys(uniform, "k")
+    val u = Relational.profileKeysStage(uniform, "k").result
       .select("n", "n_distinct", "top1_frac", "entropy_nats")
       .as[(Long, Long, Double, Double)].head()
     assert(u === ((400L, 8L, 0.125, // each key 1/8 of rows
@@ -143,7 +143,7 @@ class RelationalSpec extends SparkSpecBase {
     // 393 rows on one key, 7 singletons: the salt-this-join signature
     val hot = ((1 to 393).map(_ => (0, "x")) ++ (1 to 7).map(i => (i, "x")))
       .toDF("k", "v")
-    val h = Relational.profileKeys(hot, "k")
+    val h = Relational.profileKeysStage(hot, "k").result
       .select("top1_frac", "entropy_nats").as[(Double, Double)].head()
     assert(h._1 === 0.9825 && h._2 < 0.2)
   }
@@ -159,7 +159,8 @@ class RelationalSpec extends SparkSpecBase {
         (1 to 200).map(i => ("wide", i * 997.0))
     val df = rows.toDF("g", "v")
     val got = Relational
-      .exactQuantilesTwoPass(df, "g", "v", Seq(0.5, 0.95), nBuckets = 8)
+      .exactQuantilesTwoPassStage(df, "g", "v", Seq(0.5, 0.95),
+        nBuckets = 8).result
       .select("g", "p", "q").as[(String, Double, Double)].collect()
       .map { case (g, p, q) => (g, p) -> q }.toMap
     import org.apache.spark.sql.functions.{lit, percentile, round}

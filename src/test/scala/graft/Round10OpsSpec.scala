@@ -18,7 +18,7 @@ class Round10OpsSpec extends SparkSpecBase {
       (2L, "dup dup alpha"),         // tf(dup)=2, dl=3
       (3L, "alpha beta gamma delta") // tf(dup)=0, dl=4
     ).toDF("doc_id", "text")
-    val out = TextAnalysis.bm25TopK(docs, Seq("dup"), topN = 3)
+    val out = TextAnalysis.bm25TopKStage(docs, Seq("dup"), topN = 3).result
       .select("doc_id", "score").as[(Long, Double)].collect().toMap
 
     val n = 3.0; val df_ = 2.0; val avgdl = 10.0 / 3.0
@@ -35,14 +35,14 @@ class Round10OpsSpec extends SparkSpecBase {
     val docs = (1L to 20L).map { i =>
       (i, (Seq.fill(i.toInt)("dup") ++ Seq.fill(21 - i.toInt)("pad")).mkString(" "))
     }.toDF("doc_id", "text") // all dl=21, tf(dup)=doc_id
-    val got = TextAnalysis.bm25TopK(docs, Seq("dup"), topN = 5)
+    val got = TextAnalysis.bm25TopKStage(docs, Seq("dup"), topN = 5).result
       .select("doc_id").as[Long].collect()
     assert(got.toSeq === Seq(20L, 19L, 18L, 17L, 16L)) // monotone in tf
   }
 
   test("bm25TopK plan is a TakeOrdered heap, not a global sort") {
     val docs = (1L to 200L).map(i => (i, s"dup pad$i")).toDF("doc_id", "text")
-    val q = TextAnalysis.bm25TopK(docs, Seq("dup")).queryExecution
+    val q = TextAnalysis.bm25TopKStage(docs, Seq("dup")).result.queryExecution
     q.executedPlan.executeCollect() // drive AQE to the final plan
     val plan = q.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"))
@@ -55,7 +55,7 @@ class Round10OpsSpec extends SparkSpecBase {
     // corpus bigrams: d1 "a b a b" -> (a,b)x2 (b,a)x1 ; d2 "a c" -> (a,c)x1
     // c1(a)=3 nf(a)=2 ; c1(b)=1 nf(b)=1 ; nr(a)=nr(b)=nr(c)=1 ; T=3
     val docs = Seq((1L, "a b a b"), (2L, "a c")).toDF("doc_id", "text")
-    val out = TextAnalysis.lmScoreKneserNey(docs)
+    val out = TextAnalysis.lmScoreKneserNeyStage(docs).result
       .select("doc_id", "n_bigrams", "avg_nll").as[(Long, Long, Double)]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
 
@@ -127,7 +127,7 @@ class Round10OpsSpec extends SparkSpecBase {
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     }.toMap
 
-    val got = TextAnalysis.lmScoreKneserNey(docs)
+    val got = TextAnalysis.lmScoreKneserNeyStage(docs).result
       .select("doc_id", "avg_nll").as[(Long, Double)].collect().toMap
     expect.foreach { case (id, e) =>
       assert(math.abs(got(id) - e) <= 0.0001, s"doc $id: got ${got(id)} want $e")
@@ -136,7 +136,7 @@ class Round10OpsSpec extends SparkSpecBase {
 
   test("docs under 2 tokens carry zero bigrams and NULL KN scores") {
     val docs = Seq((1L, "solo"), (2L, "a b")).toDF("doc_id", "text")
-    val rows = TextAnalysis.lmScoreKneserNey(docs).collect()
+    val rows = TextAnalysis.lmScoreKneserNeyStage(docs).result.collect()
       .map(r => r.getLong(0) -> r).toMap
     assert(rows(1L).getLong(1) === 0L)
     assert(rows(1L).isNullAt(2) && rows(1L).isNullAt(3))
@@ -183,7 +183,7 @@ class Round10OpsSpec extends SparkSpecBase {
       (3L, "x y z"),       // one unique shingle
       (4L, "too short")    // no shingles -> absent
     ).toDF("doc_id", "text")
-    val out = TextAnalysis.shingleNovelty(docs)
+    val out = TextAnalysis.shingleNoveltyStage(docs).result
       .select("doc_id", "n_shingles", "n_unique", "novelty")
       .as[(Long, Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -195,7 +195,7 @@ class Round10OpsSpec extends SparkSpecBase {
 
   test("within-doc repeated shingles count once (distinct at the source)") {
     val docs = Seq((1L, "r r r r r")).toDF("doc_id", "text")
-    val out = TextAnalysis.shingleNovelty(docs)
+    val out = TextAnalysis.shingleNoveltyStage(docs).result
       .select("n_shingles", "n_unique", "novelty")
       .as[(Long, Long, Double)].collect()
     assert(out.toSeq === Seq((1L, 1L, 1.0)))
@@ -213,7 +213,7 @@ class Round10OpsSpec extends SparkSpecBase {
       (4L, "same text here", "srcB"),
       (5L, "same text here", "srcB")
     ).toDF("doc_id", "text", "source")
-    val out = graft.operators.Curation.qualityPercentile(docs)
+    val out = graft.operators.Curation.qualityPercentileStage(docs).result
       .select("doc_id", "quality", "pctl").as[(Long, Double, Double)]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
 
@@ -228,7 +228,7 @@ class Round10OpsSpec extends SparkSpecBase {
   test("qualityPercentile windows only touch the histogram, not the corpus") {
     val docs = (1L to 500L).map(i => (i, s"text $i dup and the", s"s${i % 3}"))
       .toDF("doc_id", "text", "source")
-    val plan = graft.operators.Curation.qualityPercentile(docs)
+    val plan = graft.operators.Curation.qualityPercentileStage(docs).result
       .queryExecution.optimizedPlan.toString
     // the Window's child must be the (source, quality) aggregate, never
     // the raw docs relation
@@ -244,7 +244,7 @@ class Round10OpsSpec extends SparkSpecBase {
     val text = "alpha beta gamma delta epsilon zeta eta theta"
     val docs = Seq((1L, text), (2L, text), (3L, "completely different words x y z"))
       .toDF("doc_id", "text")
-    val rows = Dedup.minhashCalibration(docs)
+    val rows = Dedup.minhashCalibrationStage(docs).result
       .select("id_a", "id_b", "est_jaccard", "jaccard", "abs_err")
       .as[(Long, Long, Double, Double, Double)].collect()
     assert(rows.exists(r => r._1 == 1L && r._2 == 2L &&
@@ -258,7 +258,7 @@ class Round10OpsSpec extends SparkSpecBase {
       val tail = if (i % 2 == 0) Seq("even", "suffix") else Seq("odd", s"tail$i")
       (i, (base ++ tail).mkString(" "))
     }.toDF("doc_id", "text")
-    val rows = Dedup.minhashCalibration(docs)
+    val rows = Dedup.minhashCalibrationStage(docs).result
       .select("est_jaccard", "jaccard", "abs_err")
       .as[(Double, Double, Double)].collect()
     assert(rows.nonEmpty)
@@ -295,7 +295,7 @@ class Round10OpsSpec extends SparkSpecBase {
   test("topBoilerplate surfaces the dominant shingle with its doc share") {
     val docs = (1L to 10L).map(i => (i, s"the same prefix unique$i tail$i"))
       .toDF("doc_id", "text")
-    val out = TextAnalysis.topBoilerplate(docs, topN = 3)
+    val out = TextAnalysis.topBoilerplateStage(docs, topN = 3).result
       .orderBy(col("df").desc, col("shingle"))
       .as[(String, Long, Double)].collect()
     assert(out.length === 3)
@@ -365,13 +365,14 @@ class Round10OpsSpec extends SparkSpecBase {
     val emptySrc = spark.emptyDataset[(Long, String, String)]
       .toDF("doc_id", "text", "source")
     val emptyLabels = spark.emptyDataset[(Long, Long)].toDF("doc_id", "cluster")
-    assert(TextAnalysis.bm25TopK(empty, Seq("dup")).count() === 0L)
-    assert(TextAnalysis.lmScoreKneserNey(empty).count() === 0L)
-    assert(TextAnalysis.shingleNovelty(empty).count() === 0L)
+    assert(TextAnalysis.bm25TopKStage(empty, Seq("dup")).result.count() === 0L)
+    assert(TextAnalysis.lmScoreKneserNeyStage(empty).result.count() === 0L)
+    assert(TextAnalysis.shingleNoveltyStage(empty).result.count() === 0L)
     assert(Dedup.clusterSurvivors(emptyLabels, empty).count() === 0L)
-    assert(graft.operators.Curation.qualityPercentile(emptySrc).count() === 0L)
-    assert(Dedup.minhashCalibration(empty).count() === 0L)
+    assert(graft.operators.Curation.qualityPercentileStage(emptySrc).result
+      .count() === 0L)
+    assert(Dedup.minhashCalibrationStage(empty).result.count() === 0L)
     assert(Dedup.sourceOverlap(emptySrc).count() === 0L)
-    assert(TextAnalysis.topBoilerplate(empty).count() === 0L)
+    assert(TextAnalysis.topBoilerplateStage(empty).result.count() === 0L)
   }
 }

@@ -155,7 +155,7 @@ class Round11OpsSpec extends SparkSpecBase {
       (2L, "a a", "src1"),   // pool, target-like
       (3L, "c c", "src1")    // pool, target-unlike
     ).toDF("doc_id", "text", "source")
-    val got = Curation.importanceResample(docs, "src0", n = 10)
+    val got = Curation.importanceStage(docs, "src0", n = 10).result
       .select("doc_id", "n_tokens", "avg_lr")
       .as[(Long, Long, Double)].collect()
     // vocab: a (t=2, r=2), b (t=1, r=0), c (t=0, r=2); tn=3 rn=4 v=3
@@ -172,7 +172,7 @@ class Round11OpsSpec extends SparkSpecBase {
   test("importanceResample excludes the target source and caps at n") {
     val docs = ((1L to 5L).map(i => (i, "a b c", "src0")) ++
       (6L to 20L).map(i => (i, s"a tok$i", "src1"))).toDF("doc_id", "text", "source")
-    val got = Curation.importanceResample(docs, "src0", n = 7)
+    val got = Curation.importanceStage(docs, "src0", n = 7).result
     assert(got.count() === 7)
     assert(got.filter(col("source") === "src0").count() === 0)
   }
@@ -189,7 +189,7 @@ class Round11OpsSpec extends SparkSpecBase {
 
   test("importanceResample on a corpus with no pool docs returns empty") {
     val docs = Seq((1L, "a b", "src0")).toDF("doc_id", "text", "source")
-    assert(Curation.importanceResample(docs, "src0").count() === 0)
+    assert(Curation.importanceStage(docs, "src0").result.count() === 0)
   }
 
   test("transitionMatrix: exact counts, per-key reset, singletons drop") {

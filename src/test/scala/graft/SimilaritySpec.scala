@@ -227,14 +227,14 @@ class SimilaritySpec extends SparkSpecBase {
       (2L, Array(2.0f, 1.0f, -0.5f), 0),
       (3L, Array(-1.0f, -0.5f, 0.25f), 0)
     ).toDF("vec_id", "embedding", "label")
-    val out = Similarity.srpBucketedNearDups(vecs, threshold = 0.35)
+    val out = Similarity.srpStage(vecs, threshold = 0.35).result
       .select("id_a", "id_b", "cos").as[(Long, Long, Double)].collect().toSet
     assert(out === Set((1L, 2L, 1.0)))
   }
 
   test("SRP-LSH finds the high-cosine pairs band-bucketing promises on real data") {
     val e = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val out = Similarity.srpBucketedNearDups(e, threshold = 0.0)
+    val out = Similarity.srpStage(e, threshold = 0.0).result
     // every reported pair is band-verified and scored in [ -1, 1 ]
     val cos = out.select("cos").as[Double].collect()
     assert(cos.forall(c => c >= 0.0 && c <= 1.0))

@@ -428,7 +428,7 @@ class TextKernelsSpec extends SparkSpecBase {
   test("lmScore: Laplace-smoothed unigram math is exact on a tiny corpus") {
     // corpus tokens: a a b | c  ->  N=4, V=3, p(a)=3/7, p(b)=p(c)=2/7
     val docs = Seq((1L, "a a b"), (2L, "c")).toDF("doc_id", "text")
-    val out = TextAnalysis.lmScore(docs)
+    val out = TextAnalysis.lmScoreStage(docs).result
       .select("doc_id", "n_tokens", "avg_nll", "ppl")
       .as[(Long, Long, Double, Double)].collect().map(r => r._1 -> r).toMap
     val nll1 = (2 * -math.log(3.0 / 7) + -math.log(2.0 / 7)) / 3
@@ -443,7 +443,7 @@ class TextKernelsSpec extends SparkSpecBase {
     // doc 1 bigrams: "a b" x2, "b a" x2 -> c2=2 each, c1(a)=c1(b)=2, V=2
     // p = (2+1)/(2+2) = 3/4 everywhere -> ppl = 4/3
     val docs = Seq((1L, "a b a b a"), (2L, "a")).toDF("doc_id", "text")
-    val out = TextAnalysis.lmScoreBigram(docs)
+    val out = TextAnalysis.lmScoreBigramStage(docs).result
       .select("doc_id", "n_bigrams", "ppl")
       .as[(Long, Long, Option[Double])].collect().map(r => r._1 -> r).toMap
     assert(out(1L) === ((1L, 4L, Some(1.3333))))
@@ -454,10 +454,10 @@ class TextKernelsSpec extends SparkSpecBase {
     // same token multiset (3 x, 3 y) per doc: unigram ppl identical,
     // bigram ppl lower for the doc whose transitions dominate the corpus
     val docs = Seq((1L, "x y x y x y"), (2L, "x x x y y y")).toDF("doc_id", "text")
-    val uni = TextAnalysis.lmScore(docs)
+    val uni = TextAnalysis.lmScoreStage(docs).result
       .select("doc_id", "ppl").as[(Long, Double)].collect().toMap
     assert(uni(1L) === uni(2L))
-    val bi = TextAnalysis.lmScoreBigram(docs)
+    val bi = TextAnalysis.lmScoreBigramStage(docs).result
       .select("doc_id", "ppl").as[(Long, Double)].collect().toMap
     assert(bi(1L) < bi(2L))
   }
@@ -478,7 +478,7 @@ class TextKernelsSpec extends SparkSpecBase {
 
   test("vocabCoverage: monotone curve reaching exactly 1.0 when topV covers the vocab") {
     val docs = Seq((1L, "a a a b b c"), (2L, "a b c d")).toDF("doc_id", "text")
-    val out = TextAnalysis.vocabCoverage(docs, topV = 10)
+    val out = TextAnalysis.vocabCoverageStage(docs, topV = 10).result
       .select("rank", "tok", "cnt", "cum_cov", "vocab")
       .as[(Int, String, Long, Double, Long)].collect().sortBy(_._1)
     assert(out.map(_._2).toSeq === Seq("a", "b", "c", "d")) // freq desc, tok tie-break
@@ -491,13 +491,13 @@ class TextKernelsSpec extends SparkSpecBase {
     // one source == the corpus -> p and q identical -> KL 0.0 exactly
     val single = Seq((1L, "a b c", "s0"), (2L, "a a d", "s0"))
       .toDF("doc_id", "text", "source")
-    val kl0 = TextAnalysis.sourceDivergence(single)
+    val kl0 = TextAnalysis.sourceDivergenceStage(single).result
       .select("kl").as[Double].collect()
     assert(kl0.toSeq === Seq(0.0))
     // disjoint vocabularies: both sources far from the pooled corpus
     val split = Seq((1L, "a a b b", "s0"), (2L, "x x y y", "s1"))
       .toDF("doc_id", "text", "source")
-    val kls = TextAnalysis.sourceDivergence(split)
+    val kls = TextAnalysis.sourceDivergenceStage(split).result
       .select("source", "kl").as[(String, Double)].collect().toMap
     assert(kls.size === 2 && kls.values.forall(_ > 0.0))
   }
@@ -507,7 +507,7 @@ class TextKernelsSpec extends SparkSpecBase {
     val docs = Seq(
       (3L, "the the the the the the"),
       (4L, "zq xw vv kj pq mn")).toDF("doc_id", "text")
-    val out = TextAnalysis.lmScore(docs)
+    val out = TextAnalysis.lmScoreStage(docs).result
       .select("doc_id", "ppl").as[(Long, Double)].collect().toMap
     assert(out(3L) < out(4L))
   }

@@ -391,14 +391,14 @@ object QueryFuzz {
         .filter(col("doc_id") % m === r)
       val pairs =
         if (incremental)
-          graft.operators.Dedup.prefixJoinAgainstCorpus(
+          graft.operators.Dedup.prefixJoinAgainstCorpusStage(
             docs.filter(col("doc_id") % 2 === 1), // corpus = odd ids (id_b)
-            docs.filter(col("doc_id") % 2 === 0), t)
+            docs.filter(col("doc_id") % 2 === 0), t).result
         else if (containment)
-          graft.operators.Dedup.containmentJoinAgainstCorpus(
+          graft.operators.Dedup.containmentJoinAgainstCorpusStage(
             docs.filter(col("doc_id") % 2 === 1), // corpus = odd ids (id_b)
-            docs.filter(col("doc_id") % 2 === 0), t)
-        else graft.operators.Dedup.prefixSimilarityJoin(docs, t)
+            docs.filter(col("doc_id") % 2 === 0), t).result
+        else graft.operators.Dedup.prefixSimilarityJoinStage(docs, t).result
       pairs.agg(count(lit(1)).as("a_cnt"),
         sum(col("id_a") + col("id_b") * 3).cast("long").as("a_chk"),
         sum(round(col(simCol) * 10000, 0).cast("long")).cast("long")
@@ -440,8 +440,8 @@ object QueryFuzz {
         case "customer" => Tables.customer(s, dir)
         case _ => Tables.supplier(s, dir)
       }
-      graft.operators.EditDistance.editDistanceJoin(
-        base.filter(col(idc) % m === r), idc, strc, k)
+      graft.operators.EditDistance.editDistanceJoinStage(
+        base.filter(col(idc) % m === r), idc, strc, k).result
         .agg(count(lit(1)).as("a_cnt"),
           sum(col("id_a") + col("id_b") * 3).cast("long").as("a_chk"),
           sum(col("dist")).cast("long").as("a_dsum"))
