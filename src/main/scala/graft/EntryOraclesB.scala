@@ -77,7 +77,7 @@ private[graft] trait EntryOraclesB { self: EntryShared =>
          |       o.n_outliers
          |FROM mad m JOIN outl o ON o.g = m.g""".stripMargin
 
-  protected def oraclesB: Map[String, String] = Map(
+  protected def oraclesB(s: SparkSession, dir: String): Map[String, String] = Map(
     // corpus band index capped like lshStage (QUALIFY); the incoming batch
     // is never self-joined and the corpus never pairs with itself
     "q86_incremental_dedup" ->
@@ -1666,46 +1666,21 @@ private[graft] trait EntryOraclesB { self: EntryShared =>
     // re-derivation of the merge table
     "q98_bpe_train" -> bpeTrainOracleSql(Q98Merges),
 
-    // q118: BPE APPLY replay — the learned merge table (published by the
-    // query run; Verify serializes oracleSql only after every query has
-    // materialized) interpolates as nMerges nested replace() calls over
-    // the boundary-wrapped character segmentation '|c1||c2|…|cn|'.
-    // replace() is left-to-right non-overlapping — exactly BpeApply's
-    // scan order — matches only align at symbol boundaries ('|' never
-    // occurs inside a symbol, asserted at interpolation time), and the
-    // DOUBLE separator between symbols keeps adjacent matches from
-    // sharing characters (a single shared '|' would make the second of
-    // two back-to-back (a,b) pairs invisible to the scan). The string
-    // fold is therefore bit-identical to the sequential array fold,
-    // which for training words — every corpus word, since q118 trains on
-    // the same corpus it encodes — is bit-identical to BpeEncode's
-    // rank-priority loop (the BpeSpec equivalence pin).
-    "q118_bpe_encode" -> (learnedBpeMerges match {
-      case None =>
-        // keyset-stable placeholder for contexts that read oracleSql
-        // without running the query (ContractSpec); Verify always
-        // overwrites it with the real replay
-        "SELECT CAST(NULL AS BIGINT) AS doc_id, 0 AS n_words, " +
-          "0 AS n_tokens, '' AS token_str WHERE false"
-      case Some(merges) =>
-        require(merges.forall { case (a, b) => !(a + b).contains("|") },
-          "oracle wrap char '|' appears in a learned symbol — switch the replay to chr(1)")
-        val folded = merges.foldLeft("regexp_replace(w, '(.)', '|\\1|', 'g')") {
-          case (acc, (a, b)) => s"replace($acc, '|$a||$b|', '|$a$b|')"
-        }
-        s"""SELECT doc_id, len(words) AS n_words,
-           |       len(flatten(pieces)) AS n_tokens,
-           |       array_to_string(flatten(pieces), ' ') AS token_str
-           |FROM (
-           |  SELECT doc_id, words,
-           |         list_transform(words,
-           |           w -> string_split(trim($folded, '|'), '||')) AS pieces
-           |  FROM (
-           |    SELECT doc_id,
-           |           list_filter(string_split(lower(text), ' '),
-           |                       w -> len(w) > 0) AS words
-           |    FROM documents))""".stripMargin
-    }),
+    // q118: BPE APPLY replay of the session's merge table (see
+    // bpePiecesSql)
+    "q118_bpe_encode" ->
+      s"""SELECT doc_id, len(words) AS n_words,
+         |       len(flatten(pieces)) AS n_tokens,
+         |       array_to_string(flatten(pieces), ' ') AS token_str
+         |FROM (
+         |  SELECT doc_id, words,
+         |         list_transform(words,
+         |           w -> ${bpePiecesSql(s, dir)}) AS pieces
+         |  FROM (
+         |    SELECT doc_id,
+         |           list_filter(string_split(lower(text), ' '),
+         |                       w -> len(w) > 0) AS words
+         |    FROM documents))""".stripMargin,
 
     // q119: the composed curation DAG replayed end to end — q104's
     // percentile (keep pctl >= 0.5), q11/q52's LSH+CC over the KEPT
@@ -1906,95 +1881,84 @@ private[graft] trait EntryOraclesB { self: EntryShared =>
            |LEFT JOIN ns ON ns.n_probe = l.n_probe AND ns.q_id = t.q_id""".stripMargin),
 
     // q129: the IVF-PQ frontier replay — codebooks interpolated from the
-    // published learned model (Verify materializes queries before
-    // serializing oracleSql), everything else recomputed in SQL
-    "q129_pq_frontier" -> ((learnedPqModel, learnedPqResModel) match {
-      case (Some(model), Some(rModel)) => pqFrontierOracleSql(model, rModel)
-      case _ =>
-        // keyset-stable placeholder (the q118 convention); Verify always
-        // overwrites it with the real replay
-        "SELECT '' AS variant, CAST(NULL AS BIGINT) AS q_id, " +
-          "CAST(0 AS BIGINT) AS n_truth, CAST(0 AS BIGINT) AS n_hit, " +
-          "0.0 AS recall, CAST(0 AS BIGINT) AS n_scored WHERE false"
-    }),
+    // session's PQ models, everything else recomputed in SQL
+    "q129_pq_frontier" -> {
+      val (model, rModel) = pqModelsShared(s, dir)
+      pqFrontierOracleSql(model, rModel)
+    },
 
-    // q138: both assignment paths replayed from the published literals —
-    // the flat argmin over all cell centroids and the two-level pick
-    // (nearest group by the same |c|²−2·dot distance, then argmin over
-    // that group's member cells), identical index-order folds and
-    // (dist, index) tie-breaks as the NearestCells/NearestCellTwoLevel
+    // q138: both assignment paths replayed from the session quantizer's
+    // literals — the flat argmin over all cell centroids and the
+    // two-level pick (nearest group by the same |c|²−2·dot distance, then
+    // argmin over that group's member cells), identical index-order folds
+    // and (dist, index) tie-breaks as the NearestCells/NearestCellTwoLevel
     // kernels
-    "q138_twolevel_assign" -> (learnedHierModel match {
-      case None =>
-        "SELECT CAST(NULL AS BIGINT) AS vec_id, 0 AS cell_two_level, " +
-          "0 AS cell_flat, 0 AS agree WHERE false"
-      case Some((cents, idx)) =>
-        val gcVals = idx.groupCents.zipWithIndex.map { case (c, gi) =>
-          s"($gi, [${c.mkString(", ")}]::DOUBLE[])"
-        }.mkString(", ")
-        val cellVals = cents.zipWithIndex.map { case (c, ci) =>
-          val gi = idx.members.indexWhere(_.contains(ci))
-          s"($ci, $gi, [${c.mkString(", ")}]::DOUBLE[])"
-        }.mkString(", ")
-        def dist(vec: String, cen: String) =
-          s"""(list_sum(list_transform($cen, x -> x*x))
-             | - 2 * list_sum(list_transform(range(1, ${EmbDim + 1}),
-             |          i -> $vec[i] * $cen[i])))""".stripMargin
-        s"""WITH v AS (
-           |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
-           |  FROM embeddings),
-           |gc AS (SELECT * FROM (VALUES $gcVals) t(gi, gv)),
-           |cl AS (SELECT * FROM (VALUES $cellVals) t(ci, gi, cv)),
-           |gpick AS (
-           |  SELECT vec_id, gi FROM (
-           |    SELECT v.vec_id, gc.gi,
-           |           row_number() OVER (PARTITION BY v.vec_id
-           |             ORDER BY ${dist("v.emb", "gc.gv")}, gc.gi) AS rn
-           |    FROM v CROSS JOIN gc) WHERE rn = 1),
-           |two AS (
-           |  SELECT vec_id, ci AS cell_two_level FROM (
-           |    SELECT g.vec_id, cl.ci,
-           |           row_number() OVER (PARTITION BY g.vec_id
-           |             ORDER BY ${dist("v.emb", "cl.cv")}, cl.ci) AS rn
-           |    FROM gpick g
-           |    JOIN cl ON cl.gi = g.gi
-           |    JOIN v ON v.vec_id = g.vec_id) WHERE rn = 1),
-           |flat AS (
-           |  SELECT vec_id, ci AS cell_flat FROM (
-           |    SELECT v.vec_id, cl.ci,
-           |           row_number() OVER (PARTITION BY v.vec_id
-           |             ORDER BY ${dist("v.emb", "cl.cv")}, cl.ci) AS rn
-           |    FROM v CROSS JOIN cl) WHERE rn = 1)
-           |SELECT two.vec_id, two.cell_two_level, flat.cell_flat,
-           |       CASE WHEN two.cell_two_level = flat.cell_flat
-           |            THEN 1 ELSE 0 END AS agree
-           |FROM two JOIN flat USING (vec_id)""".stripMargin
-    }),
+    "q138_twolevel_assign" -> {
+      val model = kmeansShared(s, dir)
+      val idx = Similarity.hierIndex(model, groups = HierGroups)
+      val gcVals = idx.groupCents.zipWithIndex.map { case (c, gi) =>
+        s"($gi, [${c.mkString(", ")}]::DOUBLE[])"
+      }.mkString(", ")
+      val cellVals = model.centroids.zipWithIndex.map { case (c, ci) =>
+        val gi = idx.members.indexWhere(_.contains(ci))
+        s"($ci, $gi, [${c.mkString(", ")}]::DOUBLE[])"
+      }.mkString(", ")
+      def dist(vec: String, cen: String) =
+        s"""(list_sum(list_transform($cen, x -> x*x))
+           | - 2 * list_sum(list_transform(range(1, ${EmbDim + 1}),
+           |          i -> $vec[i] * $cen[i])))""".stripMargin
+      s"""WITH v AS (
+         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
+         |  FROM embeddings),
+         |gc AS (SELECT * FROM (VALUES $gcVals) t(gi, gv)),
+         |cl AS (SELECT * FROM (VALUES $cellVals) t(ci, gi, cv)),
+         |gpick AS (
+         |  SELECT vec_id, gi FROM (
+         |    SELECT v.vec_id, gc.gi,
+         |           row_number() OVER (PARTITION BY v.vec_id
+         |             ORDER BY ${dist("v.emb", "gc.gv")}, gc.gi) AS rn
+         |    FROM v CROSS JOIN gc) WHERE rn = 1),
+         |two AS (
+         |  SELECT vec_id, ci AS cell_two_level FROM (
+         |    SELECT g.vec_id, cl.ci,
+         |           row_number() OVER (PARTITION BY g.vec_id
+         |             ORDER BY ${dist("v.emb", "cl.cv")}, cl.ci) AS rn
+         |    FROM gpick g
+         |    JOIN cl ON cl.gi = g.gi
+         |    JOIN v ON v.vec_id = g.vec_id) WHERE rn = 1),
+         |flat AS (
+         |  SELECT vec_id, ci AS cell_flat FROM (
+         |    SELECT v.vec_id, cl.ci,
+         |           row_number() OVER (PARTITION BY v.vec_id
+         |             ORDER BY ${dist("v.emb", "cl.cv")}, cl.ci) AS rn
+         |    FROM v CROSS JOIN cl) WHERE rn = 1)
+         |SELECT two.vec_id, two.cell_two_level, flat.cell_flat,
+         |       CASE WHEN two.cell_two_level = flat.cell_flat
+         |            THEN 1 ELSE 0 END AS agree
+         |FROM two JOIN flat USING (vec_id)""".stripMargin
+    },
 
     // q133: the PCA projection replay — components + mean-dot scalars
-    // interpolated from the published fitted basis, the dot folding in
+    // interpolated from the session's fitted basis, the dot folding in
     // index order exactly as VectorDot does
-    "q133_pca_project" -> (learnedPcaModel match {
-      case None =>
-        "SELECT CAST(NULL AS BIGINT) AS vec_id, " +
-          (1 to PcaK).map(j => s"0.0 AS p$j").mkString(", ") + " WHERE false"
-      case Some(model) =>
-        val lits = model.components.indices.map { j =>
-          s"[${model.components(j).mkString(", ")}]::DOUBLE[] AS v${j + 1}"
-        }.mkString(", ")
-        val projs = model.components.indices.map { j =>
-          s"""round(list_sum(list_transform(range(1, ${EmbDim + 1}),
-             |         i -> e.emb[i] * m.v${j + 1}[i]))
-             |       - ${model.meanDots(j)}, 4) AS p${j + 1}""".stripMargin
-        }.mkString(",\n       ")
-        s"""WITH e AS (
-           |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
-           |  FROM embeddings),
-           |m AS (SELECT $lits)
-           |SELECT e.vec_id,
-           |       $projs
-           |FROM e CROSS JOIN m""".stripMargin
-    }),
+    "q133_pca_project" -> {
+      val model = pcaShared(s, dir)
+      val lits = model.components.indices.map { j =>
+        s"[${model.components(j).mkString(", ")}]::DOUBLE[] AS v${j + 1}"
+      }.mkString(", ")
+      val projs = model.components.indices.map { j =>
+        s"""round(list_sum(list_transform(range(1, ${EmbDim + 1}),
+           |         i -> e.emb[i] * m.v${j + 1}[i]))
+           |       - ${model.meanDots(j)}, 4) AS p${j + 1}""".stripMargin
+      }.mkString(",\n       ")
+      s"""WITH e AS (
+         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
+         |  FROM embeddings),
+         |m AS (SELECT $lits)
+         |SELECT e.vec_id,
+         |       $projs
+         |FROM e CROSS JOIN m""".stripMargin
+    },
 
     // q125: the q109 rollup without the date slice — full-range equality
     // against the raw table is the losslessness proof for the compacted
@@ -2152,44 +2116,31 @@ private[graft] trait EntryOraclesB { self: EntryShared =>
 
     // q123: the q118 merge replay grouped to tokenizer economics per
     // source — integer word/piece/char sums, ratios rounded at 4
-    "q123_bpe_fertility" -> (learnedBpeMerges match {
-      case None =>
-        // keyset-stable placeholder (the q118 convention); Verify always
-        // overwrites it with the real replay
-        "SELECT '' AS source, CAST(0 AS BIGINT) AS n_docs, " +
-          "CAST(0 AS BIGINT) AS n_words, CAST(0 AS BIGINT) AS n_pieces, " +
-          "0.0 AS fertility, 0.0 AS chars_per_piece WHERE false"
-      case Some(merges) =>
-        require(merges.forall { case (a, b) => !(a + b).contains("|") },
-          "oracle wrap char '|' appears in a learned symbol — switch the replay to chr(1)")
-        val folded = merges.foldLeft("regexp_replace(w, '(.)', '|\\1|', 'g')") {
-          case (acc, (a, b)) => s"replace($acc, '|$a||$b|', '|$a$b|')"
-        }
-        s"""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           |       CAST(sum(n_words) AS BIGINT) AS n_words,
-           |       CAST(sum(n_pieces) AS BIGINT) AS n_pieces,
-           |       ${graft.functions.AggFunctions.ratioQSql(
-                      "sum(n_pieces)", "sum(n_words)", 4)}
-           |         AS fertility,
-           |       ${graft.functions.AggFunctions.ratioQSql(
-                      "sum(n_chars)", "sum(n_pieces)", 4)}
-           |         AS chars_per_piece
-           |FROM (
-           |  SELECT source, len(words) AS n_words,
-           |         len(flatten(pieces)) AS n_pieces,
-           |         coalesce(list_sum(list_transform(flatten(pieces),
-           |                                          p -> len(p))), 0) AS n_chars
-           |  FROM (
-           |    SELECT source, words,
-           |           list_transform(words,
-           |             w -> string_split(trim($folded, '|'), '||')) AS pieces
-           |    FROM (
-           |      SELECT source,
-           |             list_filter(string_split(lower(text), ' '),
-           |                         w -> len(w) > 0) AS words
-           |      FROM documents)))
-           |GROUP BY 1""".stripMargin
-    }),
+    "q123_bpe_fertility" ->
+      s"""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |       CAST(sum(n_words) AS BIGINT) AS n_words,
+         |       CAST(sum(n_pieces) AS BIGINT) AS n_pieces,
+         |       ${graft.functions.AggFunctions.ratioQSql(
+                    "sum(n_pieces)", "sum(n_words)", 4)}
+         |         AS fertility,
+         |       ${graft.functions.AggFunctions.ratioQSql(
+                    "sum(n_chars)", "sum(n_pieces)", 4)}
+         |         AS chars_per_piece
+         |FROM (
+         |  SELECT source, len(words) AS n_words,
+         |         len(flatten(pieces)) AS n_pieces,
+         |         coalesce(list_sum(list_transform(flatten(pieces),
+         |                                          p -> len(p))), 0) AS n_chars
+         |  FROM (
+         |    SELECT source, words,
+         |           list_transform(words,
+         |             w -> ${bpePiecesSql(s, dir)}) AS pieces
+         |    FROM (
+         |      SELECT source,
+         |             list_filter(string_split(lower(text), ' '),
+         |                         w -> len(w) > 0) AS words
+         |      FROM documents)))
+         |GROUP BY 1""".stripMargin,
 
     // q124: q104's quality, q17's language argmax, q10's normalized-fp
     // dup definition, rolled to one row per source; ratios all derive

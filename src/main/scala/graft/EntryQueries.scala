@@ -1260,15 +1260,13 @@ private[graft] trait EntryQueries { self: EntryShared =>
 
     // q138: the two-level (hierarchical) cell assignment hash-gated
     // against the flat argmin — the custom NearestCellTwoLevel
-    // expression end-to-end, with the hier index (driver-clustered over
-    // the centroid array) published for the oracle (the q129 learned-
-    // artifact pattern). Output carries BOTH assignments + the agree
-    // flag, so the gate pins the exact disagreement structure, not just
-    // the fast path
+    // expression end-to-end, with the hier index driver-clustered over
+    // the centroid array (the oracle rebuilds it). Output carries BOTH
+    // assignments + the agree flag, so the gate pins the exact
+    // disagreement structure, not just the fast path
     "q138_twolevel_assign" -> ((s, dir) => {
       val model = kmeansShared(s, dir)
-      val idx = Similarity.hierIndex(model, groups = 2)
-      learnedHierModel = Some((model.centroids.toIndexedSeq, idx))
+      val idx = Similarity.hierIndex(model, groups = HierGroups)
       val flat = model.cells.withColumnRenamed("cell", "cell_flat")
       Similarity.assignCellsTwoLevel(
           Tables.embeddings(s, dir), model, idx, nProbeGroups = 1)
@@ -1501,26 +1499,20 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // table instead of probe output. nProbe=4 scores every cell (kCells
     // = 4), anchoring the frontier at recall 1.
     "q120_ann_frontier" -> ((s, dir) =>
-      Similarity.annFrontierModel(Tables.embeddings(s, dir),
+      Similarity.annFrontierStage(Tables.embeddings(s, dir),
         kmeansShared(s, dir),
-        e => e.filter(col("vec_id") < 8), k = 5, probes = Seq(1, 2, 4))),
+        e => e.filter(col("vec_id") < 8), k = 5, probes = Seq(1, 2, 4)).result),
 
     // IVF-PQ frontier (VERDICT r12 #5): the compressed-layout extension
     // of q120 — float truth anchor, pure-PQ asymmetric-distance brute
     // force, and coarse-pruned IVF-PQ at nProbe 1/2, each with recall +
     // n_scored. Trains the per-subspace codebooks FRESH (the producer
-    // pricing discipline) and publishes them for the oracle replay (the
-    // q118 learned-artifact pattern); the coarse quantizer is the shared
-    // session k-means.
+    // pricing discipline) and publishes them for the oracle replay; the
+    // coarse quantizer is the shared session k-means.
     "q129_pq_frontier" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val coarse = kmeansShared(s, dir)
-      val model = Similarity.pqFit(e, dim = EmbDim)
-      val resModel = Similarity.pqFitResidual(e, coarse, dim = EmbDim)
-      learnedPqModel = Some(model)
-      learnedPqResModel = Some(resModel)
-      Similarity.pqFrontier(e, coarse, model,
-        q => q.filter(col("vec_id") < 8), kTop = 5, probes = Seq(1, 2),
+      val (model, resModel) = pqModelsPublish(s, dir)
+      Similarity.pqFrontier(Tables.embeddings(s, dir), kmeansShared(s, dir),
+        model, q => q.filter(col("vec_id") < 8), kTop = 5, probes = Seq(1, 2),
         resModel = Some(resModel))
     }),
 
@@ -1530,12 +1522,8 @@ private[graft] trait EntryQueries { self: EntryShared =>
     // the kmeansFit discipline), published for the oracle, projection =
     // one codegen'd dot against literal vectors per component — scan-
     // fused, zero shuffle
-    "q133_pca_project" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val model = Similarity.pcaFit(e, k = PcaK)
-      learnedPcaModel = Some(model)
-      Similarity.pcaProject(e, model)
-    }),
+    "q133_pca_project" -> ((s, dir) =>
+      Similarity.pcaProject(Tables.embeddings(s, dir), pcaPublish(s, dir))),
 
     // small-file compaction gated end to end: a fragmented partitioned
     // layout (16 files/partition) is compacted to one file per partition

@@ -321,28 +321,75 @@ private[graft] trait EntryShared {
       Curation.docCardStats(prior).localCheckpoint(true)
     }
 
-  // q118-trained merge table: q118 produces, q123 consumes; the
-  // fallback trains so q123 also runs standalone (the Verify map
-  // iterates in arbitrary order). Both publish the table for the
-  // oracle builder.
+  // q118-trained merge table: q118 produces; q123 and both oracles
+  // consume, training it themselves when run standalone
   private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] = {
     assertBpeOracleSafe(s, dir)
     Bpe.trainMergePairs(Tables.documents(s, dir), Q118Merges)
   }
 
-  protected def bpeMergesShared(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val m = SessionArtifacts.get[Seq[(String, String)]](s, dir, "bpeMerges")(
+  protected def bpeMergesShared(s: SparkSession, dir: String): Seq[(String, String)] =
+    SessionArtifacts.get[Seq[(String, String)]](s, dir, "bpeMerges")(
       bpeMerges(s, dir))
-    learnedBpeMerges = Some(m)
-    m
+
+  protected def bpeMergesPublish(s: SparkSession, dir: String): Seq[(String, String)] =
+    SessionArtifacts.publish[Seq[(String, String)]](s, dir, "bpeMerges")(
+      bpeMerges(s, dir))
+
+  /** The q118/q123 oracles' BPE apply under the session's merge table: a
+    * DuckDB expression mapping the word `w` to its list of pieces. The
+    * merges interpolate as nested replace() calls over the
+    * boundary-wrapped character segmentation '|c1||c2|…|cn|'. replace()
+    * is left-to-right non-overlapping — exactly BpeApply's scan order —
+    * matches only align at symbol boundaries ('|' never occurs inside a
+    * symbol, asserted here), and the DOUBLE separator between symbols
+    * keeps adjacent matches from sharing characters (a single shared '|'
+    * would make the second of two back-to-back (a,b) pairs invisible to
+    * the scan). The string fold is therefore bit-identical to the
+    * sequential array fold, which for training words — every corpus
+    * word, since q118 trains on the same corpus it encodes — is
+    * bit-identical to BpeEncode's rank-priority loop (the BpeSpec
+    * equivalence pin).
+    */
+  protected def bpePiecesSql(s: SparkSession, dir: String): String = {
+    val merges = bpeMergesShared(s, dir)
+    require(merges.forall { case (a, b) => !(a + b).contains("|") },
+      "oracle wrap char '|' appears in a learned symbol — switch the replay to chr(1)")
+    val folded = merges.foldLeft("regexp_replace(w, '(.)', '|\\1|', 'g')") {
+      case (acc, (a, b)) => s"replace($acc, '|$a||$b|', '|$a$b|')"
+    }
+    s"string_split(trim($folded, '|'), '||')"
   }
 
-  protected def bpeMergesPublish(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val m = SessionArtifacts.publish[Seq[(String, String)]](s, dir, "bpeMerges")(
-      bpeMerges(s, dir))
-    learnedBpeMerges = Some(m)
-    m
+  // Learned embedding models with a literal-interpolating oracle: q129's
+  // PQ codebooks (plain, and residual over the shared quantizer) and
+  // q133's PCA basis. The query fits fresh and publishes, so its timing
+  // keeps pricing the fit; the oracle `get`s the same key and fits on a
+  // miss. Every fit reads the vec_id-ordered training sample, so a fresh
+  // session's oracle interpolates the same literals; `Double.toString`
+  // round-trips them bit-exact through DuckDB's literal parsing.
+  private type PqModels = (Similarity.PqModel, Similarity.PqModel)
+
+  private def pqModels(s: SparkSession, dir: String): PqModels = {
+    val e = Tables.embeddings(s, dir)
+    (Similarity.pqFit(e, dim = EmbDim),
+      Similarity.pqFitResidual(e, kmeansShared(s, dir), dim = EmbDim))
   }
+
+  protected def pqModelsShared(s: SparkSession, dir: String): PqModels =
+    SessionArtifacts.get[PqModels](s, dir, "pqModels")(pqModels(s, dir))
+
+  protected def pqModelsPublish(s: SparkSession, dir: String): PqModels =
+    SessionArtifacts.publish[PqModels](s, dir, "pqModels")(pqModels(s, dir))
+
+  private def pca(s: SparkSession, dir: String): Similarity.PcaModel =
+    Similarity.pcaFit(Tables.embeddings(s, dir), k = PcaK)
+
+  protected def pcaShared(s: SparkSession, dir: String): Similarity.PcaModel =
+    SessionArtifacts.get[Similarity.PcaModel](s, dir, "pca")(pca(s, dir))
+
+  protected def pcaPublish(s: SparkSession, dir: String): Similarity.PcaModel =
+    SessionArtifacts.publish[Similarity.PcaModel](s, dir, "pca")(pca(s, dir))
 
   /** The q118/q123 oracle wraps every corpus word as `|c1||c2|…` and RE2's
     * `.` skips newlines — a corpus word containing '|', '\n', or '\r'
@@ -511,39 +558,6 @@ private[graft] trait EntryShared {
         |       lft || rgt AS merged, cnt AS pair_count
         |FROM (""".stripMargin + union + ")"
   }
-
-  /** q118's learned merge table, published by the query run for the oracle
-    * builder — [[Verify]] materializes every query BEFORE it serializes
-    * `oracleSql`, so the interpolation always sees the table the gated
-    * result was actually produced under (the q111 shipped-artifact
-    * discipline, with the artifact learned in-run instead of frozen in
-    * code because the merges are corpus-dependent).
-    */
-  @volatile private[graft] var learnedBpeMerges: Option[Seq[(String, String)]] = None
-
-  /** q129's learned PQ codebooks, published by the query run for the
-    * oracle builder — same contract as [[learnedBpeMerges]]: Verify
-    * materializes every query before serializing `oracleSql`, so the
-    * interpolated literals are exactly the model the gated frontier was
-    * scored under. `Double.toString` round-trips bit-exact through SQL
-    * literal parsing, so no rounding scaffolding is needed beyond the
-    * round-6 the ADC tables already carry.
-    */
-  @volatile private[graft] var learnedPqModel: Option[operators.Similarity.PqModel] = None
-
-  /** q129's learned RESIDUAL PQ codebooks (trained on x − c_coarse) —
-    * published alongside [[learnedPqModel]]; the oracle recomputes the
-    * residual codes, per-cell reconstructed norms, and q·c_coarse terms
-    * in SQL from these literals plus the replayed coarse centroids.
-    */
-  @volatile private[graft] var learnedPqResModel: Option[operators.Similarity.PqModel] = None
-
-  /** q138's published artifacts: the session quantizer's centroid matrix
-    * plus the driver-clustered hier index (group centroids + member
-    * lists) — all Double.toString round-trip literals for the oracle.
-    */
-  @volatile private[graft] var learnedHierModel
-      : Option[(IndexedSeq[Seq[Double]], operators.Similarity.HierIndex)] = None
 
   /** The q129 IVF-PQ frontier replay: PQ codes from the interpolated
     * codebooks (same `|c|² − 2·dot` + (dist, code) tie-break as the
@@ -788,10 +802,11 @@ private[graft] trait EntryShared {
   /** q133's component count. */
   val PcaK = 4
 
-  /** q133's fitted PCA basis, published by the query run for the oracle
-    * builder (the learnedBpeMerges contract).
+  /** q138's group count for the two-level index over the shared
+    * quantizer's cells; its oracle rebuilds the same index.
     */
-  @volatile private[graft] var learnedPcaModel: Option[operators.Similarity.PcaModel] = None
+  protected val HierGroups = 2
+
   protected val KmeansTrainN = operators.Similarity.DefaultTrainN
   protected val EmbDim = 64
 

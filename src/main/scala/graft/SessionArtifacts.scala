@@ -13,11 +13,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   *  - [[get]] builds an artifact once per key. Concurrent first callers
   *    wait for the one build and read its value. The build runs under the
   *    key's own lock, outside the map, so it may `get` another key.
-  *  - [[publish]] is the producer's call (q11, q33, q52, q118, q119 compute
-  *    fresh so their timings keep pricing the build). The new value becomes
-  *    generation N; N-1 stays live, since a consumer may still hold a lazy
-  *    plan on it (a released checkpoint cannot be recomputed), and N-2 is
-  *    freed.
+  *  - [[publish]] is the producer's call (q11, q33, q52, q118, q119, q129
+  *    and q133 compute fresh so their timings keep pricing the build). The
+  *    new value becomes generation N; N-1 stays live, since a consumer may
+  *    still hold a lazy plan on it (a released checkpoint cannot be
+  *    recomputed), and N-2 is freed.
   *  - [[release]] frees every live generation of a key and drops it.
   *    Checkpoint-backed artifacts (LogicalRDD leaves) survive the
   *    `clearCache()` Bench and Verify issue between queries, so this and

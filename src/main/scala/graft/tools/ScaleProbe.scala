@@ -57,10 +57,11 @@ object ScaleProbe {
     }
 
     val rows = millions * 1000000L
-    // materialize the input once so generation cost isn't timed
+    // materialize each input once so generation cost isn't timed; no
+    // probe below caches anything of its own, so the input stays cached
+    // until its group is done
     val events = Stages.materialized(syntheticEvents(spark, rows))
     time("solar_pipeline", rows)(Solar.pipeline(events).count())
-    spark.catalog.clearCache()
     time("exact_dedup", rows) {
       // exact dedup over the synthetic values rendered as text
       Dedup.exact(events.select(col("user_id").as("doc_id"),
@@ -74,10 +75,8 @@ object ScaleProbe {
     val docs = Stages.materialized(syntheticDocs(spark, docRows))
     time("simhash_bucketed", docRows)(
       Dedup.simhashBucketedNearDups(docs).count())
-    spark.catalog.clearCache()
     time("curation_pipeline", docRows)(
       Curation.curate(docs, "und", 0.0).count())
-    spark.catalog.clearCache()
     time("stratified_sample", docRows)(
       Curation.stratifiedSample(docs, Map("und" -> 10), 50).count())
     docs.unpersist()
@@ -85,9 +84,7 @@ object ScaleProbe {
     val embRows = rows / 10
     val embs = Stages.materialized(syntheticEmbeddings(spark, embRows))
     time("quantize_int8", embRows)(Similarity.quantizeInt8(embs).count())
-    spark.catalog.clearCache()
     time("kmeans_cells", embRows)(Similarity.kmeansCells(embs, k = 4, iters = 2).count())
-    spark.catalog.clearCache()
     embs.unpersist()
     spark.stop()
   }

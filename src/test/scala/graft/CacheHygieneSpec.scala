@@ -271,6 +271,7 @@ class CacheHygieneSpec extends SparkSpecBase {
   test("every other public *Stage builder is released by its handle") {
     import spark.implicits._
     val lineitem = graft.sources.Tables.lineitem(spark, "/root/testdata/sf0.001")
+    val embs = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val names = Seq((1L, "kitten"), (2L, "sitten"), (3L, "mitten")).toDF("id", "s")
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val nameStream = org.apache.spark.sql.execution.streaming.runtime
@@ -293,6 +294,9 @@ class CacheHygieneSpec extends SparkSpecBase {
       "importanceStage" -> (() => Curation.importanceStage(docs, "src0")),
       "profileKeysStage" -> (() =>
         graft.operators.Relational.profileKeysStage(lineitem, "l_orderkey")),
+      "annFrontierStage" -> (() =>
+        Similarity.annFrontierStage(embs, Similarity.kmeansFit(embs, k = 4, iters = 2),
+          e => e.filter(col("vec_id") < 8), k = 5, probes = Seq(1, 2))),
       "encodeStage" -> (() =>
         graft.operators.Bpe.encodeStage(docs, Seq(("t", "h"), ("th", "e")))),
       "editDistanceAgainstCorpusStreamStage" -> (() =>

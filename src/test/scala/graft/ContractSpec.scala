@@ -17,7 +17,7 @@ class ContractSpec extends SparkSpecBase {
 
   test("queries and oracleSql cover exactly the same names") {
     val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
+    val o = SparkEntry.oracleSql(spark, "/root/testdata/sf0.001").keySet
     assert((q -- o -- OracleExempt) === Set.empty,
       s"queries without an oracle: ${q -- o -- OracleExempt}")
     assert((o -- q) === Set.empty, s"oracles without a query: ${o -- q}")

@@ -390,8 +390,8 @@ class SimilaritySpec extends SparkSpecBase {
 
   test("annFrontier: recall and cost are monotone in nProbe, full probe is exact") {
     val e = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val rows = Similarity.annFrontier(e, d => d.filter(col("vec_id") < 8),
-        k = 5, kCells = 4, iters = 2, probes = Seq(1, 2, 4))
+    val rows = Similarity.annFrontierStage(e, Similarity.kmeansFit(e, k = 4, iters = 2),
+        d => d.filter(col("vec_id") < 8), k = 5, probes = Seq(1, 2, 4)).result
       .collect()
       .map(r => (r.getAs[Int]("n_probe"), r.getAs[Long]("q_id"),
         r.getAs[Double]("recall"), r.getAs[Long]("n_scored")))

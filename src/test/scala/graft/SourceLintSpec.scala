@@ -45,6 +45,25 @@ class SourceLintSpec extends AnyFunSuite {
     """(?::\s*[\w\[\], .]+?)?\s*=\s*\w+Stage\((?:[^()]|\([^()]*\))*\)""" +
     """\s*\.result\b(?!\s*[.(\[])""").r
 
+  /** A `var` declared at member indentation (two spaces: the body of a
+    * top-level trait or object), with any annotations and modifiers; a
+    * local inside a def sits deeper.
+    */
+  private val VarMember = """(?m)^  (?:@\w+\s+|\w+(?:\[\w+\])?\s+)*var\s""".r
+
+  test("the driver contract's traits and SparkEntry declare no var member") {
+    // a JVM-wide var lets one session's query run leak into another's
+    // results or oracle; shared state goes through SessionArtifacts
+    val hits = for {
+      n <- Seq("EntryShared", "EntryQueries", "EntryOraclesA", "EntryOraclesB",
+        "SparkEntry")
+      p = Paths.get(s"src/main/scala/graft/$n.scala")
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      m <- VarMember.findAllMatchIn(text)
+    } yield s"$p:${lineOf(text, m.start)}"
+    assert(hits.isEmpty, s"var members: ${hits.mkString(", ")}")
+  }
+
   test("no scaladoc in src/main/scala is followed directly by another") {
     val hits = for {
       (p, text) <- sources("src/main/scala")
